@@ -91,8 +91,9 @@ def _bfs_forest(
     rounds, metrics)."""
     from linkgraph.algos.wcc import wcc
 
+    g = graph.materialized()
     edges = (
-        graph.symmetrized_edges()
+        g.symmetrized_edges()
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -101,11 +102,11 @@ def _bfs_forest(
     )
     n_edges = edges.count()
 
-    comp = wcc(graph, engine=eng, num_partitions=P)
+    comp = wcc(g, engine=eng, num_partitions=P)
     roots = comp.state.where(F.col("id") == F.col("comp")).select("id")
 
     INF = float("inf")
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     init = (
         verts.join(roots.withColumn("_r", F.lit(1)), "id", "left")
         .select(

@@ -34,12 +34,13 @@ def cdlp(
     num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, label: long)."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = (
-        graph.symmetrized_edges()
+        g.symmetrized_edges()
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -47,7 +48,7 @@ def cdlp(
         .persist()
     )
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n_verts = verts.count()
 
     init = verts.select("id", F.col("id").alias("label")).repartition(P, "id")

@@ -39,12 +39,13 @@ def eigenvector_centrality(
     num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, centrality: double), L2-normalized."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _directed_edges(graph, P)
+    edges = _directed_edges(g, P)
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         return SuperstepResult(
@@ -113,12 +114,13 @@ def katz_centrality(
 ) -> SuperstepResult:
     """Returns state (id: long, centrality: double), L2-normalized at
     the end (per-round values are the raw Katz series)."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _directed_edges(graph, P)
+    edges = _directed_edges(g, P)
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         return SuperstepResult(

@@ -73,14 +73,15 @@ def greedy_color(
     still a valid greedy coloring (every round's mex argument is the
     same fixpoint recurrence), just along a different total order, so
     it stays deterministic and oracle-checkable given the same seed."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = _sym_simple(graph, P).persist()
+    sym = _sym_simple(g, P).persist()
     n_edges = sym.count()
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
 
     # orient each undirected pair higher-priority -> lower-priority
     # once; every round's messages flow down this DAG only
@@ -167,13 +168,14 @@ def fluid_community(
     of the adopted community, or -1 if never reached.  Fixed
     ``max_round`` synchronous rounds (fluid-community.h iter_max
     analogue); deterministic seeds = the n_communities smallest ids."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = _sym_simple(graph, P).persist()
+    sym = _sym_simple(g, P).persist()
     n_edges = sym.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
 
     seeds = verts.orderBy("id").limit(n_communities).select(
         "id", F.col("id").alias("lab")

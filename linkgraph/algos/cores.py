@@ -39,12 +39,13 @@ def kcore(
 ) -> SuperstepResult:
     """Returns state (id: long, in_core: boolean) — membership of the
     k-core (vertices with no incident edge are never in a k≥1 core)."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    all_verts = graph.deduced_vertices().persist()
-    edges0 = _und_edges(graph, P).persist()
+    all_verts = g.deduced_vertices()
+    edges0 = _und_edges(g, P).persist()
     n_edges = edges0.count()
 
     # state: surviving vertex set (id); edges induced on it each round
@@ -109,12 +110,13 @@ def kshell(
     from linkgraph.engine import SuperstepEngine
     from pyspark.sql.window import Window
 
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _und_edges(graph, P).persist()
+    edges = _und_edges(g, P).persist()
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
 
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
     init = (
@@ -206,13 +208,14 @@ def k_core_search(
 
     Returns state (id: long, in_kcore: boolean); the final metrics row
     carries kcore_size (k-core-search.h's GlobalRes)."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = _und_edges(graph, P).persist()
+    edges = _und_edges(g, P).persist()
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
 
     init = (

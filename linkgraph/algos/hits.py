@@ -40,18 +40,19 @@ def hits(
 ) -> SuperstepResult:
     """Returns state (id: long, hub: double, auth: double), both
     L2-normalized."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = (
-        graph.edges.select("src", "dst")
+        g.edges.select("src", "dst")
         .dropDuplicates(["src", "dst"])
         .repartition(P, "src")
         .persist()
     )
     n_edges = edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         return SuperstepResult(

@@ -182,12 +182,13 @@ def louvain_phase1(
     """Single-level Louvain (phase-1 local moves only) on the graph's
     weighted undirected view. Returns state (id, community) — the
     deterministic, oracle-checkable core of the full algorithm."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _weighted_sym_edges(graph, P).persist()
+    edges = _weighted_sym_edges(g, P).persist()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
     nodes = (
-        graph.deduced_vertices()
+        g.deduced_vertices()
         .join(deg, "id", "left")
         .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
     )
@@ -215,13 +216,14 @@ def louvain(
     disables the no-shrink early exit so exactly ``max_levels`` levels
     run — used by the oracle gate, whose SQL twin unrolls a fixed
     level count."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = _weighted_sym_edges(graph, P).persist()
+    edges = _weighted_sym_edges(g, P).persist()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
     nodes = (
-        graph.deduced_vertices()
+        g.deduced_vertices()
         .join(deg, "id", "left")
         .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
         .persist()

@@ -93,14 +93,15 @@ def multi_source_bfs(
     the already-reached set. Reached pairs never change, so no
     re-relaxation happens (unlike weighted SSSP).
     """
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _prep_edges(graph, P, directed, reverse).persist()
+    edges = _prep_edges(g, P, directed, reverse).persist()
     n_edges = edges.count()
 
     init = (
-        _sources_df(graph, sources)
+        _sources_df(g, sources)
         .select("s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"),
                 F.lit(True).alias("fr"))
         .repartition(P, "id")
@@ -150,14 +151,16 @@ def multi_source_sssp(
     (s, dst), and the full-outer merge keeps the smaller of old/new.
     Same scale contract as multi_source_bfs: callers bound |sources|.
     """
-    spark = graph.edges.sparkSession
+    w = weight_col or graph.weight_col
+    # the cut carries only the graph's own weight column
+    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
+    use_directed = g.directed if directed is None else directed
 
-    w = weight_col or graph.weight_col
     cols = ["src", "dst"] + ([w] if w else [])
-    base = graph.edges.select(*cols)
+    base = g.edges.select(*cols)
     if not use_directed:
         base = Graph.from_edges(base, directed=True).symmetrized_edges()
     edges = (
@@ -172,7 +175,7 @@ def multi_source_sssp(
     n_edges = edges.count()
 
     init = (
-        _sources_df(graph, sources)
+        _sources_df(g, sources)
         .select("s", F.col("s").alias("id"), F.lit(0.0).alias("dist"),
                 F.lit(True).alias("fr"))
         .repartition(P, "id")
@@ -350,14 +353,16 @@ def sssp_path(
     minimum (dist, pred) struct wins — the reference keeps whichever
     message arrived last, which is nondeterministic under MPI; a
     fixed tie-break makes the result oracle-checkable."""
-    spark = graph.edges.sparkSession
+    w = weight_col or graph.weight_col
+    # the cut carries only the graph's own weight column
+    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
+    use_directed = g.directed if directed is None else directed
 
-    w = weight_col or graph.weight_col
     cols = ["src", "dst"] + ([w] if w else [])
-    base = graph.edges.select(*cols)
+    base = g.edges.select(*cols)
     if not use_directed:
         base = Graph.from_edges(base, directed=True).symmetrized_edges()
     edges = (
@@ -371,7 +376,7 @@ def sssp_path(
     n_edges = edges.count()
 
     INF = float("inf")
-    init = graph.deduced_vertices().select(
+    init = g.deduced_vertices().select(
         "id",
         F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("dist"),
         F.when(F.col("id") == source, F.lit(source).cast("long"))
@@ -469,13 +474,14 @@ def betweenness_centrality(
 
     Returns state (id: long, betweenness: double) over all vertices.
     """
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
-    edges = _prep_edges(graph, P, use_directed, reverse=False).persist()
+    use_directed = g.directed if directed is None else directed
+    edges = _prep_edges(g, P, use_directed, reverse=False).persist()
     n_edges = edges.count()
-    src_df = _sources_df(graph, sources)
+    src_df = _sources_df(g, sources)
     k = src_df.count()
 
     # ---- forward: depth + sigma ------------------------------------
@@ -604,7 +610,7 @@ def betweenness_centrality(
         .groupBy("id")
         .agg((F.sum("delta") * F.lit(norm)).alias("betweenness"))
     )
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     state = verts.join(per_vertex, "id", "left").select(
         "id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )

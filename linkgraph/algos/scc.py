@@ -52,12 +52,13 @@ def scc(
     """Returns state (id: long, scc: long): scc = min vertex id of the
     strongly connected component (directed; an undirected graph's SCCs
     are its connected components — use wcc for that)."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     fwd = (
-        graph.edges.select("src", "dst")
+        g.edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
         .repartition(P, "src")
@@ -68,7 +69,7 @@ def scc(
              .repartition(P, "src").persist()
     rev.count()
 
-    active = graph.deduced_vertices().select("id").repartition(P, "id") \
+    active = g.deduced_vertices().select("id").repartition(P, "id") \
                   .localCheckpoint(eager=True)
     assigned_frames: list[DataFrame] = []
     total_rounds = 0

@@ -38,14 +38,16 @@ def sssp(
 
     weight_col=None means unit weights (= BFS levels as doubles).
     """
-    spark = graph.edges.sparkSession
+    w = weight_col or graph.weight_col
+    # the cut carries only the graph's own weight column
+    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
+    use_directed = g.directed if directed is None else directed
 
-    w = weight_col or graph.weight_col
     cols = ["src", "dst"] + ([w] if w else [])
-    base_edges = graph.edges.select(*cols)
+    base_edges = g.edges.select(*cols)
     if not use_directed:
         base_edges = Graph.from_edges(base_edges, directed=True).symmetrized_edges()
     edges = (
@@ -60,7 +62,7 @@ def sssp(
     )
     n_edges = edges.count()
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n_verts = verts.count()
     INF = float("inf")
     init = verts.select(

@@ -37,13 +37,14 @@ def wcc(
 ) -> SuperstepResult:
     """Returns state (id: long, comp: long) with comp = min id of the
     weakly-connected component; exact convergence."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # undirected message graph: both directions, deduped, no self-loops
     edges = (
-        graph.symmetrized_edges()
+        g.symmetrized_edges()
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -52,7 +53,7 @@ def wcc(
     )
     n_edges = edges.count()
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     # state: (id, comp, changed); init comp = id, everyone in frontier
     init = verts.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed")).repartition(P, "id")

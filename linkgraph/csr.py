@@ -226,19 +226,20 @@ def pagerank_csr(
     a ≤|hubs|-row frame that broadcasts, so the hub blocks never
     shuffle and every partition carries an even share of hub edges —
     the top_hub_split discipline wired into the hot path."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = graph.edges.select("src", "dst") if graph.directed else (
-        graph.to_undirected(dedup=True).edges.select("src", "dst")
+    edges = g.edges.select("src", "dst") if g.directed else (
+        g.to_undirected(dedup=True).edges.select("src", "dst")
     )
     adj, hub_adj, hub_ids, n_hub_blocks, src_totals = _split_adjacency(
         edges, P, hub_degree
     )
     n_edges = src_totals.agg(F.sum("t")).collect()[0][0] or 0
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     # full out-degree per source (a chunked source owns several adj
     # rows, hubs live in their own frame — sum over both)
     src_deg = src_totals.select(F.col("src").alias("id"), F.col("t").cast("long").alias("odeg"))
@@ -349,12 +350,13 @@ def wcc_csr(
     CHANGED vertices' labels into the min-combining Arrow kernel. The
     frontier filter makes every round sparse by construction — the
     join-path dense/sparse switch collapses to one plan."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = (
-        graph.symmetrized_edges()
+        g.symmetrized_edges()
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -364,7 +366,7 @@ def wcc_csr(
     )
     n_edges = src_totals.agg(F.sum("t")).collect()[0][0] or 0
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         src_totals.unpersist()
@@ -457,14 +459,16 @@ def sssp_csr(
     each superstep ships only the CHANGED vertices' distances into the
     min-plus Arrow kernel. Completes the semiring triple alongside
     pagerank_csr (sum) and wcc_csr (min)."""
-    spark = graph.edges.sparkSession
+    w = weight_col or graph.weight_col
+    # the cut carries only the graph's own weight column
+    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
+    use_directed = g.directed if directed is None else directed
 
-    w = weight_col or graph.weight_col
     cols = ["src", "dst"] + ([w] if w else [])
-    base_edges = graph.edges.select(*cols)
+    base_edges = g.edges.select(*cols)
     if not use_directed:
         base_edges = Graph.from_edges(base_edges, directed=True).symmetrized_edges()
     edges = (
@@ -480,7 +484,7 @@ def sssp_csr(
     )
     n_edges = src_totals.agg(F.sum("t")).collect()[0][0] or 0
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         src_totals.unpersist()
@@ -610,12 +614,13 @@ def cdlp_csr(
     so there is no frontier filter — the win over the join path is the
     pre-combined histogram: the shuffle carries at most one row per
     (partition, dst, label) instead of one per edge."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = (
-        graph.symmetrized_edges()
+        g.symmetrized_edges()
         .select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -625,7 +630,7 @@ def cdlp_csr(
     )
     n_edges = src_totals.agg(F.sum("t")).collect()[0][0] or 0
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0:
         src_totals.unpersist()

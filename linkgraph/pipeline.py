@@ -78,37 +78,37 @@ def _cosine_col(a, b) -> F.Column:
     return F.when(norm > 0, _dot_col(a, b) / norm)
 
 
-_EMB_META: dict[str, tuple[int, int]] = {}
+_EMB_META: dict[tuple[str, int], tuple[int, int]] = {}
 
 
 def embeddings_meta(sf_dir: str) -> tuple[int, int]:
     """(dim, n_rows) of `{sf_dir}/embeddings.parquet`, from parquet
     FOOTER metadata — zero Spark jobs. n_rows is in every footer;
     list<float> length is not, so dim comes from decoding a single
-    value of the first row group (one column chunk, driver-side).
-    Cached per path: the ANN/near-dup/IVF entry points used to run a
-    one-row LIMIT Spark job (three call sites) plus a full count per
-    call for the auto-geometry; now both are free after the first
-    call (VERDICT r4 "what's wrong" #2)."""
-    if sf_dir in _EMB_META:
-        return _EMB_META[sf_dir]
+    value of the first non-empty file's first row group (one column
+    chunk, driver-side). Cached per (path, newest mtime): the
+    ANN/near-dup/IVF entry points used to run a one-row LIMIT Spark
+    job (three call sites) plus a full count per call for the
+    auto-geometry; now both are free after the first call (VERDICT r4
+    "what's wrong" #2), and a rewritten table is read again. An empty
+    table raises ValueError: it has no vector to take the dim from."""
     import glob as _glob
     import os as _os
 
     import pyarrow.parquet as _pq
 
     path = f"{sf_dir}/embeddings.parquet"
-    if _os.path.isdir(path):
-        parts = sorted(_glob.glob(f"{path}/*.parquet"))
-        n_rows = sum(_pq.ParquetFile(p).metadata.num_rows for p in parts)
-        first = next(p for p in parts if _pq.ParquetFile(p).metadata.num_rows)
-    else:
-        n_rows = _pq.ParquetFile(path).metadata.num_rows
-        first = path
+    parts = sorted(_glob.glob(f"{path}/*.parquet")) if _os.path.isdir(path) else [path]
+    key = (path, max(_os.stat(p).st_mtime_ns for p in [path, *parts]))
+    if key in _EMB_META:
+        return _EMB_META[key]
+    rows = [_pq.ParquetFile(p).metadata.num_rows for p in parts]
+    if not any(rows):
+        raise ValueError(f"{path} holds no embeddings: cannot infer the vector dim")
+    first = parts[next(i for i, n in enumerate(rows) if n)]
     col = _pq.ParquetFile(first).read_row_group(0, columns=["embedding"]).column(0)
-    dim = len(col[0].as_py())
-    _EMB_META[sf_dir] = (dim, n_rows)
-    return _EMB_META[sf_dir]
+    _EMB_META[key] = (len(col[0].as_py()), sum(rows))
+    return _EMB_META[key]
 
 
 def _tokens_col() -> F.Column:

@@ -122,11 +122,16 @@ def test_greedy_color_random_seed_changes_order(spark):
     proper — the knob is deterministic per seed."""
     pairs = _rand_und(30, 90, seed=3)
     g = _graph(spark, pairs)
-    a = {r["id"]: r["color"] for r in greedy_color(g, priority="random", seed=1).state.collect()}
-    b = {r["id"]: r["color"] for r in greedy_color(g, priority="random", seed=1).state.collect()}
-    assert a == b  # same seed -> identical
+
+    def color(seed):
+        return {r["id"]: r["color"] for r in greedy_color(g, priority="random", seed=seed).state.collect()}
+
+    a, b = color(1), color(2)
+    assert color(1) == a  # same seed -> identical
+    assert a != b  # another seed -> another order
     for x, y in pairs:
         assert a[x] != a[y]
+        assert b[x] != b[y]
 
 
 # -- fluid community (fluid-community.h, synchronous) ------------------

@@ -275,3 +275,22 @@ def test_rolling_fingerprints_short_docs(spark, tmp_path_factory):
     assert 0 not in got                      # shorter than K: no grams
     assert got[1] == _winnow_ref("exactly8")   # 1 gram -> 1 fingerprint
     assert got[2] == _winnow_ref("ninechars")  # 2 grams < W -> min of both
+
+
+def _write_embeddings(spark, sf_dir, rows):
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int") \
+        .write.mode("overwrite").parquet(os.path.join(sf_dir, "embeddings.parquet"))
+
+
+def test_embeddings_meta_empty_corpus_raises_value_error(spark, tmp_path):
+    _write_embeddings(spark, str(tmp_path), [])
+    with pytest.raises(ValueError, match="no embeddings"):
+        pl.embeddings_meta(str(tmp_path))
+
+
+def test_embeddings_meta_rereads_a_rewritten_table(spark, tmp_path):
+    sf = str(tmp_path)
+    _write_embeddings(spark, sf, [(i, [1.0, 0.0, 0.0], 0) for i in range(3)])
+    assert pl.embeddings_meta(sf) == (3, 3)
+    _write_embeddings(spark, sf, [(i, [1.0, 0.0, 0.0, 0.0, 0.0], 0) for i in range(7)])
+    assert pl.embeddings_meta(sf) == (5, 7)
