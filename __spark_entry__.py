@@ -2606,7 +2606,11 @@ sig AS MATERIALIZED (
 )
 
 
-def oracle_sql() -> dict[str, str]:
+def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
+    """DuckDB twin of every queries() entry. `sf_dir` is the corpus
+    the twins are compared on (default: $SPARK_GRAFT_ORACLE_SF_DIR,
+    else the sf0.01 gate corpus); the embedding_ann geometry is
+    derived from its embeddings footer, as the Spark auto path does."""
     sql = {}
     sql["part_edges"] = f"WITH {PART_EDGES_SQL} SELECT src, dst, weight FROM edges"
     sql["degree_centrality"] = (
@@ -2932,11 +2936,11 @@ SELECT id AS doc_id, min(comp) AS canonical_id FROM lab GROUP BY id"""
     )
     # ANN geometry = the SHIPPED auto default, computed from the gate
     # corpus's parquet footer exactly like pl.embedding_ann does at
-    # run time (driver compares at sf0.01; tools/check_oracles.py sets
-    # SPARK_GRAFT_ORACLE_SF_DIR when it runs another sf) — so the
-    # driver gate verifies the auto-geometry path end-to-end
+    # run time (driver compares at sf0.01; tools/check_oracles.py passes
+    # the sf it runs) — so the driver gate verifies the auto-geometry
+    # path end-to-end
     gate_sf = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
-    dim, n_vec = pl.embeddings_meta(gate_sf)
+    dim, n_vec = pl.embeddings_meta(sf_dir or gate_sf)
     bits, tables = pl.ann_auto_params(n_vec)
     nq, kk = 10, 10
     plane_rows = ", ".join(

@@ -105,7 +105,6 @@ def match_pattern(
             .where(F.col("src") != F.col("dst"))
             .dropDuplicates(["src", "dst"])
         )
-    adj = adj.persist()
 
     def allowed(var: str) -> DataFrame | None:
         """Vertex ids passing var's predicate (None = unconstrained)."""
@@ -177,9 +176,7 @@ def match_pattern(
 
     if where is not None:
         cur = cur.where(where)
-    out = cur.select(*variables)
-    adj.unpersist()
-    return out
+    return cur.select(*variables)
 
 
 def match_count(

@@ -26,11 +26,21 @@ set of declarative DataFrame jobs:
                         explosion is bounded per commit and the
                         aggregation is salted-safe (groupBy on the
                         pair key gets map-side combine).
+
+Frames read more than once are stored rows, not plans: the vertex
+table of build_link_graph and the edge table and mapping of
+compact_vertex_ids are local checkpoints (linkgraph.graph._checkpoint,
+serialized MEMORY_AND_DISK, evaluated eagerly), so the ETL plan runs
+once per call however often its results are counted, checked or cut.
+Their blocks are freed by Spark's ContextCleaner once the returned
+frames are dropped; unpersist() on them frees nothing.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from linkgraph.graph import _checkpoint
 
 IMPORT_RE = r"(?m)^import\s+pkg_(\d+)\.mod_(\d+)\s*$"
 
@@ -157,16 +167,20 @@ def compact_vertex_ids(
 
     Returns (edges', mapping) where edges' has int src/dst and
     mapping is (id: original, cid: int) for joining results back.
+    The input is evaluated once and both returned frames are local
+    checkpoints, so counting or cutting edges' reads stored rows.
+    Their blocks are freed once the frames are dropped; mapping can
+    no longer be unpersisted.
     """
     spark = edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    verts = (
+    edges = _checkpoint(edges)
+    verts = _checkpoint(
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
         .distinct()
         .repartition(P, "id")
         .withColumn("pid", F.spark_partition_id())
-        .persist()
     )
     sizes = {r["pid"]: r["c"] for r in
              verts.groupBy("pid").agg(F.count("*").alias("c")).collect()}
@@ -179,15 +193,12 @@ def compact_vertex_ids(
         [(int(p), int(o)) for p, o in offsets.items()], "pid int, off long")
     w = Window.partitionBy("pid").orderBy("id")
     id_t = "int" if n < 2**31 else "long"
-    mapping = (
+    mapping = _checkpoint(
         verts.withColumn("ln", F.row_number().over(w))
         .join(F.broadcast(off_df), "pid")
         .select("id", (F.col("off") + F.col("ln") - 1).cast(id_t).alias("cid"))
-        .persist()
     )
-    mapping.count()
-    verts.unpersist()
-    out = (
+    out = _checkpoint(
         edges.join(mapping.select(F.col("id").alias("src"), F.col("cid").alias("_s")), "src")
         .join(mapping.select(F.col("id").alias("dst"), F.col("cid").alias("_d")), "dst")
         .select(
@@ -199,8 +210,8 @@ def compact_vertex_ids(
 
 
 def build_link_graph(repo_df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Full ETL: returns (vertices, edges) with both edge kinds."""
-    v = file_vertices(repo_df).persist()
-    v.count()
+    """Full ETL: returns (vertices, edges) with both edge kinds;
+    vertices is stored rows, edges a plan over them."""
+    v = _checkpoint(file_vertices(repo_df))
     e = dependency_edges(repo_df, v).unionByName(cochange_edges(repo_df, v))
     return v, e

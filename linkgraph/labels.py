@@ -122,8 +122,9 @@ class PropertyGraph:
         labels, only the named properties (plus id/src/dst), union the
         survivors. ``vertices=None`` keeps every vertex label with no
         properties (the reference's project-to-simple default);
-        same for ``edges``. The unioned frames carry a ``label``
-        discriminator column; property columns absent from one label
+        same for ``edges``. Every selected edge label's endpoint labels
+        must be selected too, else ValueError. The unioned frames carry
+        a ``label`` discriminator column; property columns absent from one label
         are null-filled (unionByName allowMissingColumns), matching
         the reference's per-label property tables where a property
         exists only on its own label."""
@@ -135,6 +136,15 @@ class PropertyGraph:
             raise KeyError(
                 f"unknown labels: vertices={sorted(unknown_v)} edges={sorted(unknown_e)}"
             )
+        # the vertex frame is explicit, so algorithms trust it: an edge
+        # whose endpoint label is not projected would lose those vertices
+        for lbl in sorted(esel):
+            rel = self._relations[lbl]
+            missing = sorted({rel.src_label, rel.dst_label} - set(vsel))
+            if missing:
+                raise ValueError(
+                    f"edge label {lbl!r} needs vertex label(s) {missing}, "
+                    f"which the projection does not select")
 
         vf = None
         for lbl in sorted(vsel):

@@ -3,13 +3,23 @@ edge derivation vs a pandas-side oracle."""
 
 from __future__ import annotations
 
+import ast
 import hashlib
+import pathlib
 import re
 
+import numpy as np
+import pandas as pd
 import pytest
 
+from linkgraph import oracle
+from linkgraph.algos.pagerank import pagerank
 from linkgraph.datagen import repo_table
-from linkgraph.etl import build_link_graph, cochange_edges, dependency_edges, file_vertices
+from linkgraph.etl import (build_link_graph, cochange_edges, compact_vertex_ids, dependency_edges,
+                           file_vertices)
+from linkgraph.graph import Graph
+
+ETL = pathlib.Path(__file__).resolve().parent.parent / "linkgraph" / "etl.py"
 
 
 @pytest.fixture(scope="module")
@@ -91,10 +101,6 @@ def test_build_link_graph_hub_skew(repos):
 
 
 def test_compact_vertex_ids(spark):
-    from pyspark.sql import functions as F
-
-    from linkgraph.etl import compact_vertex_ids
-
     B = 10**13
     rows = [(B + i * 7, B + ((i * 13 + 5) % 40) * 7) for i in range(200)]
     rows = [(a, b) for a, b in rows if a != b]
@@ -111,3 +117,52 @@ def test_compact_vertex_ids(spark):
     # deterministic: second derivation identical
     _, mp2 = compact_vertex_ids(e, num_partitions=4)
     assert {r["id"]: r["cid"] for r in mp2.collect()} == m
+
+
+def _counted(df):
+    """(df passed through a mapInPandas that counts its rows, the counter)."""
+    rows = df.sparkSession.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            rows.add(len(pdf))
+            yield pdf
+
+    return df.mapInPandas(count_rows, df.schema), rows
+
+
+def test_compact_vertex_ids_evaluates_input_once(spark):
+    """The input edge plan runs once: not again for the remap joins,
+    nor for counts of the returned edges, nor for PageRank's cut."""
+    rng = np.random.default_rng(3)
+    pairs = np.unique(rng.integers(0, 50, (200, 2)), axis=0)
+    pairs = pairs[pairs[:, 0] != pairs[:, 1]]
+    src, dst = 10**13 + pairs[:, 0] * 7, 10**13 + pairs[:, 1] * 7
+    edges, rows = _counted(spark.createDataFrame(pd.DataFrame({"src": src, "dst": dst})))
+
+    out, mp = compact_vertex_ids(edges, num_partitions=4)
+    assert out.count() == out.count() == len(src)
+    ranks = pagerank(Graph.from_edges(out), tol=0.0, max_iter=3).state.toPandas().sort_values("id")
+    assert rows.value == len(src)
+
+    m = {r["id"]: r["cid"] for r in mp.collect()}
+    ids, want = oracle.pagerank([m[a] for a in src], [m[b] for b in dst], directed=True,
+                                tol=0.0, max_iter=3)
+    assert np.array_equal(ranks["id"].to_numpy(), ids)
+    assert np.allclose(ranks["rank"].to_numpy(), want, atol=1e-6)
+
+
+def test_build_link_graph_vertex_table_is_stored(repos):
+    counted, rows = _counted(repos)
+    v, _ = build_link_graph(counted)
+    built = rows.value
+    assert v.count() == v.count() == 200
+    assert rows.value == built
+
+
+def test_etl_has_one_storage_primitive():
+    """etl.py stores frames only through linkgraph.graph._checkpoint."""
+    calls = [f"{n.lineno}: .{n.func.attr}()" for n in ast.walk(ast.parse(ETL.read_text()))
+             if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+             and n.func.attr in ("persist", "cache")]
+    assert not calls, f"persist/cache in {ETL.name}: {calls}"

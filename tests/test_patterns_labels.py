@@ -8,6 +8,7 @@ from __future__ import annotations
 import itertools
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.algos.patterns import match_count, match_pattern
@@ -174,3 +175,26 @@ def test_project_unknown_label_raises(spark):
         raise AssertionError("expected KeyError")
     except KeyError:
         pass
+
+
+def test_project_rejects_edge_label_without_its_vertex_labels(spark):
+    def ids(*keys):
+        return spark.createDataFrame([(k,) for k in keys], "id long")
+
+    def pairs(*rows):
+        return spark.createDataFrame(list(rows), "src long, dst long")
+
+    pg = (
+        PropertyGraph(directed=True)
+        .add_vertices("customer", ids(0, 3))
+        .add_vertices("order", ids(1, 4))
+        .add_vertices("part", ids(2, 5))
+        .add_edges("placed", pairs((0, 1), (3, 4)), "customer", "order")
+        .add_edges("contains", pairs((1, 2), (4, 5)), "order", "part")
+    )
+    with pytest.raises(ValueError, match=r"'contains'.*\['order', 'part'\]"):
+        pg.project(vertices={"customer": []}, edges={"contains": []})
+    with pytest.raises(ValueError, match=r"'placed'.*\['order'\]"):
+        pg.project(vertices={"customer": [], "part": []}, edges={"placed": []})
+    g = pg.project(vertices={"order": [], "part": []}, edges={"contains": []})
+    assert g.vertices.count() == 4 and g.edges.count() == 2

@@ -294,3 +294,16 @@ def test_embeddings_meta_rereads_a_rewritten_table(spark, tmp_path):
     assert pl.embeddings_meta(sf) == (3, 3)
     _write_embeddings(spark, sf, [(i, [1.0, 0.0, 0.0, 0.0, 0.0], 0) for i in range(7)])
     assert pl.embeddings_meta(sf) == (5, 7)
+
+
+def test_oracle_sql_explicit_sf_dir_wins_over_env(spark, tmp_path, monkeypatch):
+    import __spark_entry__ as ent
+
+    given, env = str(tmp_path / "given"), str(tmp_path / "env")
+    _write_embeddings(spark, given, [(i, [1.0, 0.0, 0.0], 0) for i in range(3)])
+    _write_embeddings(spark, env, [(i, [1.0, 0.0, 0.0, 0.0, 0.0], 0) for i in range(7)])
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", env)
+    from_env = ent.oracle_sql()["embedding_ann"]
+    explicit = ent.oracle_sql(given)["embedding_ann"]
+    monkeypatch.setenv("SPARK_GRAFT_ORACLE_SF_DIR", given)
+    assert explicit == ent.oracle_sql()["embedding_ann"] != from_env

@@ -31,10 +31,6 @@ def normalize(df, cols):
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    # oracle_sql() derives the ANN auto-geometry from the gate corpus's
-    # parquet footer; point it at the sf we are checking
-    os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir
-
     import __spark_entry__ as ent
     from linkgraph.session import get_spark
 
@@ -45,7 +41,9 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    qs, osql = ent.queries(), ent.oracle_sql()
+    # oracle_sql() derives the ANN auto-geometry from the gate corpus's
+    # parquet footer; point it at the sf we are checking
+    qs, osql = ent.queries(), ent.oracle_sql(sf_dir)
     failures = 0
     for name, fn in qs.items():
         if only and name not in only:
