@@ -42,16 +42,6 @@ from linkgraph.graph import Graph
 from linkgraph.joins import state_join
 
 
-def _sym_simple(graph: Graph, P: int) -> DataFrame:
-    return (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-    )
-
-
 def greedy_color(
     graph: Graph,
     engine: SuperstepEngine | None = None,
@@ -78,7 +68,7 @@ def greedy_color(
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = _sym_simple(g, P).persist()
+    sym = g.simple_undirected().repartition(P, "src").persist()
     n_edges = sym.count()
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     verts = g.deduced_vertices()
@@ -173,7 +163,7 @@ def fluid_community(
     eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = _sym_simple(g, P).persist()
+    sym = g.simple_undirected().repartition(P, "src").persist()
     n_edges = sym.count()
     verts = g.deduced_vertices()
 

@@ -1,9 +1,9 @@
 """Matching-family greedy set problems: maximal independent set,
-maximal matching, minimal dominating set.
+maximal matching, minimal dominating set, minimal vertex cover.
 
 Transcribed SEMANTICS (not code) from the reference flash apps
 analytical_engine/apps/flash/matching/{mis.h:42-83, mm.h:43-76,
-min-dominating-set.h:45-97}. All three are deterministic
+min-dominating-set.h:45-97, min-cover.h:43-116}. All are deterministic
 rounds-to-fixpoint greedy algorithms driven by id/degree priorities,
 which makes them oracle-checkable (the reference's results are
 likewise deterministic — priorities break every tie by vertex id):
@@ -24,31 +24,58 @@ likewise deterministic — priorities break every tie by vertex id):
     set and dominate themselves + neighbours; residual degrees are
     recomputed over the undominated graph.
 
-Scale design: one static symmetrized edge frame partitioned by src;
-each round is scatter-join → groupBy-agg → state join (the same
-superstep shape as every other algorithm here), active frames shrink
-monotonically and are localCheckpointed per round (plan truncation).
-Round counts are data-dependent but small in practice (local argmin/
-argmax selection decides a constant fraction of the frontier per
-round); callers gate them via the returned `rounds`.
+Scale design: every loop is a SuperstepEngine run over ONE vertex-state
+frame that carries a status column (undecided / in the set / dominated,
+a partner id, a cover flag); a round is scatter-join → groupBy-agg →
+state join over a static symmetrized edge frame partitioned by src, the
+per-round counts ride the engine's truncation action (engine.Observed),
+and the result is a projection of the final state. Round counts are
+data-dependent but small in practice (local argmin/argmax selection
+decides a constant fraction of the frontier per round); callers gate
+them via the returned `rounds`.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.engine import SuperstepEngine, SuperstepResult
+from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_counts
 from linkgraph.graph import Graph
+from linkgraph.joins import scatter_join, state_join
+
+# vertex status `st` of the mis / min_dominating_set state
+OPEN, IN_SET, DOMINATED = 0, 1, 2
 
 
-def _sym_edges(graph: Graph, P: int) -> DataFrame:
-    return (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
+def _closed(g: Graph, P: int) -> DataFrame:
+    """Closed neighbourhoods as (src, dst): the simple undirected edges
+    plus one self-loop per vertex, so one scatter reaches a vertex and
+    its neighbours and each derived frame is read once per round."""
+    loops = g.deduced_vertices().select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    closed = g.simple_undirected().unionByName(loops).repartition(P, "src").persist()
+    closed.count()
+    return closed
+
+
+def _settle(state: DataFrame, closed: DataFrame, sel: DataFrame, n: int) -> DataFrame:
+    """`state` with the `sel` ids (a one-column `id` frame of OPEN
+    vertices) moved IN_SET and their other OPEN neighbours DOMINATED."""
+    marks = (
+        scatter_join(closed, sel.select(F.col("id").alias("src")), "src", n)
+        .groupBy(F.col("dst").alias("id"))
+        .agg(F.min(F.when(F.col("src") == F.col("dst"), IN_SET).otherwise(DOMINATED)).alias("mark"))
+    )
+    return state_join(state, marks).withColumn(
+        "st",
+        F.when((F.col("st") == OPEN) & F.col("mark").isNotNull(), F.col("mark"))
+        .otherwise(F.col("st")),
+    ).drop("mark")
+
+
+def _set_counts(open_key: str):
+    """Observed OPEN / IN_SET counts; halts once no vertex is OPEN."""
+    return observed_counts(
+        (open_key,), **{open_key: F.col("st") == OPEN, "in_set": F.col("st") == IN_SET}
     )
 
 
@@ -61,71 +88,42 @@ def mis(
     """Maximal independent set (mis.h:47-82). Returns state
     (id: long, in_mis: boolean) for every vertex; greedy by
     r = deg·n + id, min-r local minima join per round."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _sym_edges(graph, P)
-    edges.count()
+    closed = _closed(g, P)
+    n = g.deduced_vertices().count()
 
-    verts = graph.deduced_vertices()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     # priority r(v) = (deg, id) compared LEXICOGRAPHICALLY: a strict
     # total order for arbitrary long ids (the reference's deg·n + id
     # arithmetic assumes ids dense in [0, n) — with sparse ids two
     # adjacent vertices can tie and neither is ever a strict local
     # minimum, stalling the greedy loop).
-    active = (
-        verts.join(deg.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.struct(F.coalesce("deg", F.lit(0)).cast("long").alias("d"),
-                               F.col("id").alias("i")).alias("r"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
+    init = (
+        closed.groupBy(F.col("src").alias("id"))
+        .agg((F.count("*") - 1).alias("d"))
+        .select("id", F.struct("d", F.col("id").alias("i")).alias("r"), F.lit(OPEN).alias("st"))
     )
-    selected_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            break
-        rounds += 1
-        # min active-neighbour priority per active vertex
-        msgs = active.select(F.col("id").alias("src"), F.col("r").alias("nr"))
+
+    def step(state: DataFrame, round_: int):
+        undecided = state.where(F.col("st") == OPEN)
+        # min priority over the undecided closed neighbourhood; r is
+        # unique, so nm == r marks a strict local minimum
         nbrmin = (
-            edges.join(msgs.hint("SHUFFLE_HASH"), "src")
-            .join(active.select(F.col("id").alias("dst")).hint("SHUFFLE_HASH"), "dst", "left_semi")
+            scatter_join(closed, undecided.select(F.col("id").alias("src"), F.col("r").alias("nr")),
+                         "src", n)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("nr").alias("nm"))
         )
-        scored = active.join(nbrmin.hint("SHUFFLE_HASH"), "id", "left")
-        sel = scored.where(F.col("nm").isNull() | (F.col("r") < F.col("nm"))) \
-                    .select("id").localCheckpoint(eager=True)
-        n_sel = sel.count()
-        selected_frames.append(sel)
-        dominated = (
-            edges.join(sel.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                       "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-        )
-        active = (
-            active.join(sel.hint("SHUFFLE_HASH"), "id", "left_anti")
-            .join(dominated.hint("SHUFFLE_HASH"), "id", "left_anti")
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        metrics.append({"round": rounds, "active": int(n_active), "selected": int(n_sel)})
+        sel = state_join(undecided, nbrmin, how="inner") \
+            .where(F.col("nm") == F.col("r")).select("id")
+        return _settle(state, closed, sel, n), _set_counts("undecided")
 
-    converged = active.isEmpty()
-    in_set = selected_frames[0] if selected_frames else verts.limit(0).select("id")
-    for f in selected_frames[1:]:
-        in_set = in_set.unionByName(f)
-    state = (
-        verts.join(in_set.withColumn("_s", F.lit(True)).hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("_s", F.lit(False)).alias("in_mis"))
-    )
-    edges.unpersist()
-    return SuperstepResult(state=state, rounds=rounds, converged=converged,
-                           metrics=metrics)
+    result = eng.run(init, step, max_rounds=max_rounds)
+    result.state = result.state.select("id", (F.col("st") == IN_SET).alias("in_mis"))
+    closed.unpersist()
+    return result
 
 
 def maximal_matching(
@@ -137,64 +135,44 @@ def maximal_matching(
     """Maximal matching (mm.h:48-75). Returns state (id: long,
     match: long) — partner id, or -1 unmatched. Mutual-max-id pairs
     match each round."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _sym_edges(graph, P)
+    edges = g.simple_undirected().repartition(P, "src").persist()
     edges.count()
+    verts = g.deduced_vertices()
+    n = verts.count()
 
-    verts = graph.deduced_vertices()
-    active = verts.select("id").repartition(P, "id").localCheckpoint(eager=True)
-    matched_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            break
-        rounds += 1
-        # p(v) = max unmatched neighbour id, over unmatched-unmatched edges
-        ae = (
-            edges.join(active.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                       "src", "left_semi")
-            .join(active.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
-        )
-        p = ae.groupBy(F.col("dst").alias("id")).agg(F.max("src").alias("p"))
-        # mutual pointers: edge (u,v) with p(u)=v and p(v)=u, u<v
-        pu = p.select(F.col("id").alias("src"), F.col("p").alias("psrc"))
-        pv = p.select(F.col("id").alias("dst"), F.col("p").alias("pdst"))
-        pairs = (
-            ae.where(F.col("src") < F.col("dst"))
-            .join(pu.hint("SHUFFLE_HASH"), "src")
-            .join(pv.hint("SHUFFLE_HASH"), "dst")
-            .where((F.col("psrc") == F.col("dst")) & (F.col("pdst") == F.col("src")))
-            .select("src", "dst")
-            .localCheckpoint(eager=True)
-        )
-        n_pairs = pairs.count()
-        if n_pairs == 0:
-            break
-        matched_frames.append(pairs)
-        newly = pairs.select(F.col("src").alias("id")) \
-                     .unionByName(pairs.select(F.col("dst").alias("id")))
-        active = active.join(newly.hint("SHUFFLE_HASH"), "id", "left_anti") \
-                       .repartition(P, "id").localCheckpoint(eager=True)
-        metrics.append({"round": rounds, "active": int(n_active), "pairs": int(n_pairs)})
+    # `new` marks the vertices matched in the round that wrote the state
+    init = verts.select("id", F.lit(-1).cast("long").alias("match"),
+                        F.lit(False).alias("new")).repartition(P, "id")
 
-    if matched_frames:
-        mm = matched_frames[0]
-        for f in matched_frames[1:]:
-            mm = mm.unionByName(f)
-        both = mm.select(F.col("src").alias("id"), F.col("dst").alias("match")) \
-                 .unionByName(mm.select(F.col("dst").alias("id"), F.col("src").alias("match")))
-    else:
-        both = verts.limit(0).select("id", F.col("id").alias("match"))
-    state = (
-        verts.join(both.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("match", F.lit(-1)).cast("long").alias("match"))
-    )
+    def step(state: DataFrame, round_: int):
+        # p(v) = max unmatched neighbour id; only unmatched vertices
+        # send, so both ends of a mutual pair p(u)=v, p(v)=u are unmatched
+        free = state.where(F.col("match") < 0).select(F.col("id").alias("src"))
+        p = scatter_join(edges, free, "src", n) \
+            .groupBy(F.col("dst").alias("id")).agg(F.max("src").alias("p"))
+        mates = (
+            p.join(p.select(F.col("id").alias("p"), F.col("p").alias("back")), "p")
+            .where(F.col("back") == F.col("id"))
+            .select("id", F.col("p").alias("mate"))
+        )
+        new_state = state_join(state, mates).select(
+            "id", F.coalesce("mate", "match").alias("match"),
+            F.col("mate").isNotNull().alias("new"),
+        )
+        return new_state, observed_counts(
+            ("pairs", "unmatched"),
+            pairs=F.col("new") & (F.col("id") < F.col("match")),
+            unmatched=F.col("match") < 0,
+        )
+
+    result = eng.run(init, step, max_rounds=max_rounds)
+    result.state = result.state.select("id", "match")
     edges.unpersist()
-    return SuperstepResult(state=state, rounds=rounds, converged=True, metrics=metrics)
+    return result
 
 
 def min_dominating_set(
@@ -209,97 +187,40 @@ def min_dominating_set(
     degree, id) over the closed undominated neighbourhood twice (the
     reference's double `local` = 2-hop argmax); self-argmax vertices
     join and dominate their neighbourhood."""
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    eng = engine or SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _sym_edges(graph, P)
-    edges.count()
+    closed = _closed(g, P)
+    verts = g.deduced_vertices()
+    n = verts.count()
+    init = verts.select("id", F.lit(OPEN).alias("st")).repartition(P, "id")
 
-    verts = graph.deduced_vertices()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    # active = undominated; carries residual degree cnt
-    active = (
-        verts.join(deg.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("deg", F.lit(0)).cast("long").alias("cnt"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    selected_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
+    def step(state: DataFrame, round_: int):
+        active = state.where(F.col("st") == OPEN).select("id")
 
-    def hop_max(state: DataFrame) -> DataFrame:
-        """max of struct(cnt, mid) over the closed active 1-hop
-        neighbourhood (state: id, cnt, mid)."""
-        msgs = state.select(
-            F.col("id").alias("src"), F.struct("cnt", "mid").alias("m")
-        )
-        nbr = (
-            edges.join(msgs.hint("SHUFFLE_HASH"), "src")
-            .join(state.select(F.col("id").alias("dst")).hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.max("m").alias("nm"))
-        )
-        return (
-            state.join(nbr.hint("SHUFFLE_HASH"), "id", "left")
-            .select(
-                "id", "cnt",
-                F.when(
-                    F.col("nm").isNotNull()
-                    & (F.col("nm") > F.struct("cnt", "mid")),
-                    F.col("nm"),
-                ).otherwise(F.struct("cnt", "mid")).alias("mx"),
-            )
-            .select("id", "cnt", F.col("mx.cnt").alias("mcnt"), F.col("mx.mid").alias("mid"))
-        )
+        def gather(msgs: DataFrame, agg) -> DataFrame:
+            """(id, m): `agg` of the messages (src, m) over each active
+            vertex's closed active neighbourhood."""
+            got = scatter_join(closed, msgs, "src", n) \
+                .groupBy(F.col("dst").alias("id")).agg(agg.alias("m"))
+            return state_join(active, got, how="inner")
 
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            break
-        rounds += 1
-        # two hop_max applications = the reference's double `local`
+        # residual degree = undominated neighbours of an undominated vertex
+        cnt = gather(active.select(F.col("id").alias("src"), F.lit(1).alias("m")), F.count("*") - 1)
+        own = cnt.select(F.col("id").alias("src"),
+                         F.struct(F.col("m").alias("cnt"), F.col("id").alias("mid")).alias("m"))
+        # two hop-max applications = the reference's double `local`
         # (a 2-hop argmax of (residual degree, id))
-        m1 = hop_max(active.select("id", "cnt", F.col("id").alias("mid")))
-        s2 = hop_max(m1.select("id", F.col("mcnt").alias("cnt"), "mid"))
-        sel = s2.where(F.col("mid") == F.col("id")).select("id").localCheckpoint(eager=True)
-        n_sel = sel.count()
-        selected_frames.append(sel)
-        dominated = (
-            edges.join(sel.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                       "src", "left_semi")
-            .select(F.col("dst").alias("id"))
-            .unionByName(sel)
-            .dropDuplicates(["id"])
-        )
-        remaining = active.join(dominated.hint("SHUFFLE_HASH"), "id", "left_anti") \
-                          .select("id")
-        # residual degree over the undominated graph
-        rdeg = (
-            edges.join(remaining.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                       "src", "left_semi")
-            .join(remaining.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.count("*").alias("deg"))
-        )
-        active = (
-            remaining.join(rdeg.hint("SHUFFLE_HASH"), "id", "left")
-            .select("id", F.coalesce("deg", F.lit(0)).cast("long").alias("cnt"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        metrics.append({"round": rounds, "active": int(n_active), "selected": int(n_sel)})
+        hop1 = gather(own, F.max("m"))
+        top = gather(hop1.select(F.col("id").alias("src"), "m"), F.max("m"))
+        sel = top.where(F.col("m.mid") == F.col("id")).select("id")
+        return _settle(state, closed, sel, n), _set_counts("undominated")
 
-    in_set = selected_frames[0] if selected_frames else verts.limit(0).select("id")
-    for f in selected_frames[1:]:
-        in_set = in_set.unionByName(f)
-    state = (
-        verts.join(in_set.withColumn("_s", F.lit(True)).hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("_s", F.lit(False)).alias("in_mds"))
-    )
-    edges.unpersist()
-    return SuperstepResult(state=state, rounds=rounds, converged=True, metrics=metrics)
+    result = eng.run(init, step, max_rounds=max_rounds)
+    result.state = result.state.select("id", (F.col("st") == IN_SET).alias("in_mds"))
+    closed.unpersist()
+    return result
 
 
 def min_vertex_cover(
@@ -319,99 +240,65 @@ def min_vertex_cover(
     neighbourhood is fully covered is redundant; each round drops the
     redundant vertices that have no higher-id redundant neighbour
     (so two adjacent redundant vertices are never dropped together),
-    until none remain."""
-    spark = graph.edges.sparkSession
+    until a round drops none. The two phases are two engine runs
+    sharing one `max_rounds` budget and one round numbering."""
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    eng = SuperstepEngine(spark)
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _sym_edges(graph, P)
+    edges = g.simple_undirected().repartition(P, "src").persist()
     edges.count()
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     n = verts.count()
 
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    # active = not-in-cover with residual degree > 0; d = residual deg
-    active = (
-        verts.join(deg.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
-        .where(F.col("d") > 0)
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    cover_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
-    nowd = n // 2
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            break
-        rounds += 1
-        sel = active.where(F.col("d") >= nowd).select("id").localCheckpoint(eager=True)
-        n_sel = sel.count()
-        cover_frames.append(sel)
+    # d = residual degree; active = not in the cover with d > 0
+    init = state_join(verts, deg).select(
+        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"), F.lit(False).alias("c")
+    ).repartition(P, "id")
+    active = ~F.col("c") & (F.col("d") > 0)
+
+    def admit(state: DataFrame, round_: int):
+        nowd = (n // 2) >> round_
+        sel = active & (F.col("d") >= nowd)
         # charge the admitted vertices' edges off neighbours' residual degree
-        dec = (
-            edges.join(sel.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                       "dst", "left_semi")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").alias("dec"))
-        )
-        active = (
-            active.join(sel.hint("SHUFFLE_HASH"), "id", "left_anti")
-            .join(dec.hint("SHUFFLE_HASH"), "id", "left")
-            .select("id", (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"))
-            .where(F.col("d") > 0)
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        metrics.append({"round": rounds, "phase": 1, "active": int(n_active),
-                        "selected": int(n_sel), "nowd": int(nowd)})
-        nowd //= 2
+        dec = scatter_join(edges, state.where(sel).select(F.col("id").alias("src")), "src", n) \
+            .groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("dec"))
+        new_state = state_join(state, dec).select(
+            "id", (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"),
+            (F.col("c") | sel).alias("c"))
+        return new_state, observed_counts(("active",), {"phase": 1, "nowd": nowd},
+                                          active=active, cover=F.col("c"))
 
-    cover = cover_frames[0] if cover_frames else verts.limit(0).select("id")
-    for f in cover_frames[1:]:
-        cover = cover.unionByName(f)
-    cover = cover.repartition(P, "id").localCheckpoint(eager=True)
-
-    # phase 2: drop redundant cover vertices (all-covered neighbourhood),
-    # highest-id-first within the redundant-induced graph
-    while rounds < max_rounds:
-        # B = cover vertices with no uncovered neighbour
-        has_uncov = (
-            edges.join(cover.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                       "dst", "left_anti")
-            .select(F.col("src").alias("id"))
-            .dropDuplicates(["id"])
-        )
-        bset = cover.join(has_uncov.hint("SHUFFLE_HASH"), "id", "left_anti") \
-                    .localCheckpoint(eager=True)
-        if bset.isEmpty():
-            break
-        rounds += 1
-        # drop b in B with no B-neighbour of higher id
+    def refine(state: DataFrame, round_: int):
+        # redundant = cover vertices with no uncovered neighbour
+        uncov = state.where(~F.col("c")).select(F.col("id").alias("src"))
+        has_uncov = scatter_join(edges, uncov, "src", n).select(F.col("dst").alias("id")).distinct()
+        redundant = state_join(state.where(F.col("c")).select("id"), has_uncov, how="left_anti")
+        # drop the redundant vertices with no higher-id redundant neighbour
         higher = (
-            edges.join(bset.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                       "src", "left_semi")
-            .join(bset.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
+            scatter_join(edges, redundant.select(F.col("id").alias("src")), "src", n)
             .where(F.col("src") > F.col("dst"))
             .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
+            .distinct()
         )
-        drop = bset.join(higher.hint("SHUFFLE_HASH"), "id", "left_anti") \
-                   .localCheckpoint(eager=True)
-        n_drop = drop.count()
-        if n_drop == 0:
-            break
-        cover = cover.join(drop.hint("SHUFFLE_HASH"), "id", "left_anti") \
-                     .repartition(P, "id").localCheckpoint(eager=True)
-        metrics.append({"round": rounds, "phase": 2, "dropped": int(n_drop)})
+        drop = state_join(redundant, higher, how="left_anti").withColumn("dropped", F.lit(True))
+        new_state = state_join(state.select("id", "c"), drop).select(
+            "id", (F.col("c") & F.col("dropped").isNull()).alias("c"),
+            F.col("dropped").isNotNull().alias("dropped"))
+        return new_state, observed_counts(("dropped",), {"phase": 2},
+                                          dropped=F.col("dropped"), cover=F.col("c"))
 
-    state = (
-        verts.join(cover.withColumn("_c", F.lit(True)).hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("_c", F.lit(False)).alias("in_cover"))
-    )
+    admitted = eng.run(init, admit, max_rounds=max_rounds)
+    refined = eng.run(admitted.state.select("id", "c"), refine, max_rounds=max_rounds,
+                      start_round=admitted.rounds)
     edges.unpersist()
-    return SuperstepResult(state=state, rounds=rounds, converged=True, metrics=metrics)
+    return SuperstepResult(
+        state=refined.state.select("id", F.col("c").alias("in_cover")),
+        rounds=admitted.rounds + refined.rounds,
+        converged=admitted.converged and refined.converged,
+        metrics=admitted.metrics + refined.metrics,
+    )
 
 
 def min_edge_cover_size(graph: Graph, matching: SuperstepResult | None = None) -> int:
@@ -421,12 +308,6 @@ def min_edge_cover_size(graph: Graph, matching: SuperstepResult | None = None) -
     |M| + (n_nonisolated − 2|M|) = n_nonisolated − |M|, exactly the
     reference's VSize(matched)/2 + VSize(unmatched ∧ deg>0) count."""
     mm = matching if matching is not None else maximal_matching(graph)
-    sym = (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    noniso = sym.select(F.col("src").alias("id")).dropDuplicates(["id"]).count()
+    noniso = graph.simple_undirected().select("src").distinct().count()
     n_matched = mm.state.where(F.col("match") >= 0).count()
     return noniso - n_matched // 2

@@ -60,6 +60,7 @@ def msf(
     forest_frames: list[DataFrame] = []
     rounds = 0
     metrics: list[dict] = []
+    converged = False  # set once no cross-component edge is left
 
     while rounds < max_rounds:
         rounds += 1
@@ -82,6 +83,7 @@ def msf(
         )
         if best.limit(1).count() == 0:
             rounds -= 1
+            converged = True
             break
         picked = best.select(F.col("e.w").alias("w"), F.col("e.src").alias("src"),
                              F.col("e.dst").alias("dst")) \
@@ -131,5 +133,5 @@ def msf(
     edges.unpersist()
     return SuperstepResult(
         state=forest.select("src", "dst", F.col("w").alias("weight")),
-        rounds=rounds, converged=True, metrics=metrics,
+        rounds=rounds, converged=converged, metrics=metrics,
     )

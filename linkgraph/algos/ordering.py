@@ -18,30 +18,50 @@ onion-layer-ordering.h:44-110}:
     are permanent, lower-core ones were never counted) — the
     per-shell peel depth, i.e. the onion decomposition.
 
-Both are wave-synchronous peels: each round is one degree-filter +
-one scatter-join + one groupBy decrement over a monotonically
-shrinking active frame — the same superstep shape as kcore, keyed
-joins only, so the plan is identical at 100 TB with the active frame
-hash-partitioned by id.
+Both are wave-synchronous peels run by the SuperstepEngine over one
+vertex-state frame whose stamp column (rank / layer) is -1 until the
+vertex is peeled and then the engine round: each round is one
+degree-filter + one scatter-join + one groupBy decrement + one state
+join — the same superstep shape as kcore, keyed joins only, so the
+plan is identical at 100 TB with the state hash-partitioned by id. The
+per-round counts ride the engine's truncation action; a wave that
+removes nothing halts the run with converged=False.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.engine import SuperstepResult
+from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_counts
 from linkgraph.graph import Graph
+from linkgraph.joins import scatter_join, state_join
 
 
-def _und_edges(graph: Graph, P: int) -> DataFrame:
-    return (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+def _waves(edges: DataFrame, limit: F.Column, stamp: str, n: int):
+    """The peel step_fn: every unstamped vertex with d <= `limit` takes
+    stamp = round and decrements d of its neighbours along `edges`."""
+
+    def step(state: DataFrame, round_: int):
+        peel = (F.col(stamp) < 0) & (F.col("d") <= limit)
+        dec = scatter_join(edges, state.where(peel).select(F.col("id").alias("src")), "src", n) \
+            .groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("dec"))
+        new_state = state_join(state, dec).select(
+            *[c for c in state.columns if c not in ("d", stamp)],
+            (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"),
+            F.when(peel, F.lit(round_)).otherwise(F.col(stamp)).alias(stamp),
+        )
+        return new_state, observed_counts(
+            ("removed", "active"), removed=F.col(stamp) == round_, active=F.col(stamp) < 0)
+
+    return step
+
+
+def _peeled(result: SuperstepResult, stamp: str) -> SuperstepResult:
+    # converged=False ⇔ some vertex carries stamp -1 (max_rounds hit, or
+    # a stale caller-supplied shell made a wave remove nothing)
+    result.converged = result.converged and result.last["active"] == 0
+    result.state = result.state.select("id", stamp)
+    return result
 
 
 def degeneracy_ordering(
@@ -56,65 +76,27 @@ def degeneracy_ordering(
     removed (rank 0 = lowest-degree periphery)."""
     from linkgraph.algos.cores import kshell
 
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _und_edges(graph, P)
+    edges = g.simple_undirected().repartition(P, "src").persist()
     edges.count()
-    verts = graph.deduced_vertices()
 
-    sh = shell if shell is not None else kshell(graph).state
+    sh = shell if shell is not None else kshell(g).state
     dg = sh.agg(F.max("shell").alias("m")).collect()[0]["m"] or 0
 
+    verts = g.deduced_vertices()
+    n = verts.count()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    active = (
-        verts.join(deg.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
-        .repartition(P, "id")
-        .localCheckpoint(eager=True)
-    )
-    ranked_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
-    drained = False
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            drained = True
-            break
-        rem = active.where(F.col("d") <= dg).select("id").localCheckpoint(eager=True)
-        n_rem = rem.count()
-        ranked_frames.append(rem.withColumn("rank", F.lit(rounds).cast("long")))
-        remaining = active.join(rem.hint("SHUFFLE_HASH"), "id", "left_anti")
-        dec = (
-            edges.join(rem.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                       "dst", "left_semi")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").alias("dec"))
-        )
-        active = (
-            remaining.join(dec.hint("SHUFFLE_HASH"), "id", "left")
-            .select("id", (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        metrics.append({"round": rounds, "active": int(n_active), "removed": int(n_rem)})
-        rounds += 1
-        if n_rem == 0:
-            # cannot happen on a finite graph with dg = degeneracy;
-            # guard against a caller-supplied stale shell frame
-            break
-
-    out = ranked_frames[0] if ranked_frames else verts.limit(0).select(
-        "id", F.lit(0).cast("long").alias("rank"))
-    for f in ranked_frames[1:]:
-        out = out.unionByName(f)
-    state = verts.join(out.hint("SHUFFLE_HASH"), "id", "left").select(
-        "id", F.coalesce("rank", F.lit(-1)).cast("long").alias("rank")
-    )
+    init = state_join(verts, deg).select(
+        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
+        F.lit(-1).cast("long").alias("rank"),
+    ).repartition(P, "id")
+    eng = SuperstepEngine(spark)
+    result = _peeled(eng.run(init, _waves(edges, F.lit(dg), "rank", n), max_rounds=max_rounds),
+                     "rank")
     edges.unpersist()
-    # converged=False ⇔ some vertex carries rank -1 (max_rounds hit, or a
-    # stale caller-supplied shell made a wave remove nothing)
-    return SuperstepResult(state=state, rounds=rounds, converged=drained, metrics=metrics)
+    return result
 
 
 def onion_layers(
@@ -127,78 +109,40 @@ def onion_layers(
     Returns state (id: long, layer: long)."""
     from linkgraph.algos.cores import kshell
 
-    spark = graph.edges.sparkSession
+    g = graph.materialized()
+    spark = g.edges.sparkSession
     P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _und_edges(graph, P)
-    edges.count()
-    verts = graph.deduced_vertices()
 
-    sh = (shell if shell is not None else kshell(graph).state).select(
+    sh = (shell if shell is not None else kshell(g).state).select(
         "id", F.col("shell").cast("long").alias("core"))
     # edge frame annotated with both endpoint cores, persisted once
     ec = (
-        edges.join(sh.select(F.col("id").alias("src"), F.col("core").alias("cs")), "src")
+        g.simple_undirected()
+        .join(sh.select(F.col("id").alias("src"), F.col("core").alias("cs")), "src")
         .join(sh.select(F.col("id").alias("dst"), F.col("core").alias("cd")), "dst")
         .repartition(P, "src")
         .persist()
     )
     ec.count()
-    # d(v) = #neighbours with core >= core(v)
+    # d(v) = #neighbours with core >= core(v); a peeled vertex decrements
+    # d only along same-core edges
     d0 = (
         ec.where(F.col("cd") >= F.col("cs"))
         .groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("d"))
     )
-    active = (
-        verts.join(sh, "id")
+    verts = g.deduced_vertices()
+    n = verts.count()
+    init = (
+        verts.join(sh, "id", "left")
         .join(d0.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", "core", F.coalesce("d", F.lit(0)).cast("long").alias("d"))
+        .select("id", "core", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
+                F.lit(-1).cast("long").alias("layer"))
         .repartition(P, "id")
-        .localCheckpoint(eager=True)
     )
-    layer_frames: list[DataFrame] = []
-    rounds = 0
-    metrics: list[dict] = []
-    drained = False
-    while rounds < max_rounds:
-        n_active = active.count()
-        if n_active == 0:
-            drained = True
-            break
-        rem = active.where(F.col("d") <= F.col("core")).select("id") \
-                    .localCheckpoint(eager=True)
-        n_rem = rem.count()
-        if n_rem == 0:
-            break
-        layer_frames.append(rem.withColumn("layer", F.lit(rounds).cast("long")))
-        remaining = active.join(rem.hint("SHUFFLE_HASH"), "id", "left_anti")
-        # decrement only along same-core edges from removed vertices
-        dec = (
-            ec.where(F.col("cs") == F.col("cd"))
-            .join(rem.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count("*").alias("dec"))
-        )
-        active = (
-            remaining.join(dec.hint("SHUFFLE_HASH"), "id", "left")
-            .select("id", "core",
-                    (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
-        )
-        metrics.append({"round": rounds, "active": int(n_active), "removed": int(n_rem)})
-        rounds += 1
-
-    out = layer_frames[0] if layer_frames else verts.limit(0).select(
-        "id", F.lit(0).cast("long").alias("layer"))
-    for f in layer_frames[1:]:
-        out = out.unionByName(f)
-    state = verts.join(out.hint("SHUFFLE_HASH"), "id", "left").select(
-        "id", F.coalesce("layer", F.lit(-1)).cast("long").alias("layer")
-    )
+    eng = SuperstepEngine(spark)
+    same_core = ec.where(F.col("cs") == F.col("cd"))
+    result = _peeled(eng.run(init, _waves(same_core, F.col("core"), "layer", n),
+                             max_rounds=max_rounds), "layer")
     ec.unpersist()
-    edges.unpersist()
-    # converged=False ⇔ some vertex carries layer -1 (max_rounds hit, or an
-    # inconsistent shell input made a wave remove nothing)
-    return SuperstepResult(state=state, rounds=rounds, converged=drained, metrics=metrics)
+    return result

@@ -56,26 +56,36 @@ class Observed:
     to_metrics: Callable[[dict[str, Any]], dict[str, Any]]
 
 
+def observed_counts(
+    halt_on: tuple[str, ...],
+    extra: dict[str, Any] | None = None,
+    **conds: Any,
+) -> Observed:
+    """Row counts of boolean state conditions (metric name = keyword,
+    value = Column) as an :class:`Observed`, so the counts ride the
+    truncation action instead of a second scan; votes to halt when any
+    count named in ``halt_on`` is zero. ``extra`` scalars are added to
+    every metrics row."""
+
+    def to_metrics(agg: dict[str, Any]) -> dict[str, Any]:
+        m = {k: int(agg[k] or 0) for k in conds}
+        return {"halt": any(m[k] == 0 for k in halt_on), **m, **(extra or {})}
+
+    return Observed(
+        exprs=[F.sum(c.cast("long")).alias(k) for k, c in conds.items()], to_metrics=to_metrics
+    )
+
+
 def observed_count(
     col: str,
     n_edges: int,
     key: str = "frontier",
     extra: dict[str, Any] | None = None,
 ) -> Observed:
-    """The common vote-to-halt finalize — count a boolean state column
-    (frontier/changed), halt when zero — as an :class:`Observed`, so
-    the count rides the truncation action instead of a second scan."""
-
-    def to_metrics(agg: dict[str, Any]) -> dict[str, Any]:
-        c = int(agg["c"] or 0)
-        m = {"halt": c == 0, key: c, "edges_processed": n_edges}
-        if extra:
-            m.update(extra)
-        return m
-
-    return Observed(
-        exprs=[F.sum(F.col(col).cast("long")).alias("c")], to_metrics=to_metrics
-    )
+    """The common vote-to-halt finalize: count a boolean state column
+    (frontier/changed) under ``key``, halt when zero."""
+    return observed_counts((key,), {"edges_processed": n_edges, **(extra or {})},
+                           **{key: F.col(col)})
 
 
 @dataclass

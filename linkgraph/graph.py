@@ -144,6 +144,18 @@ class Graph:
         )
         return e.unionByName(rev)
 
+    def simple_undirected(self) -> DataFrame:
+        """The simple undirected view as (src, dst): both directions,
+        self-loops dropped, parallel edges collapsed. A plan, not
+        stored: callers partition and persist it as their supersteps
+        need."""
+        return (
+            self.symmetrized_edges()
+            .select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .dropDuplicates(["src", "dst"])
+        )
+
     def adjacency_edges(self) -> DataFrame:
         """Edges as traversed by undirected algorithms: for a directed
         graph, both directions; for an (already symmetric) undirected

@@ -90,14 +90,24 @@ def embeddings_meta(sf_dir: str) -> tuple[int, int]:
     ANN/near-dup/IVF entry points used to run a one-row LIMIT Spark
     job (three call sites) plus a full count per call for the
     auto-geometry; now both are free after the first call (VERDICT r4
-    "what's wrong" #2), and a rewritten table is read again. An empty
-    table raises ValueError: it has no vector to take the dim from."""
+    "what's wrong" #2), and a rewritten table is read again. A URI
+    (file://, s3a://, ...) is not on the local filesystem: the active
+    Spark session probes one row for the dim and counts the rows. An
+    empty table raises ValueError: it has no vector to take the dim
+    from."""
     import glob as _glob
     import os as _os
+    from urllib.parse import urlparse
 
     import pyarrow.parquet as _pq
 
     path = f"{sf_dir}/embeddings.parquet"
+    if urlparse(path).scheme:
+        emb = SparkSession.active().read.parquet(path)
+        first = emb.select(F.size("embedding").alias("dim")).first()
+        if first is None:
+            raise ValueError(f"{path} holds no embeddings: cannot infer the vector dim")
+        return int(first["dim"]), emb.count()
     parts = sorted(_glob.glob(f"{path}/*.parquet")) if _os.path.isdir(path) else [path]
     key = (path, max(_os.stat(p).st_mtime_ns for p in [path, *parts]))
     if key in _EMB_META:

@@ -296,6 +296,15 @@ def test_embeddings_meta_rereads_a_rewritten_table(spark, tmp_path):
     assert pl.embeddings_meta(sf) == (5, 7)
 
 
+def test_embeddings_meta_reads_a_uri_through_spark(spark, tmp_path):
+    sf = tmp_path / "sf"
+    _write_embeddings(spark, str(sf), [(i, [1.0, 0.0, 0.0, 0.0], 0) for i in range(6)])
+    assert pl.embeddings_meta(sf.as_uri()) == pl.embeddings_meta(str(sf)) == (4, 6)
+    _write_embeddings(spark, str(sf), [])
+    with pytest.raises(ValueError, match="no embeddings"):
+        pl.embeddings_meta(sf.as_uri())
+
+
 def test_oracle_sql_explicit_sf_dir_wins_over_env(spark, tmp_path, monkeypatch):
     import __spark_entry__ as ent
 

@@ -1,0 +1,131 @@
+"""One superstep loop: the greedy (matching.py) and peeling
+(ordering.py) algorithms run their rounds through SuperstepEngine, so
+they honour a caller's engine, write per-round metrics rows, and report
+converged=False when max_rounds stops them early. An AST guard keeps
+new hand-written round loops out of linkgraph/algos/."""
+
+from __future__ import annotations
+
+import ast
+import json
+import pathlib
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from linkgraph.algos import matching
+from linkgraph.algos.matching import (
+    maximal_matching, min_dominating_set, min_vertex_cover, mis,
+)
+from linkgraph.algos.msf import msf
+from linkgraph.algos.ordering import degeneracy_ordering, onion_layers
+from linkgraph.engine import SuperstepEngine
+from linkgraph.graph import Graph
+
+ALGOS = pathlib.Path(__file__).resolve().parent.parent / "linkgraph" / "algos"
+
+
+@pytest.fixture(scope="module")
+def g(spark):
+    """60 vertices, 150 random undirected pairs (one row per pair),
+    with a weight column for msf."""
+    rng = random.Random(11)
+    pairs = set()
+    while len(pairs) < 150:
+        a, b = rng.randrange(60), rng.randrange(60)
+        if a != b:
+            pairs.add((min(a, b), max(a, b)))
+    rows = [(a, b, float((a * 7 + b * 13) % 20 + 1)) for a, b in sorted(pairs)]
+    return Graph.from_edges(spark.createDataFrame(rows, "src long, dst long, w double"),
+                            weight_col="w")
+
+
+@pytest.fixture(scope="module")
+def full(g):
+    """Each algorithm's default run on `g`, computed once."""
+    return {algo: algo(g) for algo in (mis, maximal_matching, min_dominating_set,
+                                       min_vertex_cover, degeneracy_ordering, onion_layers, msf)}
+
+
+@pytest.mark.parametrize("algo", [
+    maximal_matching, min_dominating_set, min_vertex_cover, msf,
+], ids=lambda a: a.__name__)
+def test_max_rounds_cut_is_not_converged(g, full, algo):
+    assert full[algo].converged is True and full[algo].rounds >= 2
+    cut = algo(g, max_rounds=1)
+    assert cut.rounds == 1 and cut.converged is False
+
+
+# projection of each algorithm's engine state onto its returned columns
+PROJECT = {
+    mis: lambda st: st.select("id", (F.col("st") == matching.IN_SET).alias("in_mis")),
+    maximal_matching: lambda st: st.select("id", "match"),
+    min_dominating_set:
+        lambda st: st.select("id", (F.col("st") == matching.IN_SET).alias("in_mds")),
+}
+
+
+@pytest.mark.parametrize("algo", list(PROJECT), ids=lambda a: a.__name__)
+def test_engine_argument_is_honoured(spark, g, algo, tmp_path):
+    ck = tmp_path / "ck"
+    eng = SuperstepEngine(spark, checkpoint_dir=str(ck), checkpoint_every=1)
+    res = algo(g, engine=eng)
+    rows = [json.loads(line) for line in (ck / "metrics.jsonl").read_text().splitlines()]
+    assert [r["round"] for r in rows] == list(range(res.rounds))
+    last_round, state = eng.latest_checkpoint()
+    assert last_round == res.rounds - 1
+    assert sorted(PROJECT[algo](state).collect()) == sorted(res.state.collect())
+
+
+def test_metrics_rows_carry_time_and_counts(full):
+    """Every round of all seven loops (min_vertex_cover runs two)
+    reports its wall time and its own count column."""
+    counted = {mis: "undecided", maximal_matching: "unmatched", min_dominating_set: "undominated",
+               min_vertex_cover: "cover", degeneracy_ordering: "active", onion_layers: "active"}
+    for algo, key in counted.items():
+        res = full[algo]
+        assert res.converged and len(res.metrics) == res.rounds >= 1, algo.__name__
+        assert all("superstep_sec" in m and key in m for m in res.metrics), algo.__name__
+    phases = [m["phase"] for m in full[min_vertex_cover].metrics]
+    assert phases[0] == 1 and phases[-1] == 2
+
+
+# -- tooling guard: no hand-written round loops in linkgraph/algos/
+
+# Spark actions that mark a `while` loop as a driver-side round loop.
+ACTIONS = {"count", "isEmpty", "collect", "localCheckpoint"}
+
+# Functions whose `while` loop runs a Spark action, with the reason it
+# stays outside SuperstepEngine.
+LOOPS_ALLOWED: dict[str, str] = {
+    "msf.msf": "each Boruvka round nests a wcc engine run; two runs sharing one "
+               "checkpoint directory would collide",
+    "biconnectivity.biconnectivity": "binary-lifting ancestor table build: a fixed "
+                                     "log2(depth) levels, every level kept",
+}
+
+
+def _action_loops(tree: ast.Module) -> set[str]:
+    """Names of the functions holding a `while` loop whose body calls
+    a Spark action."""
+    found = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for loop in ast.walk(fn):
+            if isinstance(loop, ast.While) and any(
+                isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ACTIONS
+                for stmt in loop.body for n in ast.walk(stmt)
+            ):
+                found.add(fn.name)
+    return found
+
+
+def test_no_hand_written_round_loops():
+    loops = {f"{path.stem}.{name}" for path in sorted(ALGOS.glob("*.py"))
+             for name in _action_loops(ast.parse(path.read_text()))}
+    offenders = loops - set(LOOPS_ALLOWED)
+    assert not offenders, "round loops outside SuperstepEngine: " + ", ".join(sorted(offenders))
+    assert set(LOOPS_ALLOWED) <= loops, "stale allowlist entries"
