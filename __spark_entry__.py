@@ -113,46 +113,21 @@ def _q_degree_centrality(spark, sf_dir):
 
 
 def _q_pagerank(spark, sf_dir):
-    """One gate, BOTH engines: the join-mode superstep PageRank and
-    the CSR-block mapInPandas kernel (linkgraph/csr.py) as columns
-    (rank, rank_csr) against a single oracle recurrence."""
-    from linkgraph.csr import pagerank_csr
-
     g = part_graph(spark, sf_dir)
     res = pagerank(g, alpha=PR_ALPHA, max_iter=PR_ITERS, tol=0.0)
-    res_csr = pagerank_csr(g, alpha=PR_ALPHA, max_iter=PR_ITERS, tol=0.0)
-    return res.state.select("id", F.round("rank", 8).alias("rank")).join(
-        res_csr.state.select("id", F.round("rank", 8).alias("rank_csr")), "id"
-    )
+    return res.state.select("id", F.round("rank", 8).alias("rank"))
 
 
 def _q_wcc(spark, sf_dir):
-    """One gate, BOTH engines: the join-mode delta-frontier WCC and the
-    min-combining CSR-block Arrow kernel (linkgraph/csr.py:wcc_csr) as
-    columns (comp, comp_csr) against a single recursive-CTE oracle."""
-    from linkgraph.csr import wcc_csr
-
-    g = part_graph(spark, sf_dir)
-    res = wcc(g)
-    res_csr = wcc_csr(g)
-    return res.state.select("id", "comp").join(
-        res_csr.state.select("id", F.col("comp").alias("comp_csr")), "id"
-    )
+    """Delta-frontier WCC against a recursive-CTE oracle."""
+    return wcc(part_graph(spark, sf_dir)).state.select("id", "comp")
 
 
 def _q_cdlp(spark, sf_dir):
-    """LDBC label propagation through BOTH engine paths — the two-agg
-    join plan (linkgraph/algos/cdlp.py) and the label-count CSR-block
-    Arrow kernel (linkgraph/csr.py:cdlp_csr) as columns
-    (label, label_csr) against one unrolled histogram oracle."""
-    from linkgraph.csr import cdlp_csr
-
-    g = part_graph(spark, sf_dir)
-    res = cdlp(g, max_round=CDLP_ROUNDS)
-    res_csr = cdlp_csr(g, max_round=CDLP_ROUNDS)
-    return res.state.select("id", "label").join(
-        res_csr.state.select("id", F.col("label").alias("label_csr")), "id"
-    )
+    """LDBC label propagation (the two-agg join plan of
+    linkgraph/algos/cdlp.py) against one unrolled histogram oracle."""
+    res = cdlp(part_graph(spark, sf_dir), max_round=CDLP_ROUNDS)
+    return res.state.select("id", "label")
 
 
 def _q_triangles(spark, sf_dir):
@@ -227,12 +202,9 @@ def _q_sssp(spark, sf_dir):
     co-occurrence graph — TWO engine paths in one gate: the frontier
     relaxation (sssp(), column dist_bf) and the deterministic
     predecessor-tracking tree (sssp_path(), columns pred/dist,
-    apps/sssp/sssp_path.h semantics) — plus the min-plus CSR-block
-    Arrow kernel (linkgraph/csr.py:sssp_csr) as a third column
-    dist_csr; the oracle emits the same distance through both
-    recurrences."""
+    apps/sssp/sssp_path.h semantics); the oracle emits the same
+    distance through both recurrences."""
     from linkgraph.algos.paths import sssp_path
-    from linkgraph.csr import sssp_csr
 
     edges = part_edges(spark, sf_dir)
     g = Graph.from_edges(edges, directed=False, weight_col="weight")
@@ -241,12 +213,9 @@ def _q_sssp(spark, sf_dir):
     _assert_unroll(res, BFS_LAYERS, "sssp")
     resp = sssp_path(g, source=source, weight_col="weight", directed=False)
     _assert_unroll(resp, BFS_LAYERS, "sssp_path")
-    resc = sssp_csr(g, source=source, weight_col="weight", directed=False)
-    _assert_unroll(resc, BFS_LAYERS, "sssp_csr")
     return (
         resp.state.select("id", "pred", F.round("dist", 8).alias("dist"))
         .join(res.state.select("id", F.round("dist", 8).alias("dist_bf")), "id")
-        .join(resc.state.select("id", F.round("dist", 8).alias("dist_csr")), "id")
     )
 
 
@@ -1004,10 +973,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     frame are consolidated into multi-column gates (each gate still
     drives every underlying engine code path) and every family —
     including the 13 training-data pipeline ops — sits inside the
-    checked window. Functions folded into a sibling gate: pagerank_csr
-    → pagerank, wcc_csr → wcc, cdlp_csr → cdlp, lcc/triangle_count/
-    transitivity/avg_clustering → triangles/triangle_stats, bfs_tree
-    → bfs, sssp_path/sssp_csr → sssp, kcore → kshell, harmonic → closeness, sssp_avg_length_w →
+    checked window. Functions folded into a sibling gate: lcc/
+    triangle_count/transitivity/avg_clustering → triangles/
+    triangle_stats, bfs_tree → bfs, sssp_path → sssp, kcore → kshell, harmonic → closeness, sssp_avg_length_w →
     sssp_avg_length, louvain ⊂ louvain_full, mis/maximal_matching/
     min_dominating_set → matching_family, degree/attr assortativity →
     assortativity, node/edge boundary → boundary, is_simple_path/
@@ -1113,11 +1081,7 @@ def _pagerank_sql(iters: int = PR_ITERS, alpha: float = PR_ALPHA) -> str:
     FROM edges e JOIN r{p} r ON r.id = e.src AND r.deg > 0
     GROUP BY e.dst) m ON m.id = d.id)"""
         )
-    # rank_csr twins the join-mode column: the gate runs the same
-    # recurrence through both the superstep and the CSR-block engine
-    parts.append(
-        f"SELECT id, round(rank, 8) AS rank, round(rank, 8) AS rank_csr FROM r{iters}"
-    )
+    parts.append(f"SELECT id, round(rank, 8) AS rank FROM r{iters}")
     return "\n".join(parts)
 
 
@@ -1140,7 +1104,7 @@ def _cdlp_sql(rounds: int = CDLP_ROUNDS) -> str:
   SELECT l.id, coalesce(b.new_label, l.label) AS label
   FROM l{p} l LEFT JOIN b{k} b ON b.id = l.id)"""
         )
-    parts.append(f"SELECT id, label, label AS label_csr FROM l{rounds}")
+    parts.append(f"SELECT id, label FROM l{rounds}")
     return "\n".join(parts)
 
 
@@ -1236,8 +1200,7 @@ def _sssp_sql(layers: int = BFS_LAYERS) -> str:
   FROM t{p} t LEFT JOIN c{kk} c ON c.id = t.id)"""
         )
     parts.append(
-        f"""SELECT t.id, t.pred, round(t.d, 8) AS dist, round(s.d, 8) AS dist_bf,
-    round(s.d, 8) AS dist_csr
+        f"""SELECT t.id, t.pred, round(t.d, 8) AS dist, round(s.d, 8) AS dist_bf
 FROM t{layers} t JOIN s{layers} s ON s.id = t.id WHERE t.d < {big} / 2"""
     )
     return "\n".join(parts)
@@ -2627,7 +2590,7 @@ def oracle_sql(sf_dir: str | None = None) -> dict[str, str]:
     SELECT id, id FROM verts
     UNION
     SELECT s.dst, l.comp FROM lab l JOIN sym s ON s.src = l.id WHERE l.comp < s.dst)
-SELECT id, min(comp) AS comp, min(comp) AS comp_csr FROM lab GROUP BY id"""
+SELECT id, min(comp) AS comp FROM lab GROUP BY id"""
     )
     sql["cdlp"] = _cdlp_sql()
     sql["triangles"] = (

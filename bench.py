@@ -80,17 +80,7 @@ def main() -> None:
     w = run2("wcc", lambda: mat(wcc(g)))
     extra["wcc_rounds"] = w.rounds
 
-    # the north-star CSR-block mapInArrow kernels, same semantics as the
-    # join-path heads above (gate-verified equal); timed separately so
-    # the two physical strategies stay comparable round over round
-    from linkgraph.csr import cdlp_csr, pagerank_csr, wcc_csr
-
-    run2("pagerank_csr_tol1e-6",
-         lambda: mat(pagerank_csr(g, alpha=0.85, max_iter=100, tol=1e-6)))
-    run2("wcc_csr", lambda: mat(wcc_csr(g)))
-
     run2("cdlp_10", lambda: cdlp(g, max_round=10).state.count())
-    run2("cdlp_csr_10", lambda: cdlp_csr(g, max_round=10).state.count())
 
     extra["n_triangles"] = run2("triangles", lambda: triangle_corners(g).count())
 

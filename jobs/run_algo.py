@@ -5,7 +5,7 @@ Usage (cluster):
       <algo> --edges <parquet path|dir> [--vertices <parquet>] \
       [--output <dir>] [--checkpoint-dir <dir>] [--resume] \
       [--directed/--undirected] [--source N] [--weight-col W] \
-      [--max-iter N] [--tol T] [--alpha A] [--k K] [--mode join|csr]
+      [--max-iter N] [--tol T] [--alpha A] [--k K]
 
 Algos: pagerank wcc cdlp triangles lcc bfs sssp hits kcore
 Local smoke: python jobs/run_algo.py pagerank --edges <parquet> --output /tmp/pr
@@ -50,13 +50,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--undirected", dest="directed", action="store_false")
     ap.add_argument("--source", type=int, default=0)
     ap.add_argument("--weight-col", default=None)
-    ap.add_argument("--max-iter", type=int, default=100)
+    ap.add_argument("--max-iter", type=int, default=None,
+                    help="round cap (default 100; sssp: 10000)")
     ap.add_argument("--max-round", type=int, default=10,
                     help="cdlp/louvain rounds (distinct from --max-iter)")
     ap.add_argument("--tol", type=float, default=1e-6)
     ap.add_argument("--alpha", type=float, default=0.85)
     ap.add_argument("--k", type=int, default=2)
-    ap.add_argument("--mode", choices=["join", "csr"], default="join")
     ap.add_argument("--app", default=None,
                     help="custom PIE/Pregel-style app: a .py file (or "
                     "importable module) defining make(graph, spark, args)"
@@ -64,6 +64,10 @@ def main(argv: list[str] | None = None) -> int:
                     "SuperstepEngine contract (see README §custom apps)")
     ap.add_argument("--partitions", type=int, default=None)
     args = ap.parse_args(argv)
+    # sssp keeps its own 10,000-round cap unless --max-iter is given
+    sssp_kw = {} if args.max_iter is None else {"max_iter": args.max_iter}
+    if args.max_iter is None:
+        args.max_iter = 100
 
     from linkgraph.engine import SuperstepEngine
     from linkgraph.graph import Graph
@@ -83,22 +87,14 @@ def main(argv: list[str] | None = None) -> int:
 
     meta: dict = {"algo": args.algo}
     if args.algo == "pagerank":
-        if args.mode == "csr":
-            from linkgraph.csr import pagerank_csr as fn
-        else:
-            from linkgraph.algos.pagerank import pagerank as fn
-        res = fn(g, alpha=args.alpha, max_iter=args.max_iter, tol=args.tol,
-                 engine=eng, num_partitions=args.partitions,
-                 resume=args.resume)
+        from linkgraph.algos.pagerank import pagerank
+        res = pagerank(g, alpha=args.alpha, max_iter=args.max_iter, tol=args.tol,
+                       engine=eng, num_partitions=args.partitions,
+                       resume=args.resume)
     elif args.algo == "wcc":
-        if args.mode == "csr":
-            from linkgraph.csr import wcc_csr
-            res = wcc_csr(g, engine=eng, num_partitions=args.partitions,
-                          resume=args.resume)
-        else:
-            from linkgraph.algos.wcc import wcc
-            res = wcc(g, engine=eng, num_partitions=args.partitions,
-                      resume=args.resume)
+        from linkgraph.algos.wcc import wcc
+        res = wcc(g, engine=eng, num_partitions=args.partitions,
+                  resume=args.resume)
     elif args.algo == "cdlp":
         from linkgraph.algos.cdlp import cdlp
         # back-compat: cdlp historically took --max-iter; honor it when
@@ -109,12 +105,8 @@ def main(argv: list[str] | None = None) -> int:
             print(f"run_algo: cdlp using --max-iter={args.max_iter} as rounds "
                   "(pass --max-round to silence)", file=sys.stderr)
             rounds = args.max_iter
-        kw = {}
-        if args.mode == "csr":
-            from linkgraph.csr import cdlp_csr as cdlp
-            kw = {"resume": args.resume}
-        res = cdlp(g, max_round=rounds,
-                   engine=eng, num_partitions=args.partitions, **kw)
+        res = cdlp(g, max_round=rounds, engine=eng,
+                   num_partitions=args.partitions, resume=args.resume)
     elif args.algo == "triangles":
         from linkgraph.algos.triangles import triangles
         out = triangles(g)
@@ -127,14 +119,10 @@ def main(argv: list[str] | None = None) -> int:
         from linkgraph.algos.traversal import bfs
         res = bfs(g, source=args.source, engine=eng, num_partitions=args.partitions)
     elif args.algo == "sssp":
-        if args.mode == "csr":
-            from linkgraph.csr import sssp_csr as sssp
-            kw = {"resume": args.resume}
-        else:
-            from linkgraph.algos.traversal import sssp
-            kw = {}
+        from linkgraph.algos.traversal import sssp
         res = sssp(g, source=args.source, weight_col=args.weight_col,
-                   engine=eng, num_partitions=args.partitions, **kw)
+                   engine=eng, num_partitions=args.partitions,
+                   resume=args.resume, **sssp_kw)
     elif args.algo == "hits":
         from linkgraph.algos.hits import hits
         res = hits(g, max_iter=args.max_iter, tol=args.tol, engine=eng,

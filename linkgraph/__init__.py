@@ -7,8 +7,8 @@ data model becomes a pair of DataFrames, the BSP superstep loop
 becomes a driver-side iteration over vertex-state DataFrames with
 per-superstep checkpoints and convergence metrics, and the built-in
 algorithms (PageRank, WCC, CDLP, triangle counting, BFS, SSSP, HITS,
-k-core, LCC, ...) become declarative DataFrame plans plus vectorized
-Arrow/pandas kernels over per-partition CSR edge blocks — never a
+k-core, LCC, ...) become declarative DataFrame plans whose supersteps
+scatter through one edge-state join (linkgraph/joins.py) — never a
 per-row Python loop.
 
 Nothing here is a port: the reference is C++/MPI; this package is

@@ -32,8 +32,11 @@ def cdlp(
     max_round: int = 10,
     engine: SuperstepEngine | None = None,
     num_partitions: int | None = None,
+    resume: bool = False,
 ) -> SuperstepResult:
-    """Returns state (id: long, label: long)."""
+    """Returns state (id: long, label: long).
+
+    resume=True continues from the engine's latest durable checkpoint."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
@@ -87,7 +90,7 @@ def cdlp(
             to_metrics=to_metrics,
         )
 
-    result = eng.run(init, step, max_rounds=max_round)
+    result = eng.run(init, step, max_rounds=max_round, resume=resume)
     result.state = result.state.select("id", "label")
     edges.unpersist()
     return result

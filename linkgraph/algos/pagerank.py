@@ -23,9 +23,6 @@ V-row rank frame — the DataFrame analog of the reference's "mirrors
 stay put, messages move" design (key_concepts.rst:15-31). The
 convergence L1 and the NEXT round's dangling mass are computed in one
 aggregate pass, so each superstep runs exactly one collect().
-
-csr mode (the north-star vectorized path) lives in linkgraph.csr and
-shares this driver; see pagerank_csr().
 """
 
 from __future__ import annotations

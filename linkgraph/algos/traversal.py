@@ -33,10 +33,12 @@ def sssp(
     max_iter: int = 10_000,
     num_partitions: int | None = None,
     directed: bool | None = None,
+    resume: bool = False,
 ) -> SuperstepResult:
     """Returns state (id: long, dist: double); unreached = -1.0.
 
     weight_col=None means unit weights (= BFS levels as doubles).
+    resume=True continues from the engine's latest durable checkpoint.
     """
     w = weight_col or graph.weight_col
     # the cut carries only the graph's own weight column
@@ -90,7 +92,7 @@ def sssp(
         )
         return new_state, observed_count("changed", n_edges)
 
-    result = eng.run(init, step, max_rounds=max_iter)
+    result = eng.run(init, step, max_rounds=max_iter, resume=resume)
     result.state = result.state.select(
         "id", F.when(F.col("dist") == INF, F.lit(-1.0)).otherwise(F.col("dist")).alias("dist")
     )

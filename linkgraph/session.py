@@ -43,7 +43,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Arrow everywhere a pandas boundary exists (CSR kernels, toPandas)
+        # Arrow everywhere a pandas boundary exists (pandas UDFs, toPandas)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # iterative jobs re-reference the same state frames; in-memory columnar

@@ -148,8 +148,7 @@ def streaming_hub_alerts(edges: DataFrame, threshold: int = 1000) -> DataFrame:
     maintains a running out-degree per vertex across micro-batches and
     emits exactly ONE alert row (id, degree) in the micro-batch where
     the vertex's cumulative degree first crosses ``threshold`` —
-    the streaming analog of the hub-split decision the batch CSR path
-    makes statically (linkgraph/csr.py hub sources).
+    a running hub detector over an unbounded edge stream.
 
     State per key is (cnt: long, alerted: boolean); the emitted-once
     bit survives restarts through the query checkpoint. Output mode is

@@ -461,25 +461,6 @@ def test_kshell_matches_sequential_peel(spark, edges):
     assert got == want
 
 
-@given(edges=edge_lists)
-@SET
-def test_wcc_csr_matches_union_find(spark, edges):
-    """The min-combining CSR Arrow kernel must land on the same
-    min-member component labels as the pure-Python union-find on
-    arbitrary sparse-id graphs with self-loops and duplicates."""
-    from linkgraph.csr import wcc_csr
-    from linkgraph.graph import Graph
-
-    got = {
-        (r["id"], r["comp"])
-        for r in wcc_csr(
-            Graph.from_edges(_df(spark, edges), directed=True)
-        ).state.collect()
-    }
-    want = set(_union_find_components(edges).items())
-    assert got == want
-
-
 def _cdlp_replay(edges, rounds):
     """Synchronous LDBC label propagation: most frequent neighbor
     label, min-label ties, over the undirected simple graph."""
@@ -506,13 +487,13 @@ def _cdlp_replay(edges, rounds):
 
 @given(edges=edge_lists, rounds=st.sampled_from([1, 3, 10]))
 @SET
-def test_cdlp_csr_matches_synchronous_replay(spark, edges, rounds):
-    from linkgraph.csr import cdlp_csr
+def test_cdlp_matches_synchronous_replay(spark, edges, rounds):
+    from linkgraph.algos.cdlp import cdlp
     from linkgraph.graph import Graph
 
     got = {
         r["id"]: r["label"]
-        for r in cdlp_csr(
+        for r in cdlp(
             Graph.from_edges(_df(spark, edges), directed=True), max_round=rounds
         ).state.collect()
     }
@@ -557,11 +538,11 @@ def _dijkstra(edges, source, directed):
 
 @given(edges=weighted_edge_lists, directed=st.booleans())
 @SET
-def test_sssp_csr_matches_dijkstra(spark, edges, directed):
-    """The min-plus CSR kernel must reproduce Dijkstra distances on
+def test_sssp_matches_dijkstra(spark, edges, directed):
+    """The frontier relaxation must reproduce Dijkstra distances on
     arbitrary weighted graphs, both orientations, parallel edges and
     unreached islands (-1.0)."""
-    from linkgraph.csr import sssp_csr
+    from linkgraph.algos.traversal import sssp
     from linkgraph.graph import Graph
 
     e = spark.createDataFrame(
@@ -571,7 +552,7 @@ def test_sssp_csr_matches_dijkstra(spark, edges, directed):
     source = min(v for s, d, _ in edges for v in (s, d))
     got = {
         r["id"]: r["dist"]
-        for r in sssp_csr(
+        for r in sssp(
             Graph.from_edges(e, directed=directed, weight_col="w"),
             source=source,
             weight_col="w",

@@ -7,13 +7,20 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import sys
 
 import numpy as np
+import pytest
 
 from linkgraph import oracle
+from linkgraph.algos.cdlp import cdlp
 from linkgraph.algos.pagerank import pagerank
+from linkgraph.algos.traversal import sssp
 from linkgraph.engine import SuperstepEngine
 from linkgraph.graph import Graph
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_pagerank_resume_matches_full_run(spark, small_graph, small_edges_np, tmp_path):
@@ -47,53 +54,79 @@ def test_pagerank_resume_matches_full_run(spark, small_graph, small_edges_np, tm
     assert np.allclose(pdf["rank"].to_numpy(), ranks, atol=1e-6)
 
 
-def test_pagerank_csr_resume_matches_full_run(spark, small_graph, small_edges_np, tmp_path):
-    """The CSR-kernel path resumes mid-iteration from a durable
-    checkpoint exactly like the join path (the restored state carries
-    prev_rank/deg columns; the step must tolerate both)."""
-    from linkgraph.csr import pagerank_csr
-
-    src, dst = small_edges_np
-    g = Graph.from_edges(small_graph, directed=True)
-    ckpt = str(tmp_path / "prcsr_ckpt")
-
-    eng1 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=3,
-                           record_partition_lineage=True)
-    pagerank_csr(g, max_iter=6, tol=0.0, engine=eng1)
-    latest = eng1.latest_checkpoint()
-    assert latest is not None and latest[0] == 5
-
-    eng2 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=3)
-    res = pagerank_csr(g, max_iter=100, tol=1e-6, engine=eng2, resume=True)
-    assert res.converged
-
-    ids, ranks = oracle.pagerank(src, dst, directed=True, alpha=0.85, max_iter=100, tol=1e-6)
-    pdf = res.state.toPandas().sort_values("id").reset_index(drop=True)
-    assert (pdf["id"].to_numpy() == ids).all()
-    assert np.allclose(pdf["rank"].to_numpy(), ranks, atol=1e-6)
-
-
-def test_sssp_csr_resume_matches_full_run(spark, tmp_path):
-    """Kill a weighted sssp_csr after 1 round, resume, and land on the
+def test_sssp_resume_matches_full_run(spark, tmp_path):
+    """Kill a weighted sssp after 2 rounds, resume, and land on the
     exact full-run distances (frontier state round-trips the durable
     checkpoint)."""
-    from linkgraph.csr import sssp_csr
-
     chain = [(i, i + 1, 1.5) for i in range(8)] + [(0, 5, 100.0)]
     e = spark.createDataFrame(chain, "src long, dst long, w double")
     g = Graph.from_edges(e, directed=True, weight_col="w")
-    ckpt = str(tmp_path / "ssspcsr_ckpt")
+    ckpt = str(tmp_path / "sssp_ckpt")
 
     eng1 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=1)
-    sssp_csr(g, source=0, weight_col="w", max_iter=2, engine=eng1)
-    assert eng1.latest_checkpoint() is not None
+    sssp(g, source=0, weight_col="w", max_iter=2, engine=eng1)
+    assert eng1.latest_checkpoint()[0] == 1
 
     eng2 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=1)
-    res = sssp_csr(g, source=0, weight_col="w", engine=eng2, resume=True)
+    res = sssp(g, source=0, weight_col="w", engine=eng2, resume=True)
     got = {r["id"]: r["dist"] for r in res.state.collect()}
-    want = {r["id"]: r["dist"] for r in sssp_csr(g, source=0, weight_col="w").state.collect()}
+    want = {r["id"]: r["dist"] for r in sssp(g, source=0, weight_col="w").state.collect()}
     assert got == want
     assert got[8] == 12.0 and got[5] == 7.5  # chain beats the heavy shortcut
+    assert [m["round"] for m in res.metrics][0] == 2
+
+
+def test_cdlp_resume_matches_full_run(spark, small_graph, tmp_path):
+    """Kill cdlp after 1 round, resume, and land on the labels of an
+    uninterrupted run with the same round budget."""
+    g = Graph.from_edges(small_graph, directed=True)
+    ckpt = str(tmp_path / "cdlp_ckpt")
+
+    eng1 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=1)
+    cdlp(g, max_round=1, engine=eng1)
+    assert eng1.latest_checkpoint()[0] == 0
+
+    eng2 = SuperstepEngine(spark, checkpoint_dir=ckpt, checkpoint_every=1)
+    res = cdlp(g, max_round=5, engine=eng2, resume=True)
+    assert [m["round"] for m in res.metrics][0] == 1
+    got = dict(res.state.collect())
+    assert got == dict(cdlp(g, max_round=5).state.collect())
+    assert got != dict(cdlp(g, max_round=1).state.collect())
+
+
+@pytest.mark.parametrize("algo, kill, full", [
+    ("sssp", ["--max-iter", "2"], []),
+    ("cdlp", ["--max-round", "1"], ["--max-round", "4"]),
+], ids=["sssp", "cdlp"])
+def test_run_algo_resume_continues_from_checkpoint(spark, tmp_path, algo, kill, full):
+    """jobs/run_algo.py --resume continues a killed run from its latest
+    checkpoint: the output equals a one-shot run and no round is
+    recorded twice. Subprocesses, because main() stops its session."""
+    edges = str(tmp_path / "edges")
+    spark.createDataFrame(
+        [(i, i + 1) for i in range(6)] + [(0, 3), (10, 11), (11, 12), (12, 10)],
+        "src long, dst long",
+    ).write.parquet(edges)
+    ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
+    base = [sys.executable, os.path.join(REPO, "jobs", "run_algo.py"), algo,
+            "--edges", edges, "--checkpoint-dir", ckpt, "--checkpoint-every", "1"]
+
+    def recorded_rounds():
+        with open(os.path.join(ckpt, "metrics.jsonl")) as fh:
+            return [json.loads(line)["round"] for line in fh]
+
+    subprocess.run(base + kill, env=env, check=True, capture_output=True)
+    assert recorded_rounds() == list(range(int(kill[1])))  # killed mid-run
+    subprocess.run(base + full + ["--resume", "--output", out],
+                   env=env, check=True, capture_output=True)
+
+    g = Graph.from_edges(spark.read.parquet(edges), directed=True)
+    one_shot = (sssp(g, source=0) if algo == "sssp"
+                else cdlp(g, max_round=int(full[1]))).state
+    assert set(spark.read.parquet(out).collect()) == set(one_shot.collect())
+    rounds = recorded_rounds()
+    assert rounds == list(range(len(rounds))) and len(rounds) > int(kill[1])
 
 
 def test_iceberg_checkpoint_format_gated(spark, small_graph, tmp_path):

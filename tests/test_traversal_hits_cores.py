@@ -57,6 +57,14 @@ def test_sssp_weighted(spark, small_graph, small_edges_np):
     assert np.allclose(got, exp)
 
 
+def test_sssp_directed_unit_weights(spark):
+    """No weight column: unit weights on a directed cycle plus an
+    in-tail; back-edges must not relax, the tail stays unreached."""
+    e = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (4, 1)], "src long, dst long")
+    got = dict(sssp(Graph.from_edges(e, directed=True), source=1).state.collect())
+    assert got == {1: 0.0, 2: 1.0, 3: 2.0, 4: -1.0}
+
+
 def test_hits_matches_oracle(spark, small_graph, small_edges_np):
     src, dst = small_edges_np
     g = Graph.from_edges(small_graph, directed=True)

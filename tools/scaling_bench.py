@@ -27,7 +27,6 @@ Modes:
                 SERIALIZED level in PySpark 4 — the JVM localCheckpoint
                 default is the deserialized DESER variant — plus
                 spark.rdd.compress).
-  csr         — the CSR-block mapInPandas kernel.
   *_noaqe     — any mode with AQE disabled for the superstep loop
                 (r5: AQE's per-stage re-planning only adds latency to
                 the already explicitly partitioned iterative plan).
@@ -129,7 +128,6 @@ from linkgraph.session import get_spark
 from linkgraph.datagen import skewed_graph
 from linkgraph.graph import Graph
 from linkgraph.algos.pagerank import pagerank
-from linkgraph.csr import pagerank_csr
 
 extra.update(exec_conf)
 spark = get_spark(app_name=f"scaling-{{cpus}}",
@@ -143,8 +141,7 @@ e = e.repartition(P, "src").persist()
 n_edges = e.count()
 g = Graph.from_edges(e, directed=True)
 t0 = time.time()
-fn = pagerank_csr if mode.startswith("csr") else pagerank
-res = fn(g, max_iter=rounds, tol=0.0)
+res = pagerank(g, max_iter=rounds, tol=0.0)
 res.state.count()
 wall = time.time() - t0
 secs = [m["superstep_sec"] for m in res.metrics]
@@ -199,6 +196,8 @@ def main() -> None:
     rounds = int(sys.argv[3]) if len(sys.argv) > 3 else 16
     n_lo = int(sys.argv[4]) if len(sys.argv) > 4 else 8
     mode = sys.argv[5] if len(sys.argv) > 5 else "join"
+    if mode.removesuffix("_noaqe") not in ("join", "join_tuned"):
+        sys.exit(f"unknown mode {mode!r}: join, join_tuned, optionally + _noaqe")
     # optional 7th arg: "lo" / "hi" to run a single leg (prints that
     # leg's JSON only — lets a long run reuse an already-recorded leg)
     leg = sys.argv[6] if len(sys.argv) > 6 else "both"

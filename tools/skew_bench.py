@@ -2,23 +2,22 @@
 
 VERDICT r1 asked for evidence that the hot-path aggregations survive a
 power-law hub: per-superstep time should stay ~flat as one vertex's
-degree grows from 0 to millions. Three paths are exercised:
+degree grows from 0 to millions. Three configurations are exercised:
 
-  * pagerank (join mode)  — hub IN-degree: the scatter
-    groupBy(dst).sum lands millions of messages on one key; Spark's
-    map-side partial aggregation reduces that to one partial per map
-    task, so no single reducer sees the raw fan-in.
-  * pagerank_csr          — hub OUT-degree: adjacency_blocks would
-    build one multi-hundred-MB collect_list row; the chunked CSR
-    (csr.py CSR_CHUNK_SIZE) shards it into bounded blocks.
-  * cdlp                  — hub SRC with many distinct neighbor
-    labels: the (src,label) histogram is the worst aggregation shape;
-    partial aggregation + AQE cover it.
+  * pagerank      — hub IN-degree: the scatter groupBy(dst).sum lands
+    millions of messages on one key; Spark's map-side partial
+    aggregation reduces that to one partial per map task, so no single
+    reducer sees the raw fan-in.
+  * pagerank_out  — hub OUT-degree: the hub's million edges sit in one
+    src partition of the persisted edge frame, so one scatter task
+    carries them all.
+  * cdlp          — hub SRC with many distinct neighbor labels: the
+    (src,label) histogram is the worst aggregation shape; partial
+    aggregation + AQE cover it.
 
 Each configuration runs a fixed number of supersteps at local[N] in a
 fresh subprocess; the report is steady-state sec/superstep per hub
-degree. Flat (≤ ~1.3× from H=0 to H=max) = pass; a blow-up would mean
-the salted_agg path (linkgraph/skew.py) must be wired in.
+degree relative to the same configuration without a hub.
 
 Usage: python tools/skew_bench.py [n_vertices] [avg_degree] [hub_degrees_csv]
 """
@@ -44,8 +43,8 @@ spark = get_spark(app_name=f"skew-{{algo}}-{{hub}}", master=f"local[{{cpus}}]",
                   shuffle_partitions=cpus)
 base = skewed_graph(spark, n_vertices=nv, avg_degree=deg, seed=42)
 if hub > 0:
-    if algo == "pagerank_csr":
-        # hub OUT-degree: vertex 0 -> 1..hub (the giant adjacency row)
+    if algo == "pagerank_out":
+        # hub OUT-degree: vertex 0 -> 1..hub (one giant src partition)
         extra = spark.range(1, hub + 1).select(F.lit(0).alias("src"), F.col("id").alias("dst"))
     else:
         # hub IN-degree: 1..hub -> vertex 0 (the giant message fan-in)
@@ -55,12 +54,9 @@ e = base.repartition(cpus, "src").persist()
 n_edges = e.count()
 g = Graph.from_edges(e, directed=True)
 t0 = time.time()
-if algo == "pagerank":
+if algo.startswith("pagerank"):
     from linkgraph.algos.pagerank import pagerank
     res = pagerank(g, max_iter=rounds, tol=0.0)
-elif algo == "pagerank_csr":
-    from linkgraph.csr import pagerank_csr
-    res = pagerank_csr(g, max_iter=rounds, tol=0.0)
 elif algo == "cdlp":
     from linkgraph.algos.cdlp import cdlp
     res = cdlp(g, max_round=rounds)
@@ -99,7 +95,7 @@ def main():
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     rounds = 8
     results = []
-    for algo in ("pagerank", "pagerank_csr", "cdlp"):
+    for algo in ("pagerank", "pagerank_out", "cdlp"):
         for hub in hubs:
             r = run(repo, algo, cpus, nv, deg, hub, rounds)
             results.append(r)
