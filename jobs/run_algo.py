@@ -62,7 +62,10 @@ def main(argv: list[str] | None = None) -> int:
                     "importable module) defining make(graph, spark, args)"
                     " -> (init_state_df, step_fn); step_fn follows the "
                     "SuperstepEngine contract (see README §custom apps)")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="spark.sql.shuffle.partitions of the job's session: the "
+                    "partition count of every stored edge view and vertex state "
+                    "(default: the master's core count)")
     args = ap.parse_args(argv)
     # sssp keeps its own 10,000-round cap unless --max-iter is given
     sssp_kw = {} if args.max_iter is None else {"max_iter": args.max_iter}
@@ -73,7 +76,7 @@ def main(argv: list[str] | None = None) -> int:
     from linkgraph.graph import Graph
     from linkgraph.session import get_spark
 
-    spark = get_spark(app_name=f"linkgraph-{args.algo}")
+    spark = get_spark(app_name=f"linkgraph-{args.algo}", shuffle_partitions=args.partitions)
     edges = spark.read.parquet(args.edges)
     vertices = spark.read.parquet(args.vertices) if args.vertices else None
     g = Graph.from_edges(edges, vertices=vertices, directed=args.directed,
@@ -89,12 +92,10 @@ def main(argv: list[str] | None = None) -> int:
     if args.algo == "pagerank":
         from linkgraph.algos.pagerank import pagerank
         res = pagerank(g, alpha=args.alpha, max_iter=args.max_iter, tol=args.tol,
-                       engine=eng, num_partitions=args.partitions,
-                       resume=args.resume)
+                       engine=eng, resume=args.resume)
     elif args.algo == "wcc":
         from linkgraph.algos.wcc import wcc
-        res = wcc(g, engine=eng, num_partitions=args.partitions,
-                  resume=args.resume)
+        res = wcc(g, engine=eng, resume=args.resume)
     elif args.algo == "cdlp":
         from linkgraph.algos.cdlp import cdlp
         # back-compat: cdlp historically took --max-iter; honor it when
@@ -105,8 +106,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"run_algo: cdlp using --max-iter={args.max_iter} as rounds "
                   "(pass --max-round to silence)", file=sys.stderr)
             rounds = args.max_iter
-        res = cdlp(g, max_round=rounds, engine=eng,
-                   num_partitions=args.partitions, resume=args.resume)
+        res = cdlp(g, max_round=rounds, engine=eng, resume=args.resume)
     elif args.algo == "triangles":
         from linkgraph.algos.triangles import triangles
         out = triangles(g)
@@ -117,83 +117,77 @@ def main(argv: list[str] | None = None) -> int:
         res = None
     elif args.algo == "bfs":
         from linkgraph.algos.traversal import bfs
-        res = bfs(g, source=args.source, engine=eng, num_partitions=args.partitions)
+        res = bfs(g, source=args.source, engine=eng)
     elif args.algo == "sssp":
         from linkgraph.algos.traversal import sssp
         res = sssp(g, source=args.source, weight_col=args.weight_col,
-                   engine=eng, num_partitions=args.partitions,
-                   resume=args.resume, **sssp_kw)
+                   engine=eng, resume=args.resume, **sssp_kw)
     elif args.algo == "hits":
         from linkgraph.algos.hits import hits
-        res = hits(g, max_iter=args.max_iter, tol=args.tol, engine=eng,
-                   num_partitions=args.partitions)
+        res = hits(g, max_iter=args.max_iter, tol=args.tol, engine=eng)
     elif args.algo == "kcore":
         from linkgraph.algos.cores import kcore
-        res = kcore(g, k=args.k, engine=eng, num_partitions=args.partitions)
+        res = kcore(g, k=args.k, engine=eng)
     elif args.algo == "kshell":
         from linkgraph.algos.cores import kshell
-        res = kshell(g, engine=eng, num_partitions=args.partitions)
+        res = kshell(g, engine=eng)
     elif args.algo == "louvain":
         from linkgraph.algos.louvain import louvain
-        res = louvain(g, max_round=args.max_round, engine=eng,
-                      num_partitions=args.partitions)
+        res = louvain(g, max_round=args.max_round, engine=eng)
     elif args.algo == "closeness":
         from linkgraph.algos.paths import closeness_centrality
-        res = closeness_centrality(g, engine=eng, num_partitions=args.partitions)
+        res = closeness_centrality(g, engine=eng)
     elif args.algo == "betweenness":
         from linkgraph.algos.paths import betweenness_centrality
-        res = betweenness_centrality(g, engine=eng, num_partitions=args.partitions)
+        res = betweenness_centrality(g, engine=eng)
     elif args.algo == "voterank":
         from linkgraph.algos.ranking import voterank
-        out = voterank(g, num_seeds=args.k, num_partitions=args.partitions)
+        out = voterank(g, num_seeds=args.k)
         res = None
     elif args.algo == "sssp_path":
         from linkgraph.algos.paths import sssp_path
         res = sssp_path(g, source=args.source, weight_col=args.weight_col,
-                        engine=eng, num_partitions=args.partitions)
+                        engine=eng)
     elif args.algo == "eigenvector":
         from linkgraph.algos.centrality import eigenvector_centrality
         res = eigenvector_centrality(g, max_iter=args.max_iter, tol=args.tol,
-                                     engine=eng, num_partitions=args.partitions)
+                                     engine=eng)
     elif args.algo == "katz":
         from linkgraph.algos.centrality import katz_centrality
         res = katz_centrality(g, alpha=args.alpha, max_iter=args.max_iter,
-                              tol=args.tol, engine=eng, num_partitions=args.partitions)
+                              tol=args.tol, engine=eng)
     elif args.algo == "scc":
         from linkgraph.algos.scc import scc
-        res = scc(g, engine=eng, num_partitions=args.partitions)
+        res = scc(g, engine=eng)
     elif args.algo == "ppr":
         from linkgraph.algos.pagerank import ppr
         res = ppr(g, source=args.source, alpha=args.alpha,
-                  max_iter=args.max_iter, engine=eng,
-                  num_partitions=args.partitions)
+                  max_iter=args.max_iter, engine=eng)
     elif args.algo == "articlerank":
         from linkgraph.algos.pagerank import articlerank
         res = articlerank(g, max_iter=args.max_iter, damping=args.alpha,
-                          engine=eng, num_partitions=args.partitions)
+                          engine=eng)
     elif args.algo == "bfs_tree":
         from linkgraph.algos.traversal import bfs_tree
-        res = bfs_tree(g, source=args.source, engine=eng,
-                       num_partitions=args.partitions)
+        res = bfs_tree(g, source=args.source, engine=eng)
     elif args.algo == "mis":
         from linkgraph.algos.matching import mis as _mis
-        res = _mis(g, num_partitions=args.partitions)
+        res = _mis(g)
     elif args.algo == "maximal_matching":
         from linkgraph.algos.matching import maximal_matching
-        res = maximal_matching(g, num_partitions=args.partitions)
+        res = maximal_matching(g)
     elif args.algo == "min_dominating_set":
         from linkgraph.algos.matching import min_dominating_set
-        res = min_dominating_set(g, num_partitions=args.partitions)
+        res = min_dominating_set(g)
     elif args.algo == "msf":
         from linkgraph.algos.msf import msf as _msf
-        res = _msf(g, weight_col=args.weight_col, num_partitions=args.partitions)
+        res = _msf(g, weight_col=args.weight_col)
     elif args.algo == "harmonic":
         from linkgraph.algos.paths import harmonic_centrality
-        res = harmonic_centrality(g, engine=eng, num_partitions=args.partitions)
+        res = harmonic_centrality(g, engine=eng)
     elif args.algo == "diameter_approx":
         from linkgraph.algos.paths import diameter_approx
-        res = diameter_approx(g, k=args.k, engine=eng,
-                              num_partitions=args.partitions)
+        res = diameter_approx(g, k=args.k, engine=eng)
     elif args.algo == "kclique":
         from linkgraph.algos.subgraph import kclique_counts
         from linkgraph.engine import SuperstepResult
@@ -211,33 +205,30 @@ def main(argv: list[str] | None = None) -> int:
                               converged=True, metrics=[])
     elif args.algo == "degeneracy_ordering":
         from linkgraph.algos.ordering import degeneracy_ordering
-        res = degeneracy_ordering(g, num_partitions=args.partitions)
+        res = degeneracy_ordering(g)
     elif args.algo == "onion_layers":
         from linkgraph.algos.ordering import onion_layers
-        res = onion_layers(g, num_partitions=args.partitions)
+        res = onion_layers(g)
     elif args.algo == "min_vertex_cover":
         from linkgraph.algos.matching import min_vertex_cover
-        res = min_vertex_cover(g, num_partitions=args.partitions)  # noqa: returns SuperstepResult
+        res = min_vertex_cover(g)  # noqa: returns SuperstepResult
     elif args.algo == "color":
         from linkgraph.algos.coloring import greedy_color
-        res = greedy_color(g, engine=eng, num_partitions=args.partitions)
+        res = greedy_color(g, engine=eng)
     elif args.algo == "fluid":
         from linkgraph.algos.coloring import fluid_community
         res = fluid_community(g, n_communities=args.k,
-                              max_round=args.max_round, engine=eng,
-                              num_partitions=args.partitions)
+                              max_round=args.max_round, engine=eng)
     elif args.algo == "k_core_search":
         from linkgraph.algos.cores import k_core_search
-        res = k_core_search(g, k=args.k, engine=eng,
-                            num_partitions=args.partitions)
+        res = k_core_search(g, k=args.k, engine=eng)
     elif args.algo == "k_center":
         from linkgraph.algos.paths import k_center
-        res = k_center(g, k=args.k, engine=eng,
-                       num_partitions=args.partitions)
+        res = k_center(g, k=args.k, engine=eng)
     elif args.algo in ("bridges", "cut_points", "bcc"):
         from linkgraph.algos.biconnectivity import biconnectivity
         from linkgraph.engine import SuperstepResult
-        bires = biconnectivity(g, engine=eng, num_partitions=args.partitions)
+        bires = biconnectivity(g, engine=eng)
         frame = {"bridges": bires.bridges, "cut_points": bires.cut_points,
                  "bcc": bires.bcc}[args.algo]
         res = SuperstepResult(state=frame, rounds=bires.rounds,

@@ -92,17 +92,10 @@ def _bfs_forest(
     from linkgraph.algos.wcc import wcc
 
     g = graph.materialized()
-    edges = (
-        g.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    edges = g.simple_undirected()
     n_edges = edges.count()
 
-    comp = wcc(g, engine=eng, num_partitions=P)
+    comp = wcc(g, engine=eng)
     roots = comp.state.where(F.col("id") == F.col("comp")).select("id")
 
     INF = float("inf")
@@ -173,11 +166,10 @@ def _lift_join(frame: DataFrame, anc_k: DataFrame, pos: str, cond) -> DataFrame:
 def biconnectivity(
     graph: Graph,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> BiconnectivityResult:
     spark = graph.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     tree, edges, rounds, metrics = _bfs_forest(graph, eng, P)
     verts = tree.select("id")
@@ -352,12 +344,14 @@ def biconnectivity(
         )
         .localCheckpoint(eager=True)
     )
+    h_graph = None
     if h_edges.limit(1).count() == 0:
         groups = verts.select("id", F.col("id").alias("grp"))
     else:
         from linkgraph.algos.wcc import wcc as _wcc
 
-        hres = _wcc(Graph.from_edges(h_edges, directed=False), engine=eng, num_partitions=P)
+        h_graph = Graph.from_edges(h_edges, directed=False)
+        hres = _wcc(h_graph, engine=eng)
         rounds += hres.rounds
         metrics = metrics + hres.metrics
         groups = (
@@ -365,6 +359,8 @@ def biconnectivity(
             .select("id", F.coalesce("comp", F.col("id")).alias("grp"))
         )
     groups = groups.repartition(P, "id").localCheckpoint(eager=True)
+    if h_graph is not None:
+        h_graph.release()  # unpersists the view its wcc built
 
     # cut rule (cut-point.h:138-152): non-root — any child group
     # differs from own group; root — children span >= 2 groups
@@ -396,7 +392,6 @@ def biconnectivity(
     bcc = groups.select("id", F.col("grp").alias("bcc"))
     for frame in anc:
         frame.unpersist()
-    edges.unpersist()
     return BiconnectivityResult(
         tree=tree, bridges=bridges, cut_points=cut_points, bcc=bcc,
         rounds=rounds, metrics=metrics,

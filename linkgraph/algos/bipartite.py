@@ -34,14 +34,13 @@ def lpa_u2i(
     user_labels: DataFrame,
     max_round: int = 2,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """edges: (user, item [, w]); user_labels: (user, label double —
     0/1 seeds are clamped). Returns state (user, label) after
     ``max_round`` full u2i+i2u rounds."""
     spark = edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     w = F.col("w") if "w" in edges.columns else F.lit(1.0)
     e = (

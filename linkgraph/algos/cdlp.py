@@ -11,8 +11,8 @@ counts each neighbor's label once; the numpy oracle and the DuckDB
 gate oracle encode the same interpretation).
 
 Spark plan per superstep — two aggregations, no window function:
-  edges ⋈ state on dst  →  groupBy(src, label).count()   (histogram)
-  →  groupBy(src).max(struct(cnt, -label))                (argmax)
+  edges ⋈ state on src  →  groupBy(dst, label).count()   (histogram)
+  →  groupBy(dst).max(struct(cnt, -label))                (argmax)
 The struct-max encodes "max count, then min label" deterministically —
 never a nondeterministic first() (SURVEY.md §7.3 tie-break risk).
 Both aggregations get map-side partial aggregation for free.
@@ -31,7 +31,6 @@ def cdlp(
     graph: Graph,
     max_round: int = 10,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     resume: bool = False,
 ) -> SuperstepResult:
     """Returns state (id: long, label: long).
@@ -40,16 +39,11 @@ def cdlp(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = (
-        g.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "dst")
-        .persist()
-    )
+    # the view is symmetric, so scattering each label along src -> dst
+    # and grouping by dst counts every neighbour's label once
+    edges = g.simple_undirected()
     n_edges = edges.count()
     verts = g.deduced_vertices()
     n_verts = verts.count()
@@ -58,8 +52,8 @@ def cdlp(
 
     def step(state: DataFrame, round_: int):
         hist = (
-            scatter_join(edges, state.select(F.col("id").alias("dst"), "label"), "dst", n_verts)
-            .groupBy(F.col("src").alias("id"), "label")
+            scatter_join(edges, state.select(F.col("id").alias("src"), "label"), "src", n_verts)
+            .groupBy(F.col("dst").alias("id"), "label")
             .agg(F.count("*").alias("cnt"))
         )
         best = (
@@ -92,5 +86,4 @@ def cdlp(
 
     result = eng.run(init, step, max_rounds=max_round, resume=resume)
     result.state = result.state.select("id", "label")
-    edges.unpersist()
     return result

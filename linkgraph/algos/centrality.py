@@ -36,13 +36,12 @@ def eigenvector_centrality(
     max_iter: int = 100,
     tol: float = 1e-6,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, centrality: double), L2-normalized."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _directed_edges(g, P)
     n_edges = edges.count()
     verts = g.deduced_vertices()
@@ -110,14 +109,13 @@ def katz_centrality(
     max_iter: int = 1000,
     tol: float = 1e-6,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, centrality: double), L2-normalized at
     the end (per-round values are the raw Katz series)."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _directed_edges(g, P)
     n_edges = edges.count()
     verts = g.deduced_vertices()

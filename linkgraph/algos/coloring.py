@@ -46,7 +46,6 @@ def greedy_color(
     graph: Graph,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
     priority: str = "degree",
     seed: int = 42,
 ) -> SuperstepResult:
@@ -66,9 +65,9 @@ def greedy_color(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = g.simple_undirected().repartition(P, "src").persist()
+    sym = g.simple_undirected()
     n_edges = sym.count()
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
     verts = g.deduced_vertices()
@@ -141,7 +140,6 @@ def greedy_color(
 
     res = eng.run(init, step, max_rounds=max_iter)
     res.state = res.state.select("id", "color")
-    sym.unpersist()
     oriented.unpersist()
     return res
 
@@ -152,7 +150,6 @@ def fluid_community(
     max_round: int = 6,
     eps: float = 1e-10,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, lab: long) — lab is the seed vertex id
     of the adopted community, or -1 if never reached.  Fixed
@@ -161,9 +158,9 @@ def fluid_community(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = g.simple_undirected().repartition(P, "src").persist()
+    sym = g.simple_undirected()
     n_edges = sym.count()
     verts = g.deduced_vertices()
 
@@ -228,6 +225,4 @@ def fluid_community(
         )
         return new_state, {"halt": False, "edges_processed": n_edges}
 
-    res = eng.run(init, step, max_rounds=max_round)
-    sym.unpersist()
-    return res
+    return eng.run(init, step, max_rounds=max_round)

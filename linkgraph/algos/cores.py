@@ -20,32 +20,20 @@ from linkgraph.engine import Observed, SuperstepEngine, SuperstepResult, observe
 from linkgraph.graph import Graph
 
 
-def _und_edges(graph: Graph, P: int) -> DataFrame:
-    return (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-    )
-
-
 def kcore(
     graph: Graph,
     k: int,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, in_core: boolean) — membership of the
     k-core (vertices with no incident edge are never in a k≥1 core)."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     all_verts = g.deduced_vertices()
-    edges0 = _und_edges(g, P).persist()
+    edges0 = g.simple_undirected()
     n_edges = edges0.count()
 
     # state: surviving vertex set (id); edges induced on it each round
@@ -82,7 +70,6 @@ def kcore(
     ).select("id", F.coalesce("in_core", F.lit(False)).alias("in_core"))
     if edge_box["e"] is not edges0:
         edge_box["e"].unpersist()
-    edges0.unpersist()
     return result
 
 
@@ -90,7 +77,6 @@ def kshell(
     graph: Graph,
     engine: "SuperstepEngine | None" = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ):
     """Shell (core) number per vertex: (id: long, shell: long) — the
     largest k such that the vertex is in the k-core. Returns a
@@ -113,8 +99,8 @@ def kshell(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _und_edges(g, P).persist()
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = g.simple_undirected()
     n_edges = edges.count()
     verts = g.deduced_vertices()
 
@@ -186,7 +172,6 @@ def kshell(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", F.col("h").alias("shell"))
-    edges.unpersist()
     return result
 
 
@@ -195,7 +180,6 @@ def k_core_search(
     k: int,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """k-core membership via the reference's PUSH-DECREMENT wave
     (flash/core/k-core-search.h:48-64): instead of recounting induced
@@ -211,9 +195,9 @@ def k_core_search(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = _und_edges(g, P).persist()
+    edges = g.simple_undirected()
     n_edges = edges.count()
     verts = g.deduced_vertices()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
@@ -264,5 +248,4 @@ def k_core_search(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", F.col("alive").alias("in_kcore"))
-    edges.unpersist()
     return result

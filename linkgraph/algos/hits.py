@@ -36,14 +36,13 @@ def hits(
     max_iter: int = 100,
     tol: float = 1e-8,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, hub: double, auth: double), both
     L2-normalized."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = (
         g.edges.select("src", "dst")

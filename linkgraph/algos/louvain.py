@@ -70,7 +70,6 @@ def louvain_local_move(
     m2: float,
     max_round: int = 10,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     n_nodes: int | None = None,
 ) -> SuperstepResult:
     """One phase-1 pass over a (possibly coarsened) graph.
@@ -82,7 +81,7 @@ def louvain_local_move(
     """
     spark = edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     bcast_sig = n_nodes is not None and n_nodes <= BROADCAST_COMMS_MAX
 
     init = nodes.select("id", F.col("id").alias("c"), "k", "internal").repartition(P, "id")
@@ -177,14 +176,13 @@ def louvain_phase1(
     graph: Graph,
     max_round: int = 10,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Single-level Louvain (phase-1 local moves only) on the graph's
     weighted undirected view. Returns state (id, community) — the
     deterministic, oracle-checkable core of the full algorithm."""
     g = graph.materialized()
     spark = g.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = _weighted_sym_edges(g, P).persist()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
     nodes = (
@@ -193,8 +191,7 @@ def louvain_phase1(
         .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
     )
     m2 = nodes.agg(F.sum("k")).collect()[0][0] or 1.0
-    res = louvain_local_move(edges, nodes, m2, max_round=max_round,
-                             engine=engine, num_partitions=P,
+    res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
                              n_nodes=nodes.count())
     res.state = res.state.select("id", F.col("c").alias("community"))
     edges.unpersist()
@@ -206,7 +203,6 @@ def louvain(
     max_round: int = 10,
     max_levels: int = 5,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     force_all_levels: bool = False,
 ) -> SuperstepResult:
     """Full multi-level Louvain. Returns state (id: long, community:
@@ -218,7 +214,7 @@ def louvain(
     level count."""
     g = graph.materialized()
     spark = g.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges = _weighted_sym_edges(g, P).persist()
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
@@ -234,8 +230,7 @@ def louvain(
     total_rounds = 0
     n_nodes = nodes.count()
     for level in range(max_levels):
-        res = louvain_local_move(edges, nodes, m2, max_round=max_round,
-                                 engine=engine, num_partitions=P,
+        res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
                                  n_nodes=n_nodes)
         total_rounds += res.rounds
         labels = res.state.select("id", "c").persist()

@@ -82,7 +82,6 @@ def _set_counts(open_key: str):
 def mis(
     graph: Graph,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Maximal independent set (mis.h:47-82). Returns state
@@ -91,7 +90,7 @@ def mis(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     closed = _closed(g, P)
     n = g.deduced_vertices().count()
 
@@ -129,7 +128,6 @@ def mis(
 def maximal_matching(
     graph: Graph,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Maximal matching (mm.h:48-75). Returns state (id: long,
@@ -138,9 +136,8 @@ def maximal_matching(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = g.simple_undirected().repartition(P, "src").persist()
-    edges.count()
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = g.simple_undirected()
     verts = g.deduced_vertices()
     n = verts.count()
 
@@ -171,14 +168,12 @@ def maximal_matching(
 
     result = eng.run(init, step, max_rounds=max_rounds)
     result.state = result.state.select("id", "match")
-    edges.unpersist()
     return result
 
 
 def min_dominating_set(
     graph: Graph,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Greedy minimal dominating set (min-dominating-set.h:50-96).
@@ -190,7 +185,7 @@ def min_dominating_set(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     closed = _closed(g, P)
     verts = g.deduced_vertices()
     n = verts.count()
@@ -225,7 +220,6 @@ def min_dominating_set(
 
 def min_vertex_cover(
     graph: Graph,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Greedy 2-phase minimal vertex cover (min-cover.h:43-116).
@@ -245,9 +239,8 @@ def min_vertex_cover(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = g.simple_undirected().repartition(P, "src").persist()
-    edges.count()
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = g.simple_undirected()
     verts = g.deduced_vertices()
     n = verts.count()
 
@@ -292,7 +285,6 @@ def min_vertex_cover(
     admitted = eng.run(init, admit, max_rounds=max_rounds)
     refined = eng.run(admitted.state.select("id", "c"), refine, max_rounds=max_rounds,
                       start_round=admitted.rounds)
-    edges.unpersist()
     return SuperstepResult(
         state=refined.state.select("id", F.col("c").alias("in_cover")),
         rounds=admitted.rounds + refined.rounds,

@@ -38,13 +38,14 @@ def msf(
     graph: Graph,
     weight_col: str | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 100,
 ) -> SuperstepResult:
-    spark = graph.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     w = weight_col or graph.weight_col
-    base = graph.edges.select(
+    # the cut carries only the graph's own weight column
+    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    spark = g.edges.sparkSession
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    base = g.edges.select(
         F.least("src", "dst").alias("src"),
         F.greatest("src", "dst").alias("dst"),
         (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"),
@@ -54,7 +55,7 @@ def msf(
                 .repartition(P, "src").persist()
     edges.count()
 
-    verts = graph.deduced_vertices()
+    verts = g.deduced_vertices()
     comp = verts.select("id", F.col("id").alias("c")) \
                 .repartition(P, "id").localCheckpoint(eager=True)
     forest_frames: list[DataFrame] = []
@@ -107,13 +108,9 @@ def msf(
         # unmerged)
         from linkgraph.algos.wcc import wcc as _wcc
 
-        hres = _wcc(
-            Graph.from_edges(
-                hooks.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-                directed=False,
-            ),
-            engine=engine, num_partitions=P,
-        )
+        hook_graph = Graph.from_edges(
+            hooks.select(F.col("a").alias("src"), F.col("b").alias("dst")), directed=False)
+        hres = _wcc(hook_graph, engine=engine)
         f = hres.state.select(F.col("id").alias("c"), F.col("comp").alias("f"))
         comp = (
             comp.join(f.hint("SHUFFLE_HASH"), "c", "left")
@@ -121,6 +118,7 @@ def msf(
             .repartition(P, "id")
             .localCheckpoint(eager=True)
         )
+        hook_graph.release()  # unpersists the view its wcc built
         metrics.append({"round": rounds, "picked": picked.count()})
 
     if forest_frames:

@@ -67,7 +67,6 @@ def _peeled(result: SuperstepResult, stamp: str) -> SuperstepResult:
 def degeneracy_ordering(
     graph: Graph,
     shell: DataFrame | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Wave-synchronous degeneracy ordering
@@ -78,9 +77,8 @@ def degeneracy_ordering(
 
     g = graph.materialized()
     spark = g.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = g.simple_undirected().repartition(P, "src").persist()
-    edges.count()
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = g.simple_undirected()
 
     sh = shell if shell is not None else kshell(g).state
     dg = sh.agg(F.max("shell").alias("m")).collect()[0]["m"] or 0
@@ -93,16 +91,13 @@ def degeneracy_ordering(
         F.lit(-1).cast("long").alias("rank"),
     ).repartition(P, "id")
     eng = SuperstepEngine(spark)
-    result = _peeled(eng.run(init, _waves(edges, F.lit(dg), "rank", n), max_rounds=max_rounds),
-                     "rank")
-    edges.unpersist()
-    return result
+    return _peeled(eng.run(init, _waves(edges, F.lit(dg), "rank", n), max_rounds=max_rounds),
+                   "rank")
 
 
 def onion_layers(
     graph: Graph,
     shell: DataFrame | None = None,
-    num_partitions: int | None = None,
     max_rounds: int = 10_000,
 ) -> SuperstepResult:
     """Onion-layer ordering (core/onion-layer-ordering.h:44-110).
@@ -111,7 +106,7 @@ def onion_layers(
 
     g = graph.materialized()
     spark = g.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     sh = (shell if shell is not None else kshell(g).state).select(
         "id", F.col("shell").cast("long").alias("core"))

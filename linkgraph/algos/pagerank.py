@@ -62,9 +62,7 @@ def pagerank(
     max_iter: int = 100,
     tol: float = 1e-6,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     resume: bool = False,
-    broadcast_threshold: int = 500_000,
     init_ranks: DataFrame | None = None,
 ) -> SuperstepResult:
     """Returns state (id: long, rank: double); converged per tol·N L1 rule.
@@ -86,7 +84,7 @@ def pagerank(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = rank_edges(g, P, g.directed)
     n = deg.count()
@@ -136,7 +134,7 @@ def pagerank(
             (F.col("rank") / F.col("deg")).alias("w"),
         )
         contribs = (
-            scatter_join(edges, msgs_in, "src", n, broadcast_threshold)
+            scatter_join(edges, msgs_in, "src", n)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("w").alias("msg"))
         )
@@ -189,9 +187,7 @@ def ppr(
     alpha: float = 0.5,
     max_iter: int = 20,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     directed: bool = False,
-    broadcast_threshold: int = 500_000,
 ) -> SuperstepResult:
     """Personalized PageRank — flash semantics (transcribed from
     analytical_engine/apps/flash/ranking/ppr.h:41-73):
@@ -210,7 +206,7 @@ def ppr(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = rank_edges(g, P, directed)
     n = deg.count()
@@ -226,7 +222,7 @@ def ppr(
             F.col("id").alias("src"), (F.col("rank") / F.col("deg")).alias("w")
         )
         contribs = (
-            scatter_join(edges, msgs, "src", n, broadcast_threshold)
+            scatter_join(edges, msgs, "src", n)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("w").alias("msg"))
         )
@@ -251,8 +247,6 @@ def articlerank(
     max_iter: int = 20,
     damping: float = 0.85,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
-    broadcast_threshold: int = 500_000,
 ) -> SuperstepResult:
     """ArticleRank — flash semantics (transcribed from
     analytical_engine/apps/flash/ranking/articlerank.h:40-72):
@@ -268,7 +262,7 @@ def articlerank(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = rank_edges(g, P, True)
     n = deg.count()
@@ -282,7 +276,7 @@ def articlerank(
             (F.lit(damping) * F.col("rank") / (F.col("deg") + F.lit(avg))).alias("w"),
         )
         contribs = (
-            scatter_join(edges, msgs, "src", n, broadcast_threshold)
+            scatter_join(edges, msgs, "src", n)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("w").alias("msg"))
         )

@@ -77,14 +77,18 @@ def is_simple_path(graph: Graph, path: list[int], directed: bool | None = None) 
     if len(path) == 1:
         return verts.where(F.col("id") == path[0]).count() > 0
     use_directed = graph.directed if directed is None else directed
-    e = graph.edges.select("src", "dst") if use_directed else (
-        graph.symmetrized_edges().select("src", "dst")
-    )
+    # a one-shot probe: the few hops (both orientations when
+    # undirected) are broadcast against one scan of the edges, so no
+    # edge frame is symmetrized, deduplicated or stored
+    hops = [(i, int(a), int(b)) for i, (a, b) in enumerate(zip(path, path[1:]))]
+    if not use_directed:
+        hops += [(i, b, a) for i, a, b in hops]
     spark = graph.edges.sparkSession
-    hops = spark.createDataFrame(
-        [(int(a), int(b)) for a, b in zip(path, path[1:])], "src long, dst long"
+    found = (
+        graph.edges.select("src", "dst")
+        .join(F.broadcast(spark.createDataFrame(hops, "hop long, src long, dst long")), ["src", "dst"])
+        .select("hop").distinct().count()
     )
-    found = hops.join(e.dropDuplicates(["src", "dst"]), ["src", "dst"], "left_semi").count()
     return found == len(path) - 1
 
 
@@ -100,10 +104,7 @@ def all_simple_paths(
     array_contains visited check — the relational form of
     all_simple_paths.h's per-vertex frontier stacks."""
     use_directed = graph.directed if directed is None else directed
-    e = (
-        graph.edges.select("src", "dst") if use_directed
-        else graph.symmetrized_edges().select("src", "dst")
-    ).where(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
+    e = graph.simple_directed() if use_directed else graph.simple_undirected()
     spark = graph.edges.sparkSession
     frontier = spark.createDataFrame([(int(source),)], "head long").select(
         F.array(F.col("head")).cast("array<long>").alias("path"), F.col("head")
@@ -171,8 +172,9 @@ def dfs(graph: Graph, source: int, directed: bool | None = None) -> DataFrame:
     nature (see module docstring) — the edge list is coalesced into
     ONE Arrow-batched task."""
     use_directed = graph.directed if directed is None else directed
-    e = graph.edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    return e.coalesce(1).mapInPandas(
+    # the kernel dedups each neighbour list and a self-loop never
+    # reaches an unranked vertex, so the raw edge rows give the preorder
+    return graph.edges.select("src", "dst").coalesce(1).mapInPandas(
         _dfs_kernel(int(source), bool(use_directed)),
         schema="id long, rank long, parent long",
     )

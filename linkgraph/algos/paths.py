@@ -38,28 +38,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algos.traversal import lightest_edges
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
 from linkgraph.joins import state_join
-
-
-def _prep_edges(graph: Graph, P: int, directed: bool | None, reverse: bool) -> DataFrame:
-    use_directed = graph.directed if directed is None else directed
-    # undirected traversal ALWAYS symmetrizes (idempotent under the
-    # trailing dedup): a Graph flagged directed=False is supposed to
-    # store both directions, but from_edges does not enforce that
-    # invariant, and trusting it silently under-reaches on a
-    # one-direction edge list (caught by the diameter_approx gate)
-    e = (
-        graph.symmetrized_edges() if not use_directed else graph.edges
-    ).select("src", "dst")
-    if reverse and use_directed:
-        e = e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return (
-        e.where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-    )
 
 
 def _sources_df(graph: Graph, sources) -> DataFrame:
@@ -78,7 +60,6 @@ def multi_source_bfs(
     reverse: bool = False,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Unweighted BFS from every source simultaneously.
 
@@ -96,8 +77,16 @@ def multi_source_bfs(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _prep_edges(g, P, directed, reverse).persist()
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    use_directed = g.directed if directed is None else directed
+    edges = g.simple_directed() if use_directed else g.simple_undirected()
+    reversed_ = reverse and use_directed
+    if reversed_:
+        # reverse BFS: a column swap of the directed view, re-keyed on
+        # its new src so every round's scatter still moves only the
+        # frontier
+        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")) \
+                     .repartition(P, "src").persist()
     n_edges = edges.count()
 
     init = (
@@ -125,7 +114,8 @@ def multi_source_bfs(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("s", "id", "dist")
-    edges.unpersist()
+    if reversed_:
+        edges.unpersist()
     return result
 
 
@@ -136,7 +126,6 @@ def multi_source_sssp(
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Weighted SSSP from every source simultaneously (the weighted
     generalization of multi_source_bfs — the per-source Dijkstra loop
@@ -156,22 +145,8 @@ def multi_source_sssp(
     g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = g.directed if directed is None else directed
-
-    cols = ["src", "dst"] + ([w] if w else [])
-    base = g.edges.select(*cols)
-    if not use_directed:
-        base = Graph.from_edges(base, directed=True).symmetrized_edges()
-    edges = (
-        base.select("src", "dst",
-                    (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"))
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(P, "src")
-        .persist()
-    )
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = lightest_edges(g, w, g.directed if directed is None else directed)
     n_edges = edges.count()
 
     init = (
@@ -215,14 +190,12 @@ def all_pairs_shortest_path_length(
     sources=None,
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """(src, dst, dist) rows for every reached pair — apps/apsp/
     all_pairs_shortest_path_length.h. ``sources=None`` = true APSP
     (O(V·E) work, like the reference's loop over all vertices);
     pass a source list for the landmark-restricted variant."""
-    res = multi_source_bfs(graph, sources=sources, directed=directed,
-                           engine=engine, num_partitions=num_partitions)
+    res = multi_source_bfs(graph, sources=sources, directed=directed, engine=engine)
     res.state = res.state.select(
         F.col("s").alias("src"), F.col("id").alias("dst"), "dist"
     )
@@ -235,7 +208,6 @@ def closeness_centrality(
     directed: bool | None = None,
     wf_improved: bool = True,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Closeness of each vertex in ``sources`` (None = all vertices).
 
@@ -246,8 +218,7 @@ def closeness_centrality(
     get 0. Returns state (id: long, closeness: double)."""
     n = graph.num_vertices()
     res = multi_source_bfs(graph, sources=sources, directed=directed,
-                           reverse=True, engine=engine,
-                           num_partitions=num_partitions)
+                           reverse=True, engine=engine)
     per_source = (
         res.state.groupBy("s")
         .agg(F.count("*").alias("reached"), F.sum("dist").alias("tot"))
@@ -267,7 +238,6 @@ def harmonic_centrality(
     sources=None,
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Harmonic centrality of each vertex in ``sources`` (None = all):
     harmonic(v) = Σ_u 1/dist(u, v) over vertices that can reach v —
@@ -277,8 +247,7 @@ def harmonic_centrality(
     callers here pass an explicit source set. Unnormalized, like the
     reference. Returns state (id: long, harmonic: double)."""
     res = multi_source_bfs(graph, sources=sources, directed=directed,
-                           reverse=True, engine=engine,
-                           num_partitions=num_partitions)
+                           reverse=True, engine=engine)
     res.state = (
         res.state.groupBy("s")
         .agg(
@@ -295,7 +264,6 @@ def diameter_approx(
     k: int = 16,
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Approximate diameter + radius via two k-source BFS phases
     (flash/measurement/diameter-approx.h:45-108): phase 1 BFS from k
@@ -308,16 +276,14 @@ def diameter_approx(
     both phases deterministic. Returns state = ONE row
     (diameter: long, radius: long); res.rounds = total BFS rounds
     across both phases (each bounded by the true diameter)."""
-    res1 = multi_source_bfs(graph, sources=_min_sources_df(graph, k),
-                            directed=directed, engine=engine,
-                            num_partitions=num_partitions)
+    res1 = multi_source_bfs(graph, sources=_min_sources_df(graph, k), directed=directed,
+                            engine=engine)
     ecc1 = res1.state.groupBy("id").agg(F.max("dist").alias("ecc"))
     srcs2 = (
         ecc1.orderBy(F.col("ecc").desc(), F.col("id").asc()).limit(k)
         .select(F.col("id").alias("s"))
     )
-    res2 = multi_source_bfs(graph, sources=srcs2, directed=directed,
-                            engine=engine, num_partitions=num_partitions)
+    res2 = multi_source_bfs(graph, sources=srcs2, directed=directed, engine=engine)
     ecc2 = res2.state.groupBy("id").agg(F.max("dist").alias("ecc"))
     ecc = (
         ecc1.unionByName(ecc2).groupBy("id").agg(F.max("ecc").alias("ecc"))
@@ -343,7 +309,6 @@ def sssp_path(
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Shortest-path TREE from ``source``: state (id, pred, dist) rows
     for every reached vertex (source row has pred = source, dist 0),
@@ -358,21 +323,8 @@ def sssp_path(
     g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = g.directed if directed is None else directed
-
-    cols = ["src", "dst"] + ([w] if w else [])
-    base = g.edges.select(*cols)
-    if not use_directed:
-        base = Graph.from_edges(base, directed=True).symmetrized_edges()
-    edges = (
-        base.select("src", "dst", (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"))
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(P, "src")
-        .persist()
-    )
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = lightest_edges(g, w, g.directed if directed is None else directed)
     n_edges = edges.count()
 
     INF = float("inf")
@@ -426,7 +378,6 @@ def sssp_average_length(
     weight_col: str | None = None,
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> float:
     """Average shortest-path length over reachable ordered pairs with
     distinct endpoints (apps/sssp/sssp_average_length.h computes
@@ -436,11 +387,9 @@ def sssp_average_length(
     like the reference); a source list gives the sampled estimator."""
     if weighted:
         res = multi_source_sssp(graph, sources=sources, weight_col=weight_col,
-                                directed=directed, engine=engine,
-                                num_partitions=num_partitions)
+                                directed=directed, engine=engine)
     else:
-        res = multi_source_bfs(graph, sources=sources, directed=directed,
-                               engine=engine, num_partitions=num_partitions)
+        res = multi_source_bfs(graph, sources=sources, directed=directed, engine=engine)
     row = (
         res.state.where(F.col("dist") > 0)
         .agg(F.sum("dist").alias("tot"), F.count("*").alias("pairs"))
@@ -456,7 +405,6 @@ def betweenness_centrality(
     normalized: bool = True,
     endpoints: bool = False,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     backward_layered_threshold: int = 100_000_000,
 ) -> SuperstepResult:
     """Brandes betweenness over a source set (unweighted).
@@ -477,9 +425,9 @@ def betweenness_centrality(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     use_directed = g.directed if directed is None else directed
-    edges = _prep_edges(g, P, use_directed, reverse=False).persist()
+    edges = g.simple_directed() if use_directed else g.simple_undirected()
     n_edges = edges.count()
     src_df = _sources_df(g, sources)
     k = src_df.count()
@@ -615,7 +563,6 @@ def betweenness_centrality(
         "id", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )
     depth_sigma.unpersist()
-    edges.unpersist()
     return SuperstepResult(state=state, rounds=rounds, converged=True,
                            metrics=fwd.metrics)
 
@@ -625,7 +572,6 @@ def k_center(
     k: int = 4,
     directed: bool | None = None,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
 ) -> SuperstepResult:
     """Greedy k-center / Gonzalez farthest-point selection
     (flash/measurement/k-center.h:42-75): the first center is the
@@ -640,11 +586,10 @@ def k_center(
     k centers, -1 if unreached; the chosen centers are recorded in
     res.metrics[-1]["centers"]. res.rounds = total BFS rounds.
     """
-    spark = graph.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    sym = _prep_edges(graph, P, directed, False).persist()
-    verts = graph.deduced_vertices().persist()
+    g = graph.materialized()
+    use_directed = g.directed if directed is None else directed
+    sym = g.simple_directed() if use_directed else g.simple_undirected()
+    verts = g.deduced_vertices()
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
     first = (
         verts.join(deg, "id", "left")
@@ -658,10 +603,7 @@ def k_center(
     dis = None  # (id, dis) — NULL means not yet reached by any center
     total_rounds, all_metrics = 0, []
     for i in range(k):
-        res = multi_source_bfs(
-            graph, sources=[centers[-1]], directed=directed,
-            engine=engine, num_partitions=num_partitions,
-        )
+        res = multi_source_bfs(graph, sources=[centers[-1]], directed=directed, engine=engine)
         total_rounds += res.rounds
         all_metrics.extend(res.metrics)
         d_i = res.state.select("id", F.col("dist").alias("nd"))
@@ -685,8 +627,6 @@ def k_center(
             centers.append(int(nxt))
 
     all_metrics.append({"centers": centers})
-    sym.unpersist()
-    verts.unpersist()
     return SuperstepResult(
         state=dis.select("id", F.coalesce("dis", F.lit(-1)).cast("long").alias("dis")),
         rounds=total_rounds, converged=True, metrics=all_metrics,

@@ -96,15 +96,11 @@ def match_pattern(
         raise ValueError("pattern needs at least one edge")
     preds = vertex_predicates or {}
 
-    if directed:
-        adj = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
-    else:
-        adj = (
-            graph.symmetrized_edges()
-            .select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+    # one query over a plan, not the stored view: AQE reuses the dedup
+    # exchange across the extension stages, and on a single call a
+    # stored view only adds its own jobs
+    e = graph.edges if directed else graph.symmetrized_edges()
+    adj = e.select("src", "dst").where(F.col("src") != F.col("dst")).dropDuplicates(["src", "dst"])
 
     def allowed(var: str) -> DataFrame | None:
         """Vertex ids passing var's predicate (None = unconstrained)."""

@@ -36,25 +36,21 @@ def voterank(
     graph: Graph,
     num_seeds: int = 10,
     directed: bool | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Returns the elected seeds: (id: long, vote_rank: long),
     vote_rank = 1-based election round."""
-    spark = graph.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = graph.directed if directed is None else directed
-    e = (
-        (graph.edges if use_directed else graph.symmetrized_edges())
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "dst")
-        .persist()
-    )
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    use_directed = g.directed if directed is None else directed
+    # every election joins the abilities on dst: key the view that way
+    e = (g.simple_directed() if use_directed else g.simple_undirected()) \
+        .repartition(P, "dst").persist()
     n_edges = e.count()
-    verts = graph.deduced_vertices().persist()
+    verts = g.deduced_vertices()
     n = verts.count()
     if n == 0 or n_edges == 0:
+        e.unpersist()
         return verts.select("id", F.lit(0).cast("long").alias("vote_rank")).limit(0)
 
     # integer abilities in units of 1/n_edges: start E, decrement n.
@@ -107,7 +103,6 @@ def voterank(
         )
         w = neww
     e.unpersist()
-    verts.unpersist()
     return spark.createDataFrame(
         [(int(i), int(r)) for i, r in elected], "id long, vote_rank long"
     )

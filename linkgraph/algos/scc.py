@@ -46,7 +46,6 @@ from linkgraph.joins import state_join
 def scc(
     graph: Graph,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     max_outer: int = 100,
 ) -> SuperstepResult:
     """Returns state (id: long, scc: long): scc = min vertex id of the
@@ -55,19 +54,10 @@ def scc(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    fwd = (
-        g.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    fwd = g.simple_directed()
     n_edges = fwd.count()
-    rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")) \
-             .repartition(P, "src").persist()
-    rev.count()
 
     active = g.deduced_vertices().select("id").repartition(P, "id") \
                   .localCheckpoint(eager=True)
@@ -192,8 +182,6 @@ def scc(
     if not converged:
         out = out.unionByName(
             active.select("id", F.lit(None).cast("long").alias("scc")))
-    fwd.unpersist()
-    rev.unpersist()
     return SuperstepResult(state=out.select("id", F.col("scc").cast("long").alias("scc")),
                            rounds=total_rounds, converged=converged,
                            metrics=all_metrics)

@@ -64,11 +64,7 @@ def degree_assortativity(
         ds = _deg_frame(graph, source_degree)
         dt = _deg_frame(graph, target_degree)
     else:
-        e = (
-            graph.adjacency_edges().select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+        e = graph.simple_undirected()
         ds = dt = _deg_frame(
             Graph.from_edges(e, directed=True), "out"
         )  # total degree on the symmetric view
@@ -127,11 +123,7 @@ def average_degree_connectivity(
         ds = _deg_frame(graph, "out")
         dt = _deg_frame(graph, "in")
     else:
-        e = (
-            graph.adjacency_edges().select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+        e = graph.simple_undirected()
         ds = dt = _deg_frame(Graph.from_edges(e, directed=True), "out")
     return (
         e.join(ds.select(F.col("id").alias("src"), F.col("deg").alias("dx")), "src")
@@ -174,17 +166,14 @@ def clustering_directed(graph: Graph) -> DataFrame:
     (id, clustering). T(v) = Σ over support triangles through v of
     the product of the three edge multiplicities B∈{1,2};
     denominator d_tot(d_tot−1) − 2·d_recip (clustering.h:258-267)."""
-    e = graph.edges.select("src", "dst").where(F.col("src") != F.col("dst")).dropDuplicates(
-        ["src", "dst"]
-    )
-    verts = graph.deduced_vertices()
+    g = graph.materialized()
+    e = g.simple_directed()
+    verts = g.deduced_vertices()
     # B multiplicities on the symmetric support
     bsym = (
-        e.select("src", "dst")
-        .unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .groupBy("src", "dst")
         .agg(F.count("*").cast("double").alias("m"))
-        .persist()
     )
     # total degree counts each directed edge once: out + in
     deg_tot = (
@@ -206,7 +195,6 @@ def clustering_directed(graph: Graph) -> DataFrame:
             | ((F.col("ds") == F.col("dd")) & (F.col("src") < F.col("dst")))
         )
         .select("src", "dst", "m")
-        .persist()
     )
     a = ori.select(F.col("src").alias("x"), F.col("dst").alias("y"), F.col("m").alias("mxy"))
     b = ori.select(F.col("src").alias("y"), F.col("dst").alias("z"), F.col("m").alias("myz"))

@@ -99,16 +99,6 @@ def kclique_counts(graph: Graph, ks: tuple[int, ...] = (3, 4, 5)) -> DataFrame:
     return out
 
 
-def _simple_directed(graph: Graph) -> DataFrame:
-    """Directed simple edge set exactly as stored (self-loops and
-    duplicate (src,dst) rows dropped)."""
-    return (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-
-
 def motif_census(graph: Graph) -> DataFrame:
     """Directed triangle census + undirected small-motif counts as ONE
     single-row frame with columns
@@ -118,24 +108,19 @@ def motif_census(graph: Graph) -> DataFrame:
                                              undirected simple graph)
 
     Every column is an independent aggregate subtree over the shared
-    edge frames; Spark runs them as parallel stages under one job."""
-    d = _simple_directed(graph).persist()
-    e_or, deg, _ = _oriented(graph)
-    e_or = e_or.persist()
-    sym = (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .persist()
-    )
+    edge frames; Spark runs them as parallel stages under one job. The
+    frames are plans over the graph's two stored views, so the call
+    keeps no cached frame of its own."""
+    g = graph.materialized()
+    d = g.simple_directed()
+    sym = g.simple_undirected()
+    e_or, deg, _ = _oriented(g)
 
     # --- directed counts -------------------------------------------------
     rev = d.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     recip = (
         d.join(rev, ["src", "dst"], "left_semi")
         .where(F.col("src") < F.col("dst"))
-        .persist()
     )
     # trans: a->b, b->c, a->c (each ordered instance once)
     trans = (
@@ -191,7 +176,7 @@ def motif_census(graph: Graph) -> DataFrame:
     )
 
     # --- undirected counts ------------------------------------------------
-    corners = _corners_from(e_or).persist()
+    corners = _corners_from(e_or)
     tri_total = corners.agg(F.count("*").alias("t"))
     # per-vertex triangle participation
     tri_v = (
@@ -295,12 +280,7 @@ def densest_subgraph(graph: Graph, shell: DataFrame | None = None) -> DataFrame:
     sh = sh.persist()
     cmax = sh.agg(F.max("shell").alias("m")).collect()[0]["m"] or 0
     s_ids = sh.where(F.col("shell") == cmax).select("id").persist()
-    sym = (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
+    sym = graph.simple_undirected()
     ne = (
         sym.join(s_ids.withColumnRenamed("id", "src"), "src", "left_semi")
         .join(s_ids.withColumnRenamed("id", "dst"), "dst", "left_semi")

@@ -16,13 +16,29 @@ both; level = superstep index.
 
 from __future__ import annotations
 
-from dataclasses import replace
-
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
 from linkgraph.joins import scatter_join, state_join
+
+
+def lightest_edges(g: Graph, w: str | None, directed: bool) -> DataFrame:
+    """(src, dst, w) message edges of the weighted traversals over the
+    cut graph `g`: weight column `w` as double (1.0 when None), both
+    directions unless `directed`, self-loops dropped, parallel edges
+    keeping the lightest; hash-partitioned on src and persisted (the
+    caller unpersists it)."""
+    P = int(g.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = g.edges if directed else g.symmetrized_edges()
+    return (
+        e.select("src", "dst", (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"))
+        .where(F.col("src") != F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.min("w").alias("w"))
+        .repartition(P, "src")
+        .persist()
+    )
 
 
 def sssp(
@@ -31,7 +47,6 @@ def sssp(
     weight_col: str | None = None,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
     directed: bool | None = None,
     resume: bool = False,
 ) -> SuperstepResult:
@@ -42,26 +57,26 @@ def sssp(
     """
     w = weight_col or graph.weight_col
     # the cut carries only the graph's own weight column
-    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    return _relax(graph if w == graph.weight_col else graph.project_to_simple(w),
+                  w, source, engine, max_iter, directed, resume)
+
+
+def _relax(
+    graph: Graph,
+    w: str | None,
+    source: int,
+    engine: SuperstepEngine | None,
+    max_iter: int,
+    directed: bool | None,
+    resume: bool,
+) -> SuperstepResult:
+    """The sssp fixpoint over the cut of `graph`, weights from its
+    column `w` (unit weights when None)."""
+    g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    use_directed = g.directed if directed is None else directed
-
-    cols = ["src", "dst"] + ([w] if w else [])
-    base_edges = g.edges.select(*cols)
-    if not use_directed:
-        base_edges = Graph.from_edges(base_edges, directed=True).symmetrized_edges()
-    edges = (
-        base_edges.select(
-            "src", "dst", (F.col(w) if w else F.lit(1.0)).cast("double").alias("w")
-        )
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))  # parallel edges: keep the lightest
-        .repartition(P, "src")
-        .persist()
-    )
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = lightest_edges(g, w, g.directed if directed is None else directed)
     n_edges = edges.count()
 
     verts = g.deduced_vertices()
@@ -105,29 +120,15 @@ def bfs(
     source: int,
     engine: SuperstepEngine | None = None,
     max_iter: int = 10_000,
-    num_partitions: int | None = None,
     directed: bool | None = None,
 ) -> SuperstepResult:
     """BFS levels from source: (id: long, level: long); unreached = -1.
 
-    Unit weights are forced: project_to_simple() keeps the graph's
-    weight_col (its `or` fallback cannot express "explicitly None"),
-    so the projection is stripped of it here — otherwise sssp's own
-    fallback would silently turn BFS levels into weighted distances.
+    Unit weights are forced on the graph's own cut: sssp's
+    weight_col=None falls back to the graph's weight column, which
+    would silently turn BFS levels into weighted distances.
     """
-    res = sssp(
-        replace(
-            graph.project_to_simple(weight_col=None),
-            edges=graph.edges.select("src", "dst"),
-            weight_col=None,
-        ),
-        source,
-        weight_col=None,
-        engine=engine,
-        max_iter=max_iter,
-        num_partitions=num_partitions,
-        directed=directed,
-    )
+    res = _relax(graph, None, source, engine, max_iter, directed, False)
     res.state = res.state.select("id", F.col("dist").cast("long").alias("level"))
     return res
 
@@ -136,7 +137,6 @@ def bfs_tree(
     graph: Graph,
     source: int,
     engine: SuperstepEngine | None = None,
-    num_partitions: int | None = None,
     directed: bool | None = None,
 ) -> SuperstepResult:
     """BFS tree from ``source`` — the "predecessors"/"edges" output
@@ -152,17 +152,12 @@ def bfs_tree(
     converged level frame (edges ⋈ levels on both endpoints, keep
     level(src)+1 == level(dst), min(src) per dst).
     """
-    res = bfs(graph, source, engine=engine,
-              num_partitions=num_partitions, directed=directed)
-    spark = graph.edges.sparkSession
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    res = bfs(graph, source, engine=engine, directed=directed)
     use_directed = graph.directed if directed is None else directed
-    # symmetrize whenever the traversal is undirected (matching
-    # _prep_edges): an undirected graph may store one direction per
-    # pair, and levels reached via the unstored direction would
-    # otherwise get parent = NULL.
-    e = (graph.edges if use_directed else graph.symmetrized_edges()) \
-        .select("src", "dst").where(F.col("src") != F.col("dst"))
+    # the undirected view always symmetrizes: an undirected graph may
+    # store one direction per pair, and levels reached via the
+    # unstored direction would otherwise get parent = NULL.
+    e = graph.simple_directed() if use_directed else graph.simple_undirected()
 
     # res.state is already engine-materialized (localCheckpoint), so
     # the three reads below rescan a cached frame — no extra persist

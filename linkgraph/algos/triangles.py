@@ -26,14 +26,11 @@ from linkgraph.graph import Graph
 
 def _oriented(graph: Graph):
     """Undirected simple edge set oriented by (deg, id); returns
-    (oriented_edges(src,dst), degrees(id,degree), vertices(id))."""
-    und = (
-        graph.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    verts = graph.deduced_vertices()
+    (oriented_edges(src,dst), degrees(id,degree), vertices(id)). A
+    plan over the graph's stored undirected view: nothing here is
+    persisted, so a caller keeps no cached frame of its own."""
+    g = graph.materialized()
+    und = g.simple_undirected()
     deg = und.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
     e = (
         und.join(deg.select(F.col("id").alias("src"), F.col("degree").alias("ds")), "src")
@@ -44,7 +41,7 @@ def _oriented(graph: Graph):
         )
         .select("src", "dst")
     )
-    return e, deg, verts
+    return e, deg, g.deduced_vertices()
 
 
 def _corners_from(e: DataFrame) -> DataFrame:
@@ -57,10 +54,10 @@ def _corners_from(e: DataFrame) -> DataFrame:
 
 def triangle_corners(graph: Graph, oriented=None) -> DataFrame:
     """All triangles as (x, y, z) rows, each triangle exactly once.
-    Pass a precomputed ``_oriented(graph)`` tuple to avoid recomputing
-    the degree-ordered orientation (lcc/transitivity/avg share it)."""
+    Pass a precomputed ``_oriented(graph)`` tuple to avoid rebuilding
+    the degree-ordered orientation plan (lcc/transitivity/avg share it)."""
     e, _, _ = oriented or _oriented(graph)
-    return _corners_from(e.persist() if oriented is None else e)
+    return _corners_from(e)
 
 
 def triangles(graph: Graph, oriented=None) -> DataFrame:
@@ -87,10 +84,10 @@ def triangle_count(graph: Graph) -> int:
 def lcc(graph: Graph) -> DataFrame:
     """Local clustering coefficient (LDBC LCC semantics, undirected):
     lcc(v) = 2*tri(v) / (deg(v)*(deg(v)-1)), 0 when deg < 2.
-    Returns (id, lcc: double). The orientation is computed ONCE and
-    its edge frame persisted across the corner join + degree join."""
-    e, deg, verts = _oriented(graph)
-    ori = (e.persist(), deg, verts)
+    Returns (id, lcc: double). The corner join and the degree join
+    share one orientation plan over the stored undirected view."""
+    ori = _oriented(graph)
+    _, deg, verts = ori
     tri = triangles(graph, oriented=ori)
     return (
         verts.join(tri, "id", "left")
@@ -110,12 +107,11 @@ def lcc(graph: Graph) -> DataFrame:
 def transitivity(graph: Graph) -> float:
     """Global transitivity = 3*triangles / wedges
     (apps/clustering/transitivity.h)."""
-    e, deg, verts = _oriented(graph)
-    tri_total = _corners_from(e.persist()).count()
+    e, deg, _ = _oriented(graph)
+    tri_total = _corners_from(e).count()
     wedges = deg.agg(
         F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("w")
     ).collect()[0]["w"]
-    e.unpersist()
     return 0.0 if not wedges else 3.0 * tri_total / float(wedges)
 
 

@@ -32,7 +32,6 @@ def wcc(
     graph: Graph,
     engine: SuperstepEngine | None = None,
     max_iter: int = 1000,
-    num_partitions: int | None = None,
     resume: bool = False,
 ) -> SuperstepResult:
     """Returns state (id: long, comp: long) with comp = min id of the
@@ -40,17 +39,10 @@ def wcc(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # undirected message graph: both directions, deduped, no self-loops
-    edges = (
-        g.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    edges = g.simple_undirected()
     n_edges = edges.count()
 
     verts = g.deduced_vertices()
@@ -105,5 +97,4 @@ def wcc(
 
     result = eng.run(init, step, max_rounds=max_iter, resume=resume)
     result.state = result.state.select("id", "comp")
-    edges.unpersist()
     return result

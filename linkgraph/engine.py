@@ -349,10 +349,3 @@ def iceberg_available(spark: SparkSession) -> bool:
 def _jsonable(v: Any) -> bool:
     return isinstance(v, (int, float, str, bool, type(None), list, dict))
 
-
-def scalar(df_agg_row, name: str, default=0):
-    """Helper: pull a named aggregate out of a collected Row, treating
-    NULL (empty input) as `default` — the Spark analog of the MPI Sum
-    collective's identity element."""
-    v = df_agg_row[name]
-    return default if v is None else v

@@ -12,9 +12,14 @@ Here the graph IS a pair of DataFrames:
 and every graph-level op (PROJECT_TO_SIMPLE, TO_UNDIRECTED,
 INDUCE_SUBGRAPH, ADD_COLUMN, REPORT_GRAPH, ...) is a declarative
 DataFrame transformation that Catalyst can push down / prune / reorder.
-Partitioning is explicit: `partition_edges` reproduces the reference's
-hash vs segmented (range) vertex partitioning choice
-(analytical_engine/core/loader/arrow_fragment_loader.h:351-389).
+
+A Graph is loaded once, like the reference's fragment: `materialized()`
+stores the input cut (edges projected to src, dst [, weight] plus the
+vertex ids), and the simple edge views every algorithm traverses
+(`simple_undirected()`, `simple_directed()`) are built from that cut
+once, hash-partitioned on src and persisted. `release()` is the one
+point that frees them; until then every algorithm call on the Graph
+reads the same stored rows.
 """
 
 from __future__ import annotations
@@ -45,6 +50,9 @@ class Graph:
     # memoised input cut (see materialized()); init=False, so graphs
     # derived with dataclasses.replace() never inherit it
     _cut: "Graph | None" = field(default=None, init=False, repr=False, compare=False)
+    # simple edge views of the cut (see _view()); one dict, shared with
+    # the cut, so release() frees the views together with the cut
+    _views: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     # -- construction -------------------------------------------------
 
@@ -99,14 +107,20 @@ class Graph:
             ids = self.vertices.select("id") if self.vertices is not None else cut.deduced_vertices()
             cut.vertices = _checkpoint(ids)
             cut._cut = cut
+            cut._views = self._views
             self._cut = cut
         return self._cut
 
     def release(self) -> None:
-        """Drop the memoised cut; the next algorithm call takes a new
-        one. Spark's ContextCleaner frees the stored blocks once the
-        JVM collects the checkpointed RDD (unpersist() on a local
-        checkpoint frees nothing in PySpark 4.1.2)."""
+        """Drop the memoised cut and unpersist its edge views; the next
+        algorithm call takes a new cut. Spark's ContextCleaner frees the
+        cut's stored blocks once the JVM collects the checkpointed RDD
+        (unpersist() on a local checkpoint frees nothing in PySpark
+        4.1.2); the views are persisted frames, so they are unpersisted
+        here."""
+        for view in self._views.values():
+            view.unpersist()
+        self._views.clear()
         self._cut = None
 
     # -- projections / views (PROJECT_TO_SIMPLE, TO_UNDIRECTED, ...) ---
@@ -146,21 +160,41 @@ class Graph:
 
     def simple_undirected(self) -> DataFrame:
         """The simple undirected view as (src, dst): both directions,
-        self-loops dropped, parallel edges collapsed. A plan, not
-        stored: callers partition and persist it as their supersteps
-        need."""
-        return (
-            self.symmetrized_edges()
-            .select("src", "dst")
-            .where(F.col("src") != F.col("dst"))
-            .dropDuplicates(["src", "dst"])
-        )
+        self-loops dropped, parallel edges collapsed; stored once per
+        Graph (see _view). Always symmetrizes, so a directed=False graph
+        that stores one direction per pair is traversed both ways."""
+        return self._view("simple_undirected", lambda cut: cut.symmetrized_edges())
 
-    def adjacency_edges(self) -> DataFrame:
-        """Edges as traversed by undirected algorithms: for a directed
-        graph, both directions; for an (already symmetric) undirected
-        graph, the stored edges."""
-        return self.symmetrized_edges() if self.directed else self.edges
+    def simple_directed(self) -> DataFrame:
+        """The simple directed view as (src, dst): the stored
+        directions, self-loops dropped, parallel edges collapsed;
+        stored once per Graph (see _view)."""
+        return self._view("simple_directed", lambda cut: cut.edges)
+
+    def _view(self, name: str, edges_of) -> DataFrame:
+        """The view `name` of the cut, built once from `edges_of(cut)`:
+        hash-partitioned on src (the scatter key of every superstep,
+        so the engine's shuffled-hash scatter never moves it) and
+        persisted, then memoised beside the cut until release(). A
+        persist, not a local checkpoint: a checkpoint taken after the
+        repartition loses the hash partitioning under AQE. P is the
+        session's spark.sql.shuffle.partitions. The dedup runs inside
+        the src partitions (they cluster every (src, dst) pair), so a
+        view costs one shuffle."""
+        cut = self.materialized()
+        if name not in self._views:
+            P = int(cut.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+            view = (
+                edges_of(cut)
+                .select("src", "dst")
+                .where(F.col("src") != F.col("dst"))
+                .repartition(P, "src")
+                .dropDuplicates(["src", "dst"])
+                .persist()
+            )
+            view.count()
+            self._views[name] = view
+        return self._views[name]
 
     def induce_subgraph(self, vertex_ids: DataFrame) -> "Graph":
         """INDUCE_SUBGRAPH (types.proto:104): keep edges whose both
@@ -279,18 +313,3 @@ class Graph:
             directed=bool(meta["directed"]),
             weight_col=meta.get("weight_col"),
         )
-
-    # -- partitioning (hash vs range, arrow_fragment_loader.h:351-389) --
-
-    def partition_edges(self, num_partitions: int, by: str = "src", strategy: str = "hash") -> "Graph":
-        """Explicitly place edges: hash (HASH_PARTITION) or range
-        (segmented) on an endpoint. Iterative jobs co-partition the
-        vertex-state frame on the same key so the per-superstep join
-        does not re-shuffle the edge side."""
-        if strategy == "hash":
-            e = self.edges.repartition(num_partitions, F.col(by))
-        elif strategy == "range":
-            e = self.edges.repartitionByRange(num_partitions, F.col(by))
-        else:
-            raise ValueError(f"strategy must be hash/range, got {strategy!r}")
-        return replace(self, edges=e)

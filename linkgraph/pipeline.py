@@ -624,7 +624,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     docs = _docs(spark, sf_dir).select("doc_id")
     g = Graph.from_edges(pairs, directed=True)
-    comp = wcc(g).state  # (id, comp) — comp = min doc id of the cluster
+    try:
+        comp = wcc(g).state  # (id, comp) — comp = min doc id of the cluster
+    finally:
+        g.release()  # the state is engine-stored; free the view wcc read
     return (
         docs.join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
         .select("doc_id", F.coalesce("comp", F.col("doc_id")).alias("canonical_id"))

@@ -313,7 +313,13 @@ def merge_edges_into_components(
         from linkgraph.algos.wcc import wcc
         from linkgraph.graph import Graph
 
-        res = wcc(Graph.from_edges(comp_edges, directed=False))
+        comp_graph = Graph.from_edges(comp_edges, directed=False)
+        try:
+            res = wcc(comp_graph)
+        finally:
+            # wcc's state is engine-stored: the graph's view can go
+            # now, or every micro-batch would pin one more cached frame
+            comp_graph.release()
         mapping = res.state.where(F.col("id") != F.col("comp")).select(
             F.col("id").alias("comp"), F.col("comp").alias("new_comp")
         )

@@ -110,7 +110,8 @@ def test_run_algo_resume_continues_from_checkpoint(spark, tmp_path, algo, kill, 
     ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
     env = {**os.environ, "SPARK_GRAFT_CPUS": "2", "SPARK_DRIVER_MEMORY": "1g"}
     base = [sys.executable, os.path.join(REPO, "jobs", "run_algo.py"), algo,
-            "--edges", edges, "--checkpoint-dir", ckpt, "--checkpoint-every", "1"]
+            "--edges", edges, "--checkpoint-dir", ckpt, "--checkpoint-every", "1",
+            "--partitions", "2"]
 
     def recorded_rounds():
         with open(os.path.join(ckpt, "metrics.jsonl")) as fh:
