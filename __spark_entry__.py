@@ -93,6 +93,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """PageRank over the derived link graph at sf0.001, top-20."""
     g = part_graph(spark, "/root/testdata/sf0.001")
     res = pagerank(g, alpha=PR_ALPHA, max_iter=20, tol=1e-6)
+    g.release()
     return res.state.orderBy(F.col("rank").desc(), F.col("id").asc()).limit(20)
 
 
@@ -115,18 +116,24 @@ def _q_degree_centrality(spark, sf_dir):
 def _q_pagerank(spark, sf_dir):
     g = part_graph(spark, sf_dir)
     res = pagerank(g, alpha=PR_ALPHA, max_iter=PR_ITERS, tol=0.0)
+    g.release()
     return res.state.select("id", F.round("rank", 8).alias("rank"))
 
 
 def _q_wcc(spark, sf_dir):
     """Delta-frontier WCC against a recursive-CTE oracle."""
-    return wcc(part_graph(spark, sf_dir)).state.select("id", "comp")
+    g = part_graph(spark, sf_dir)
+    res = wcc(g)
+    g.release()
+    return res.state.select("id", "comp")
 
 
 def _q_cdlp(spark, sf_dir):
     """LDBC label propagation (the two-agg join plan of
     linkgraph/algos/cdlp.py) against one unrolled histogram oracle."""
-    res = cdlp(part_graph(spark, sf_dir), max_round=CDLP_ROUNDS)
+    g = part_graph(spark, sf_dir)
+    res = cdlp(g, max_round=CDLP_ROUNDS)
+    g.release()
     return res.state.select("id", "label")
 
 
@@ -213,6 +220,7 @@ def _q_sssp(spark, sf_dir):
     _assert_unroll(res, BFS_LAYERS, "sssp")
     resp = sssp_path(g, source=source, weight_col="weight", directed=False)
     _assert_unroll(resp, BFS_LAYERS, "sssp_path")
+    g.release()
     return (
         resp.state.select("id", "pred", F.round("dist", 8).alias("dist"))
         .join(res.state.select("id", F.round("dist", 8).alias("dist_bf")), "id")
@@ -222,6 +230,7 @@ def _q_sssp(spark, sf_dir):
 def _q_hits(spark, sf_dir):
     g = part_graph(spark, sf_dir)
     res = hits(g, max_iter=HITS_ITERS, tol=0.0)
+    g.release()
     return res.state.select(
         "id", F.round("hub", 8).alias("hub"), F.round("auth", 8).alias("auth")
     )
@@ -239,6 +248,7 @@ def _q_kshell(spark, sf_dir):
     _assert_unroll(res, KSHELL_LAYERS, "kshell")
     resc = kcore(g, k=KCORE_K)
     _assert_unroll(resc, KCORE_LAYERS, "kcore")
+    g.release()
     return res.state.select("id", "shell").join(
         resc.state.select("id", "in_core"), "id"
     )
@@ -254,6 +264,7 @@ def _q_eig_katz(spark, sf_dir):
     g = part_graph(spark, sf_dir)
     res = eigenvector_centrality(g, max_iter=EIG_ITERS, tol=0.0)
     resk = katz_centrality(g, alpha=KATZ_ALPHA, beta=1.0, max_iter=KATZ_ITERS, tol=0.0)
+    g.release()
     return res.state.select("id", F.round("centrality", 8).alias("eig")).join(
         resk.state.select("id", F.round("centrality", 8).alias("katz")), "id"
     )
@@ -276,6 +287,7 @@ def _q_closeness(spark, sf_dir):
     _assert_unroll(res, MSBFS_LAYERS, "closeness")
     resh = harmonic_centrality(g, sources=srcs, directed=False)
     _assert_unroll(resh, MSBFS_LAYERS, "harmonic")
+    g.release()
     return res.state.select("id", F.round("closeness", 8).alias("closeness")).join(
         resh.state.select("id", F.round("harmonic", 8).alias("harmonic")), "id"
     )
@@ -291,6 +303,7 @@ def _q_apsp(spark, sf_dir):
         g, sources=_min_sources(g, APSP_SOURCES), directed=False
     )
     _assert_unroll(res, MSBFS_LAYERS, "apsp")
+    g.release()
     return res.state.select("src", "dst", "dist")
 
 
@@ -303,6 +316,7 @@ def _q_avg_length(spark, sf_dir):
     g = part_graph(spark, sf_dir)
     res = multi_source_bfs(g, sources=_min_sources(g, AVGLEN_SOURCES), directed=False)
     _assert_unroll(res, MSBFS_LAYERS, "sssp_avg_length")
+    g.release()
     uw = (
         res.state.where(F.col("dist") > 0)
         .agg(F.round(F.sum("dist") / F.count("*"), 8).alias("avg_length"))
@@ -314,6 +328,7 @@ def _q_avg_length(spark, sf_dir):
         weight_col="weight", directed=False,
     )
     _assert_unroll(resw, AVGLEN_W_LAYERS, "sssp_avg_length_w")
+    gw.release()
     w = (
         resw.state.where(F.col("dist") > 0)
         .agg(F.round(F.sum("dist") / F.count("*"), 8).alias("avg_length_w"))
@@ -331,6 +346,7 @@ def _q_betweenness(spark, sf_dir):
         g, sources=_min_sources(g, BETW_SOURCES), directed=False, normalized=True
     )
     _assert_unroll(res, 2 * BETW_LAYERS + 1, "betweenness")
+    g.release()
     return res.state.select("id", F.round("betweenness", 8).alias("betweenness"))
 
 
@@ -345,6 +361,7 @@ def _q_louvain_full(spark, sf_dir):
     g = Graph.from_edges(edges, directed=True, weight_col="weight")
     res = louvain(g, max_round=LOUVAIN_FULL_ROUNDS,
                   max_levels=LOUVAIN_FULL_LEVELS, force_all_levels=True)
+    g.release()
     return res.state.select("id", "community")
 
 
@@ -363,7 +380,9 @@ def _q_scc(spark, sf_dir):
         F.when(even, F.col("src")).otherwise(F.col("dst")).alias("src"),
         F.when(even, F.col("dst")).otherwise(F.col("src")).alias("dst"),
     )
-    res = scc(Graph.from_edges(de, directed=True))
+    g = Graph.from_edges(de, directed=True)
+    res = scc(g)
+    g.release()
     return res.state.select("id", "scc")
 
 
@@ -435,6 +454,7 @@ def _q_matching_family(spark, sf_dir):
     r3 = min_dominating_set(g)
     _assert_unroll(r3, MDS_UNROLL, "min_dominating_set")
     ec = min_edge_cover_size(g, matching=r2)
+    g.release()
     return (
         r1.state.select("id", "in_mis")
         .join(r2.state.select("id", "match"), "id")
@@ -455,6 +475,7 @@ def _q_msf(spark, sf_dir):
     th = e.where((F.col("src") * 1000003 + F.col("dst")) % 24 == 0)
     g = Graph.from_edges(th, directed=False, weight_col="weight")
     res = msf(g, weight_col="weight")
+    g.release()
     return res.state.agg(F.round(F.sum("weight"), 8).alias("msf_weight"))
 
 
@@ -473,6 +494,7 @@ def _q_diameter(spark, sf_dir):
     _assert_unroll(res, 2 * DIAM_LAYERS, "diameter_approx")
     resk = k_center(g, k=KCENTER_K, directed=False)
     _assert_unroll(resk, KCENTER_K * DIAM_LAYERS, "k_center")
+    g.release()
     return resk.state.select("id", "dis").crossJoin(F.broadcast(res.state))
 
 
@@ -488,6 +510,7 @@ def _q_rank_family(spark, sf_dir):
     source = g.deduced_vertices().agg(F.min("id")).collect()[0][0]
     res = ppr(g, source=int(source), alpha=PPR_ALPHA, max_iter=PPR_ITERS)
     resa = articlerank(g, max_iter=AR_ITERS, damping=AR_DAMPING)
+    g.release()
     return res.state.select("id", F.round("rank", 8).alias("ppr")).join(
         resa.state.select("id", F.round("rank", 8).alias("articlerank")), "id"
     )
@@ -500,8 +523,10 @@ def _q_coloring(spark, sf_dir):
     checkable."""
     from linkgraph.algos.coloring import greedy_color
 
-    res = greedy_color(_subgraph_graph(spark, sf_dir))
+    g = _subgraph_graph(spark, sf_dir)
+    res = greedy_color(g)
     _assert_unroll(res, COLOR_UNROLL, "greedy_color")
+    g.release()
     return res.state.select("id", "color")
 
 
@@ -512,9 +537,9 @@ def _q_fluid(spark, sf_dir):
     argmax compares bit-identical doubles in both engines."""
     from linkgraph.algos.coloring import fluid_community
 
-    res = fluid_community(
-        part_graph(spark, sf_dir), n_communities=FLUID_S, max_round=FLUID_ROUNDS
-    )
+    g = part_graph(spark, sf_dir)
+    res = fluid_community(g, n_communities=FLUID_S, max_round=FLUID_ROUNDS)
+    g.release()
     return res.state.select("id", "lab")
 
 
@@ -889,7 +914,7 @@ def _q_ordering(spark, sf_dir):
     g = _subgraph_graph(spark, sf_dir)
     rsh = kshell(g)
     _assert_unroll(rsh, S6_HINDEX_LAYERS, "s6 kshell")
-    sh = rsh.state.persist()
+    sh = rsh.state
     r1 = degeneracy_ordering(g, shell=sh)
     _assert_unroll(r1, DEGEN_UNROLL, "degeneracy_ordering")
     r2 = onion_layers(g, shell=sh)
@@ -900,6 +925,7 @@ def _q_ordering(spark, sf_dir):
     from linkgraph.algos.cores import k_core_search
 
     rk = k_core_search(g, k=KCS_K)
+    g.release()
     return (
         sh.select("id", F.col("shell").cast("long").alias("core"))
         .join(r1.state.select("id", F.col("rank").alias("deg_rank")), "id")
@@ -913,8 +939,10 @@ def _q_covers(spark, sf_dir):
     (flash/matching/min-cover.h:43-116) on the %6-thinned graph."""
     from linkgraph.algos.matching import min_vertex_cover
 
-    r = min_vertex_cover(_subgraph_graph(spark, sf_dir))
+    g = _subgraph_graph(spark, sf_dir)
+    r = min_vertex_cover(g)
     _assert_unroll(r, MC_P1_UNROLL + MC_P2_UNROLL, "min_vertex_cover")
+    g.release()
     return r.state.select("id", "in_cover")
 
 

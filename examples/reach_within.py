@@ -26,13 +26,8 @@ from pyspark.sql import DataFrame, functions as F
 
 def make(graph, spark, args):
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = (
-        graph.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    # the graph's stored simple directed view, freed by graph.release()
+    edges = graph.simple_directed()
     k = args.k
     init = graph.deduced_vertices().select(
         "id",

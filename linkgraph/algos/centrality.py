@@ -24,13 +24,6 @@ from linkgraph.graph import Graph
 from linkgraph.joins import scatter_join, state_join
 
 
-def _directed_edges(graph: Graph, P: int) -> DataFrame:
-    e = graph.edges.select("src", "dst") if graph.directed else (
-        graph.to_undirected(dedup=True).edges.select("src", "dst")
-    )
-    return e.dropDuplicates(["src", "dst"]).repartition(P, "src").persist()
-
-
 def eigenvector_centrality(
     graph: Graph,
     max_iter: int = 100,
@@ -42,7 +35,8 @@ def eigenvector_centrality(
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _directed_edges(g, P)
+    # distinct pairs with self-loops, symmetrised on an undirected graph
+    edges = g.edge_view(symmetric=not g.directed, loops=True)
     n_edges = edges.count()
     verts = g.deduced_vertices()
     n = verts.count()
@@ -98,7 +92,6 @@ def eigenvector_centrality(
     result.state = result.state.select(
         "id", (F.col("x") / F.lit(s if s > 0 else 1.0)).alias("centrality")
     )
-    edges.unpersist()
     return result
 
 
@@ -116,7 +109,8 @@ def katz_centrality(
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _directed_edges(g, P)
+    # distinct pairs with self-loops, symmetrised on an undirected graph
+    edges = g.edge_view(symmetric=not g.directed, loops=True)
     n_edges = edges.count()
     verts = g.deduced_vertices()
     n = verts.count()
@@ -154,8 +148,7 @@ def katz_centrality(
         )
 
     result = eng.run(init, step, max_rounds=max_iter)
-    raw = result.state.select("id", "x").persist()
+    raw = result.state.select("id", "x")
     s = raw.agg(F.sqrt(F.sum(F.col("x") * F.col("x"))).alias("s")).collect()[0]["s"] or 1.0
     result.state = raw.select("id", (F.col("x") / F.lit(s if s > 0 else 1.0)).alias("centrality"))
-    edges.unpersist()
     return result

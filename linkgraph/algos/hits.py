@@ -44,12 +44,8 @@ def hits(
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = (
-        g.edges.select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-        .repartition(P, "src")
-        .persist()
-    )
+    # the stored directions as distinct pairs, self-loops kept
+    edges = g.edge_view(symmetric=False, loops=True)
     n_edges = edges.count()
     verts = g.deduced_vertices()
     n = verts.count()
@@ -143,5 +139,4 @@ def hits(
         (F.col("rh") / F.lit(nh if nh > 0 else 1.0)).alias("hub"),
         (F.col("ra") / F.lit(na if na > 0 else 1.0)).alias("auth"),
     )
-    edges.unpersist()
     return result

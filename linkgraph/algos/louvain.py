@@ -37,26 +37,6 @@ from linkgraph.graph import Graph
 from linkgraph.joins import state_join
 
 
-def _weighted_sym_edges(graph: Graph, P: int) -> DataFrame:
-    """Undirected weighted edge frame with BOTH directions present
-    (parallel edges summed); self-loops excluded (they become internal
-    weight separately)."""
-    w = graph.weight_col
-    e = graph.edges.select(
-        "src", "dst", (F.col(w) if w else F.lit(1.0)).cast("double").alias("w")
-    )
-    if graph.directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-        )
-    return (
-        e.where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.sum("w").alias("w"))
-        .repartition(P, "dst")
-    )
-
-
 # community-totals frames with at most this many rows are broadcast in
 # the local-move join; bigger ones (level 0 starts at |V| communities)
 # go through a shuffled-hash join — broadcasting a V-row frame every
@@ -93,10 +73,12 @@ def louvain_local_move(
     def step(state: DataFrame, round_: int):
         state = state.drop("_chg")
         sig = state.groupBy("c").agg(F.sum("k").alias("sig"))
-        labels = state.select(F.col("id").alias("dst"), F.col("c").alias("nc"))
+        # the frame is symmetric: the weight from i to community nc is
+        # summed over the edges into i, so the scatter keys on src
+        labels = state.select(F.col("id").alias("src"), F.col("c").alias("nc"))
         wic = (
-            edges.join(labels.hint("SHUFFLE_HASH"), "dst")
-            .groupBy(F.col("src").alias("id"), "nc")
+            edges.join(labels.hint("SHUFFLE_HASH"), "src")
+            .groupBy(F.col("dst").alias("id"), "nc")
             .agg(F.sum("w").alias("wi"))
         )
         cur = state.select("id", F.col("c").alias("cur"), "k", "internal")
@@ -181,9 +163,10 @@ def louvain_phase1(
     weighted undirected view. Returns state (id, community) — the
     deterministic, oracle-checkable core of the full algorithm."""
     g = graph.materialized()
-    spark = g.edges.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _weighted_sym_edges(g, P).persist()
+    # both directions of every edge (an undirected graph stores both),
+    # parallel edges summed, self-loops dropped (they become internal
+    # weight separately)
+    edges = g.edge_view(symmetric=g.directed, reduce="sum")
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
     nodes = (
         g.deduced_vertices()
@@ -194,7 +177,6 @@ def louvain_phase1(
     res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
                              n_nodes=nodes.count())
     res.state = res.state.select("id", F.col("c").alias("community"))
-    edges.unpersist()
     return res
 
 
@@ -216,7 +198,9 @@ def louvain(
     spark = g.edges.sparkSession
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges = _weighted_sym_edges(g, P).persist()
+    # level 0 reads the graph's stored view (see louvain_phase1);
+    # coarser levels own theirs
+    view = edges = g.edge_view(symmetric=g.directed, reduce="sum")
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
     nodes = (
         g.deduced_vertices()
@@ -280,9 +264,10 @@ def louvain(
                 ),
             )
         )
-        new_edges = inter.repartition(P, "dst").persist()
+        new_edges = inter.repartition(P, "src").persist()
         new_edges.count()
-        edges.unpersist()
+        if edges is not view:
+            edges.unpersist()
         edges = new_edges
         nodes_new = new_nodes.persist()
         n_nodes = nodes_new.count()
@@ -290,7 +275,8 @@ def louvain(
         nodes = nodes_new
         labels.unpersist()
 
-    edges.unpersist()
+    if edges is not view:
+        edges.unpersist()
     nodes.unpersist()
     return SuperstepResult(
         state=mapping.select("id", "community"),
@@ -302,9 +288,7 @@ def louvain(
 def modularity(graph: Graph, labels: DataFrame) -> float:
     """Q = Σ_c [ Σ_in(c)/m2 − (Σ_tot(c)/m2)² ] over the weighted
     undirected view; labels = (id, community)."""
-    spark = graph.edges.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = _weighted_sym_edges(graph, P)
+    edges = graph.edge_view(symmetric=graph.directed, reduce="sum")
     lab = labels.select(F.col(labels.columns[0]).alias("id"),
                         F.col(labels.columns[1]).alias("c"))
     deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))

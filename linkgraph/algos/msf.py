@@ -31,29 +31,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import SuperstepEngine, SuperstepResult
-from linkgraph.graph import Graph
+from linkgraph.graph import Graph, weight_projected
 
 
+@weight_projected
 def msf(
     graph: Graph,
     weight_col: str | None = None,
     engine: SuperstepEngine | None = None,
     max_rounds: int = 100,
 ) -> SuperstepResult:
-    w = weight_col or graph.weight_col
-    # the cut carries only the graph's own weight column
-    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    g = graph.materialized()
     spark = g.edges.sparkSession
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    base = g.edges.select(
-        F.least("src", "dst").alias("src"),
-        F.greatest("src", "dst").alias("dst"),
-        (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"),
-    ).where(F.col("src") != F.col("dst"))
-    # parallel edges: keep the lightest (deterministic)
-    edges = base.groupBy("src", "dst").agg(F.min("w").alias("w")) \
-                .repartition(P, "src").persist()
-    edges.count()
+    # one (src < dst) row per undirected pair, the lightest parallel edge
+    edges = g.edge_view(symmetric=True, reduce="min").where(F.col("src") < F.col("dst"))
 
     verts = g.deduced_vertices()
     comp = verts.select("id", F.col("id").alias("c")) \
@@ -128,7 +120,6 @@ def msf(
         forest = forest.dropDuplicates(["src", "dst"])
     else:
         forest = edges.limit(0).select("src", "dst", "w")
-    edges.unpersist()
     return SuperstepResult(
         state=forest.select("src", "dst", F.col("w").alias("weight")),
         rounds=rounds, converged=converged, metrics=metrics,

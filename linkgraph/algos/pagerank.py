@@ -15,8 +15,8 @@ Python wrapper python/graphscope/analytical/app/pagerank.py:32-121:
 Spark plan per superstep (dataframe mode):
   edges ⋈ state on src  →  groupBy(dst).agg(sum(rank/deg))  →
   left-join back onto state.
-The edge frame is read from the graph's input cut
-(Graph.materialized), hash-partitioned by src once and persisted; with
+The edge frame is the graph's stored edge view (Graph.edge_view),
+hash-partitioned by src once and kept until Graph.release(); with
 spark.sql.shuffle.partitions equal to that partition count, the
 per-round join reuses the edge partitioning and only shuffles the
 V-row rank frame — the DataFrame analog of the reference's "mirrors
@@ -34,18 +34,19 @@ from linkgraph.graph import Graph
 from linkgraph.joins import scatter_join, state_join
 
 
-def rank_edges(g: Graph, P: int, directed: bool) -> tuple[DataFrame, int, DataFrame]:
+def _rank_inputs(g: Graph, directed: bool) -> tuple[DataFrame, int, DataFrame]:
     """(edges, n_edges, deg) of the rank algorithms over the cut graph
-    `g`: the (src, dst) message edges hash-partitioned on src once and
-    persisted (every superstep's scatter reuses this layout), their
-    count, and the (id, deg) out-degree of every vertex.
+    `g`: the (src, dst) message edges, read from the graph's stored
+    view (hash-partitioned on src, so every superstep's scatter reuses
+    that layout), their count, and the (id, deg) out-degree of every
+    vertex.
 
-    Undirected: propagate along both directions of the deduped edge
-    set — to_undirected(dedup=True).edges already contains u→v AND
-    v→u exactly once each (a second symmetrize would double every
+    Directed: every stored row, self-loops and parallel edges counted.
+    Undirected: both directions of the deduped edge set, u→v AND v→u
+    exactly once each (a second symmetrize would double every
     superstep's join/shuffle work; VERDICT r1 "what's wrong" #2)."""
-    edges = g.edges if directed else g.to_undirected(dedup=True).edges
-    edges = edges.select("src", "dst").repartition(P, "src").persist()
+    edges = g.edge_view(symmetric=not directed, loops=True,
+                        reduce="all" if directed else "distinct")
     n_edges = edges.count()
     deg = (
         g.deduced_vertices().join(
@@ -86,10 +87,9 @@ def pagerank(
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges, n_edges, deg = rank_edges(g, P, g.directed)
+    edges, n_edges, deg = _rank_inputs(g, g.directed)
     n = deg.count()
     if n == 0:
-        edges.unpersist()
         return SuperstepResult(state=deg.select("id", F.lit(0.0).alias("rank")),
                                rounds=0, converged=True)
 
@@ -177,7 +177,6 @@ def pagerank(
 
     result = eng.run(init, step, max_rounds=max_iter, resume=resume)
     result.state = result.state.select("id", "rank")
-    edges.unpersist()
     return result
 
 
@@ -208,7 +207,7 @@ def ppr(
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges, n_edges, deg = rank_edges(g, P, directed)
+    edges, n_edges, deg = _rank_inputs(g, directed)
     n = deg.count()
 
     restart = F.when(F.col("id") == source, F.lit(1.0 - alpha)).otherwise(0.0)
@@ -238,7 +237,6 @@ def ppr(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", "rank")
-    edges.unpersist()
     return result
 
 
@@ -264,7 +262,7 @@ def articlerank(
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    edges, n_edges, deg = rank_edges(g, P, True)
+    edges, n_edges, deg = _rank_inputs(g, True)
     n = deg.count()
     avg = (deg.agg(F.sum("deg")).collect()[0][0] or 0) / float(n) if n else 0.0
 
@@ -292,5 +290,4 @@ def articlerank(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", "rank")
-    edges.unpersist()
     return result

@@ -38,9 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.algos.traversal import lightest_edges
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
-from linkgraph.graph import Graph
+from linkgraph.graph import Graph, weight_projected
 from linkgraph.joins import state_join
 
 
@@ -119,6 +118,7 @@ def multi_source_bfs(
     return result
 
 
+@weight_projected
 def multi_source_sssp(
     graph: Graph,
     sources=None,
@@ -140,13 +140,12 @@ def multi_source_sssp(
     (s, dst), and the full-outer merge keeps the smaller of old/new.
     Same scale contract as multi_source_bfs: callers bound |sources|.
     """
-    w = weight_col or graph.weight_col
-    # the cut carries only the graph's own weight column
-    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = lightest_edges(g, w, g.directed if directed is None else directed)
+    # the lightest of parallel edges, self-loops dropped
+    edges = g.edge_view(not (g.directed if directed is None else directed), reduce="min")
     n_edges = edges.count()
 
     init = (
@@ -181,7 +180,6 @@ def multi_source_sssp(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("s", "id", "dist")
-    edges.unpersist()
     return result
 
 
@@ -302,6 +300,7 @@ def _min_sources_df(graph: Graph, k: int) -> DataFrame:
     return graph.deduced_vertices().orderBy("id").limit(k)
 
 
+@weight_projected
 def sssp_path(
     graph: Graph,
     source: int,
@@ -318,13 +317,12 @@ def sssp_path(
     minimum (dist, pred) struct wins — the reference keeps whichever
     message arrived last, which is nondeterministic under MPI; a
     fixed tie-break makes the result oracle-checkable."""
-    w = weight_col or graph.weight_col
-    # the cut carries only the graph's own weight column
-    g = (graph if w == graph.weight_col else graph.project_to_simple(w)).materialized()
+    g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = lightest_edges(g, w, g.directed if directed is None else directed)
+    # the lightest of parallel edges, self-loops dropped
+    edges = g.edge_view(not (g.directed if directed is None else directed), reduce="min")
     n_edges = edges.count()
 
     INF = float("inf")
@@ -360,7 +358,6 @@ def sssp_path(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.where(F.col("dist") != INF).select("id", "pred", "dist")
-    edges.unpersist()
     return result
 
 
@@ -405,7 +402,6 @@ def betweenness_centrality(
     normalized: bool = True,
     endpoints: bool = False,
     engine: SuperstepEngine | None = None,
-    backward_layered_threshold: int = 100_000_000,
 ) -> SuperstepResult:
     """Brandes betweenness over a source set (unweighted).
 
@@ -461,93 +457,48 @@ def betweenness_centrality(
     fwd = eng.run(init, fwd_step, max_rounds=10_000)
     depth_sigma = fwd.state.select("s", "id", "depth", "sigma").persist()
     max_depth = depth_sigma.agg(F.max("depth")).collect()[0][0] or 0
-    pair_rows = depth_sigma.count()
 
     # ---- backward: dependency accumulation, depth D-1 .. 0 ----------
-    # Two strategies, picked by pair-frame size (measured A/B at 64
-    # sources / depth-13 / 1.3M pairs: full-frame 34 s vs layered
-    # 83 s — per-layer materialization overhead dominates small
-    # frames; at S·V ≥ ~10⁸ the full-frame rewrite's O(D·S·V) I/O
-    # dominates instead):
-    #   * small pair frame → full-frame superstep (one plan per depth
-    #     over the whole frame; engine-managed truncation);
-    #   * large pair frame → per-LAYER loop: round d touches only the
-    #     depth-d and depth-(d+1) slices (shortest-path DAG edges
-    #     span exactly one depth), total I/O O(S·V + D·E') instead of
-    #     O(D·S·V). Each layer localCheckpoints; the final union is a
-    #     read of D cached frames, not a recompute.
-    if pair_rows < backward_layered_threshold:
-        binit = depth_sigma.select("s", "id", "depth", "sigma",
-                                   F.lit(0.0).alias("delta")).repartition(P, "id")
+    # one full-frame superstep per depth (a per-layer loop measured
+    # 2.4x slower at 1.3M pairs, BASELINE.md "Betweenness backward-pass
+    # A/B")
+    binit = depth_sigma.select("s", "id", "depth", "sigma",
+                               F.lit(0.0).alias("delta")).repartition(P, "id")
 
-        def bwd_step(state: DataFrame, round_: int):
-            d = max_depth - 1 - round_
-            succ = state.where(F.col("depth") == d + 1).select(
-                "s", F.col("id").alias("dst"), F.col("sigma").alias("sv"),
-                F.col("delta").alias("dv"),
-            )
-            contrib = (
-                edges.join(succ.hint("SHUFFLE_HASH"), "dst")
-                .groupBy("s", F.col("src").alias("id"))
-                .agg(F.sum((1.0 + F.col("dv")) / F.col("sv")).alias("c"))
-            )
-            new_state = (
-                state.join(contrib.hint("SHUFFLE_HASH"), ["s", "id"], "left")
-                .select(
-                    "s", "id", "depth", "sigma",
-                    F.when(
-                        (F.col("depth") == d) & F.col("c").isNotNull(),
-                        F.col("sigma") * F.col("c"),
-                    ).otherwise(F.col("delta")).alias("delta"),
-                )
-            )
-
-            def finalize(df: DataFrame) -> dict:
-                return {"halt": d <= 0, "depth": d, "edges_processed": n_edges}
-
-            return new_state, finalize
-
-        if max_depth > 0:
-            bwd = eng.run(binit, bwd_step, max_rounds=max_depth)
-            deltas = bwd.state.select("s", "id", "delta")
-            bwd_rounds = bwd.rounds
-        else:
-            deltas = binit.select("s", "id", "delta")
-            bwd_rounds = 0
-    else:
-        layers: list[DataFrame] = []
-        deepest = (
-            depth_sigma.where(F.col("depth") == max_depth)
-            .select("s", "id", "sigma", F.lit(0.0).alias("delta"))
-            .repartition(P, "id")
-            .localCheckpoint(eager=True)
+    def bwd_step(state: DataFrame, round_: int):
+        d = max_depth - 1 - round_
+        succ = state.where(F.col("depth") == d + 1).select(
+            "s", F.col("id").alias("dst"), F.col("sigma").alias("sv"),
+            F.col("delta").alias("dv"),
         )
-        layers.append(deepest)
-        prev = deepest  # the depth-(d+1) slice with its deltas
-        bwd_rounds = 0
-        for d in range(max_depth - 1, -1, -1):
-            succ = prev.select("s", F.col("id").alias("dst"),
-                               F.col("sigma").alias("sv"), F.col("delta").alias("dv"))
-            contrib = (
-                edges.join(succ.hint("SHUFFLE_HASH"), "dst")
-                .groupBy("s", F.col("src").alias("id"))
-                .agg(F.sum((1.0 + F.col("dv")) / F.col("sv")).alias("c"))
+        contrib = (
+            edges.join(succ.hint("SHUFFLE_HASH"), "dst")
+            .groupBy("s", F.col("src").alias("id"))
+            .agg(F.sum((1.0 + F.col("dv")) / F.col("sv")).alias("c"))
+        )
+        new_state = (
+            state.join(contrib.hint("SHUFFLE_HASH"), ["s", "id"], "left")
+            .select(
+                "s", "id", "depth", "sigma",
+                F.when(
+                    (F.col("depth") == d) & F.col("c").isNotNull(),
+                    F.col("sigma") * F.col("c"),
+                ).otherwise(F.col("delta")).alias("delta"),
             )
-            layer = (
-                depth_sigma.where(F.col("depth") == d)
-                .join(contrib.hint("SHUFFLE_HASH"), ["s", "id"], "left")
-                .select("s", "id", "sigma",
-                        (F.col("sigma") * F.coalesce("c", F.lit(0.0))).alias("delta"))
-                .repartition(P, "id")
-                .localCheckpoint(eager=True)
-            )
-            layers.append(layer)
-            prev = layer
-            bwd_rounds += 1
+        )
 
-        deltas = layers[0].select("s", "id", "delta")
-        for f in layers[1:]:
-            deltas = deltas.unionByName(f.select("s", "id", "delta"))
+        def finalize(df: DataFrame) -> dict:
+            return {"halt": d <= 0, "depth": d, "edges_processed": n_edges}
+
+        return new_state, finalize
+
+    if max_depth > 0:
+        bwd = eng.run(binit, bwd_step, max_rounds=max_depth)
+        deltas = bwd.state.select("s", "id", "delta")
+        bwd_rounds = bwd.rounds
+    else:
+        deltas = binit.select("s", "id", "delta")
+        bwd_rounds = 0
     rounds = fwd.rounds + bwd_rounds
 
     norm = 1.0 if use_directed else 0.5

@@ -19,28 +19,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
-from linkgraph.graph import Graph
+from linkgraph.graph import Graph, weight_projected
 from linkgraph.joins import scatter_join, state_join
 
 
-def lightest_edges(g: Graph, w: str | None, directed: bool) -> DataFrame:
-    """(src, dst, w) message edges of the weighted traversals over the
-    cut graph `g`: weight column `w` as double (1.0 when None), both
-    directions unless `directed`, self-loops dropped, parallel edges
-    keeping the lightest; hash-partitioned on src and persisted (the
-    caller unpersists it)."""
-    P = int(g.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = g.edges if directed else g.symmetrized_edges()
-    return (
-        e.select("src", "dst", (F.col(w) if w else F.lit(1.0)).cast("double").alias("w"))
-        .where(F.col("src") != F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-        .repartition(P, "src")
-        .persist()
-    )
-
-
+@weight_projected
 def sssp(
     graph: Graph,
     source: int,
@@ -52,13 +35,11 @@ def sssp(
 ) -> SuperstepResult:
     """Returns state (id: long, dist: double); unreached = -1.0.
 
-    weight_col=None means unit weights (= BFS levels as doubles).
+    weight_col=None reads the graph's own weight column; a graph
+    without one has unit weights (= BFS levels as doubles).
     resume=True continues from the engine's latest durable checkpoint.
     """
-    w = weight_col or graph.weight_col
-    # the cut carries only the graph's own weight column
-    return _relax(graph if w == graph.weight_col else graph.project_to_simple(w),
-                  w, source, engine, max_iter, directed, resume)
+    return _relax(graph, graph.weight_col, source, engine, max_iter, directed, resume)
 
 
 def _relax(
@@ -71,12 +52,15 @@ def _relax(
     resume: bool,
 ) -> SuperstepResult:
     """The sssp fixpoint over the cut of `graph`, weights from its
-    column `w` (unit weights when None)."""
+    column `w` (unit weights when None): the lightest of parallel
+    edges, self-loops dropped."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = lightest_edges(g, w, g.directed if directed is None else directed)
+    symmetric = not (g.directed if directed is None else directed)
+    edges = (g.edge_view(symmetric, reduce="min") if w
+             else g.edge_view(symmetric).withColumn("w", F.lit(1.0)))
     n_edges = edges.count()
 
     verts = g.deduced_vertices()
@@ -111,7 +95,6 @@ def _relax(
     result.state = result.state.select(
         "id", F.when(F.col("dist") == INF, F.lit(-1.0)).otherwise(F.col("dist")).alias("dist")
     )
-    edges.unpersist()
     return result
 
 

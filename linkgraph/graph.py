@@ -15,15 +15,18 @@ DataFrame transformation that Catalyst can push down / prune / reorder.
 
 A Graph is loaded once, like the reference's fragment: `materialized()`
 stores the input cut (edges projected to src, dst [, weight] plus the
-vertex ids), and the simple edge views every algorithm traverses
-(`simple_undirected()`, `simple_directed()`) are built from that cut
-once, hash-partitioned on src and persisted. `release()` is the one
-point that frees them; until then every algorithm call on the Graph
-reads the same stored rows.
+vertex ids), and every message edge frame an algorithm traverses
+(`edge_view()`: stored or symmetrised, with or without self-loops,
+distinct pairs, all rows, or the lightest or summed weight per pair)
+is built from that cut once, hash-partitioned on src and persisted.
+`release()` is the one point that frees them; until then every
+algorithm call on the Graph reads the same stored rows.
 """
 
 from __future__ import annotations
 
+import functools
+import inspect
 from dataclasses import dataclass, field, replace
 
 from pyspark import StorageLevel
@@ -35,6 +38,28 @@ def _checkpoint(df: DataFrame) -> DataFrame:
     rows. Serialized MEMORY_AND_DISK: about 12 B per (src, dst) row on
     1M random edges, against 84 B for the default deserialized level."""
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK)
+
+
+def weight_projected(fn):
+    """Decorator for an algorithm `fn(graph, ..., weight_col=None, ...)`:
+    run it on a graph whose own weight column is `weight_col` (the
+    graph's own when None). The cut carries only the graph's own weight
+    column, so another column goes through project_to_simple(), and
+    that derived graph is released when `fn` returns."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def run(graph, *args, **kwargs):
+        w = sig.bind(graph, *args, **kwargs).arguments.get("weight_col") or graph.weight_col
+        if w == graph.weight_col:
+            return fn(graph, *args, **kwargs)
+        derived = graph.project_to_simple(w)
+        try:
+            return fn(derived, *args, **kwargs)
+        finally:
+            derived.release()
+
+    return run
 
 
 @dataclass
@@ -50,7 +75,7 @@ class Graph:
     # memoised input cut (see materialized()); init=False, so graphs
     # derived with dataclasses.replace() never inherit it
     _cut: "Graph | None" = field(default=None, init=False, repr=False, compare=False)
-    # simple edge views of the cut (see _view()); one dict, shared with
+    # edge views of the cut (see edge_view()); one dict, shared with
     # the cut, so release() frees the views together with the cut
     _views: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
@@ -160,41 +185,59 @@ class Graph:
 
     def simple_undirected(self) -> DataFrame:
         """The simple undirected view as (src, dst): both directions,
-        self-loops dropped, parallel edges collapsed; stored once per
-        Graph (see _view). Always symmetrizes, so a directed=False graph
-        that stores one direction per pair is traversed both ways."""
-        return self._view("simple_undirected", lambda cut: cut.symmetrized_edges())
+        self-loops dropped, parallel edges collapsed. Always symmetrizes,
+        so a directed=False graph that stores one direction per pair is
+        traversed both ways."""
+        return self.edge_view(symmetric=True)
 
     def simple_directed(self) -> DataFrame:
         """The simple directed view as (src, dst): the stored
-        directions, self-loops dropped, parallel edges collapsed;
-        stored once per Graph (see _view)."""
-        return self._view("simple_directed", lambda cut: cut.edges)
+        directions, self-loops dropped, parallel edges collapsed."""
+        return self.edge_view(symmetric=False)
 
-    def _view(self, name: str, edges_of) -> DataFrame:
-        """The view `name` of the cut, built once from `edges_of(cut)`:
-        hash-partitioned on src (the scatter key of every superstep,
-        so the engine's shuffled-hash scatter never moves it) and
-        persisted, then memoised beside the cut until release(). A
-        persist, not a local checkpoint: a checkpoint taken after the
-        repartition loses the hash partitioning under AQE. P is the
-        session's spark.sql.shuffle.partitions. The dedup runs inside
-        the src partitions (they cluster every (src, dst) pair), so a
-        view costs one shuffle."""
+    def edge_view(self, symmetric: bool, loops: bool = False, reduce: str = "distinct") -> DataFrame:
+        """A message edge frame of the cut, stored once per Graph.
+
+        symmetric: both directions of every stored edge, or the stored
+        directions only. loops: keep self-loops (once per direction) or
+        drop them. reduce: "distinct" keeps one (src, dst) row per pair,
+        "all" keeps every row (parallel edges counted), "min" and "sum"
+        keep one (src, dst, w) row per pair with the lightest or the
+        summed weight (w = weight_col as double, 1.0 when the graph has
+        none). A "min" view of an unweighted graph is the distinct view
+        with w = 1.0, so it stores nothing of its own.
+
+        Built from the cut with one repartition(P, "src") (the scatter
+        key of every superstep, so the engine's shuffled-hash scatter
+        never moves it; P is the session's spark.sql.shuffle.partitions),
+        reduced inside those partitions (they cluster every (src, dst)
+        pair) and persisted, then memoised beside the cut until
+        release(). A persist, not a local checkpoint: a checkpoint taken
+        after the repartition loses the hash partitioning under AQE."""
+        if reduce not in ("distinct", "all", "min", "sum"):
+            raise ValueError(f"reduce must be distinct/all/min/sum, got {reduce!r}")
+        if reduce == "min" and self.weight_col is None:
+            return self.edge_view(symmetric, loops).withColumn("w", F.lit(1.0))
         cut = self.materialized()
-        if name not in self._views:
+        key = (symmetric, loops, reduce)
+        if key not in self._views:
             P = int(cut.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-            view = (
-                edges_of(cut)
-                .select("src", "dst")
-                .where(F.col("src") != F.col("dst"))
-                .repartition(P, "src")
-                .dropDuplicates(["src", "dst"])
-                .persist()
-            )
+            e = cut.symmetrized_edges() if symmetric else cut.edges
+            weighted = reduce in ("min", "sum")
+            w = (F.col(self.weight_col) if self.weight_col else F.lit(1.0)).cast("double")
+            e = e.select("src", "dst", *([w.alias("w")] if weighted else []))
+            if not loops:
+                e = e.where(F.col("src") != F.col("dst"))
+            e = e.repartition(P, "src")
+            if reduce == "distinct":
+                e = e.dropDuplicates(["src", "dst"])
+            elif weighted:
+                agg = F.min("w") if reduce == "min" else F.sum("w")
+                e = e.groupBy("src", "dst").agg(agg.alias("w"))
+            view = e.persist()
             view.count()
-            self._views[name] = view
-        return self._views[name]
+            self._views[key] = view
+        return self._views[key]
 
     def induce_subgraph(self, vertex_ids: DataFrame) -> "Graph":
         """INDUCE_SUBGRAPH (types.proto:104): keep edges whose both

@@ -398,13 +398,11 @@ def refresh_pagerank_snapshot(
     from linkgraph.graph import Graph
 
     prev, snap = _latest_snapshot(spark, state_path, ("id", "rank"))
-    res = pagerank(
-        Graph.from_edges(full_edges.select("src", "dst"), directed=True),
-        alpha=alpha,
-        tol=tol,
-        max_iter=max_iter,
-        init_ranks=prev,
-    )
+    g = Graph.from_edges(full_edges.select("src", "dst"), directed=True)
+    try:
+        res = pagerank(g, alpha=alpha, tol=tol, max_iter=max_iter, init_ranks=prev)
+    finally:
+        g.release()  # the ranks are engine-stored; once per micro-batch
     res.state.withColumn("snap", F.lit(snap + 1)).write.mode("append").partitionBy(
         "snap"
     ).parquet(state_path)

@@ -1,6 +1,7 @@
 """The input cut (Graph.materialized): one evaluation of the source
 plan per Graph, reused by every engine-driven algorithm call on it, and
-the simple edge views built once from it and freed by Graph.release()."""
+the edge views (Graph.edge_view) built once from it and freed by
+Graph.release()."""
 
 from __future__ import annotations
 
@@ -14,23 +15,28 @@ import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
+import __spark_entry__ as ent
 from linkgraph import oracle
 from linkgraph.algos.biconnectivity import biconnectivity
 from linkgraph.algos.cdlp import cdlp
+from linkgraph.algos.centrality import eigenvector_centrality, katz_centrality
 from linkgraph.algos.cores import kcore
+from linkgraph.algos.hits import hits
+from linkgraph.algos.louvain import louvain, louvain_phase1, modularity
 from linkgraph.algos.matching import mis
 from linkgraph.algos.msf import msf
-from linkgraph.algos.pagerank import pagerank, rank_edges
+from linkgraph.algos.pagerank import articlerank, pagerank, ppr
+from linkgraph.algos.paths import betweenness_centrality, multi_source_sssp, sssp_path
 from linkgraph.algos.structure import clustering_directed
 from linkgraph.algos.subgraph import motif_census
-from linkgraph.algos.traversal import bfs_tree
+from linkgraph.algos.traversal import bfs_tree, sssp
 from linkgraph.algos.triangles import lcc, triangle_corners
 from linkgraph.algos.wcc import wcc
 from linkgraph.engine import SuperstepEngine
 from linkgraph.graph import Graph
 from linkgraph.joins import scatter_join
 from linkgraph.pipeline import dedup_clusters
-from linkgraph.streaming import merge_edges_into_components
+from linkgraph.streaming import merge_edges_into_components, refresh_pagerank_snapshot
 
 ALGOS = pathlib.Path(__file__).resolve().parent.parent / "linkgraph" / "algos"
 
@@ -61,9 +67,10 @@ def _assert_pagerank(state, src, dst, **kw):
 
 
 def _assert_edge_side_not_shuffled(edges, msgs) -> None:
-    """The forced shuffled-hash scatter of `msgs` over the persisted
-    `edges` has no Exchange between the join and the edges' scan."""
-    out = scatter_join(edges, msgs, "src", 10**6, broadcast_threshold=0).groupBy("dst").agg(F.sum("w"))
+    """The forced shuffled-hash scatter of `msgs` (src, m) over the
+    persisted `edges` has no Exchange between the join and the edges'
+    scan."""
+    out = scatter_join(edges, msgs, "src", 10**6, broadcast_threshold=0).groupBy("dst").agg(F.sum("m"))
     out.collect()
     plan = out._jdf.queryExecution().executedPlan().toString()
     # (the persisted frame's own plan nests a second Final/Initial pair)
@@ -78,29 +85,70 @@ def _assert_edge_side_not_shuffled(edges, msgs) -> None:
         "\n".join(final)
 
 
-def test_rank_edges_keep_src_partitioning_in_shuffled_scatter(spark):
-    """The cut is taken before the repartition, so the persisted edge
-    frame keeps its src hash partitioning: the shuffled-hash scatter
-    moves only the message side, never E."""
-    src, dst = _edges()
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = Graph.from_edges(_frame(spark, src, dst)).materialized()
-    edges, _, deg = rank_edges(g, P, directed=True)
-    msgs = deg.select(F.col("id").alias("src"), F.lit(1.0).alias("w")).repartition(P, "src")
-    _assert_edge_side_not_shuffled(edges, msgs)
-    edges.unpersist()
+# every (symmetric, loops, reduce) edge view an algorithm reads
+VIEW_KINDS = {
+    "stored-noloops-distinct": (False, False, "distinct"),    # simple_directed
+    "symmetric-noloops-distinct": (True, False, "distinct"),  # simple_undirected
+    "stored-loops-all": (False, True, "all"),                 # directed pagerank family
+    "stored-loops-distinct": (False, True, "distinct"),       # hits, directed eigenvector/katz
+    "symmetric-loops-distinct": (True, True, "distinct"),     # undirected pagerank, ppr, eigenvector/katz
+    "stored-noloops-min": (False, False, "min"),              # directed sssp family
+    "symmetric-noloops-min": (True, False, "min"),            # undirected sssp family, msf
+    "stored-noloops-sum": (False, False, "sum"),              # louvain, undirected graph
+    "symmetric-noloops-sum": (True, False, "sum"),            # louvain, directed graph
+}
 
 
-def test_simple_undirected_keeps_src_partitioning_in_shuffled_scatter(spark):
-    """The memoised undirected view is persisted after its repartition,
-    so the shuffled-hash scatter over it moves only the message side."""
+@pytest.mark.parametrize("kind", sorted(VIEW_KINDS))
+def test_edge_views_keep_src_partitioning_in_shuffled_scatter(spark, kind):
+    """Every edge view is persisted after its repartition, so the
+    shuffled-hash scatter over it moves only the message side, never E."""
     src, dst = _edges()
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    g = Graph.from_edges(_frame(spark, src, dst))
+    g = Graph.from_edges(_frame(spark, src, dst).withColumn("w", F.lit(2.0)), weight_col="w")
+    symmetric, loops, reduce = VIEW_KINDS[kind]
     msgs = g.materialized().deduced_vertices() \
-        .select(F.col("id").alias("src"), F.lit(1.0).alias("w")).repartition(P, "src")
-    _assert_edge_side_not_shuffled(g.simple_undirected(), msgs)
+        .select(F.col("id").alias("src"), F.lit(1.0).alias("m")).repartition(P, "src")
+    _assert_edge_side_not_shuffled(g.edge_view(symmetric, loops, reduce), msgs)
     g.release()
+
+
+def _weighted_edges(seed: int = 7) -> pd.DataFrame:
+    """(src, dst, w) rows with self-loops and parallel edges."""
+    rng = np.random.default_rng(seed)
+    return pd.DataFrame({"src": rng.integers(0, 30, 400), "dst": rng.integers(0, 30, 400),
+                         "w": rng.integers(1, 6, 400).astype("float64")}).astype({"src": "int64", "dst": "int64"})
+
+
+@pytest.mark.parametrize("directed", [True, False], ids=["directed", "undirected"])
+def test_edge_views_hold_the_expected_rows(spark, directed):
+    """Each view holds the rows its (symmetric, loops, reduce) names,
+    against a pandas derivation of the same input; an unweighted
+    graph's "min" view is its distinct view with w = 1.0."""
+    pdf = _weighted_edges()
+    g = Graph.from_edges(spark.createDataFrame(pdf), directed=directed, weight_col="w")
+    for symmetric, loops, reduce in VIEW_KINDS.values():
+        e = pd.concat([pdf, pdf.rename(columns={"src": "dst", "dst": "src"})]) if symmetric else pdf
+        e = e if loops else e[e["src"] != e["dst"]]
+        if reduce == "distinct":
+            e = e[["src", "dst"]].drop_duplicates()
+        elif reduce == "all":
+            e = e[["src", "dst"]]
+        else:
+            e = e.groupby(["src", "dst"], as_index=False)["w"].agg(reduce)
+        got = g.edge_view(symmetric, loops, reduce).toPandas()
+        cols = list(e.columns)
+        assert got.columns.tolist() == cols
+        assert got.sort_values(cols).to_numpy().tolist() == e.sort_values(cols).to_numpy().tolist()
+    g.release()
+
+    unweighted = Graph.from_edges(spark.createDataFrame(pdf[["src", "dst"]]), directed=directed)
+    got = unweighted.edge_view(True, reduce="min").toPandas()
+    assert (got["w"] == 1.0).all()
+    assert got[["src", "dst"]].sort_values(["src", "dst"]).to_numpy().tolist() == \
+        unweighted.simple_undirected().toPandas().sort_values(["src", "dst"]).to_numpy().tolist()
+    assert len(unweighted._views) == 1  # the min view stored nothing of its own
+    unweighted.release()
 
 
 def test_source_evaluated_once_across_calls(spark, tmp_path):
@@ -187,7 +235,7 @@ def test_algorithms_share_one_undirected_view(spark, monkeypatch):
     views = []
     for run in (wcc, cdlp, lambda g: kcore(g, k=2), lambda g: triangle_corners(g).count(), mis):
         run(g)
-        views.append(g._views["simple_undirected"])
+        views.append(g.simple_undirected())
     assert len(calls) == 1
     assert all(view is views[0] for view in views)
     assert views[0].storageLevel != StorageLevel.NONE
@@ -206,7 +254,29 @@ ONE_SHOT = {
     "clustering_directed": lambda g: clustering_directed(g).count(),
     "msf": lambda g: msf(g).state.count(),
     "biconnectivity": lambda g: biconnectivity(g).bcc.count(),
+    "pagerank": lambda g: pagerank(g, max_iter=3).state.count(),
+    "ppr": lambda g: ppr(g, source=0, max_iter=3).state.count(),
+    "articlerank": lambda g: articlerank(g, max_iter=3).state.count(),
+    "hits": lambda g: hits(g, max_iter=3).state.count(),
+    "eigenvector": lambda g: eigenvector_centrality(g, max_iter=3).state.count(),
+    "katz": lambda g: katz_centrality(g, max_iter=3).state.count(),
+    # a weight column other than the graph's own: a derived graph
+    "sssp": lambda g: sssp(g, 0, weight_col="w2").state.count(),
+    "sssp_path": lambda g: sssp_path(g, 0).state.count(),
+    "multi_source_sssp": lambda g: multi_source_sssp(g, sources=[0, 1]).state.count(),
+    "louvain": lambda g: louvain(g, max_round=3, max_levels=2).state.count(),
+    "modularity": lambda g: modularity(g, g.materialized().deduced_vertices()
+                                       .select("id", (F.col("id") % 3).alias("c"))),
+    "betweenness": lambda g: betweenness_centrality(g, sources=[0, 1]).state.count(),
 }
+
+
+def _weighted_graph(spark, seed: int) -> Graph:
+    """A graph whose own weight column is w, with a second one, w2."""
+    src, dst = _edges(seed=seed)
+    e = _frame(spark, src, dst).withColumn("w", (F.col("src") % 5 + 1).cast("double")) \
+        .withColumn("w2", (F.col("dst") % 3 + 1).cast("double"))
+    return Graph.from_edges(e, weight_col="w")
 
 
 @pytest.mark.parametrize("name", sorted(ONE_SHOT))
@@ -216,12 +286,59 @@ def test_release_leaves_the_cache_as_found(spark, name):
     past the call, and the views it read go with the cut. Each input
     has its own seed: a frame another test left cached with the same
     plan would make a persist() here a no-op."""
-    src, dst = _edges(seed=100 + sorted(ONE_SHOT).index(name))
-    g = Graph.from_edges(_frame(spark, src, dst))
+    g = _weighted_graph(spark, seed=100 + sorted(ONE_SHOT).index(name))
     before = _cached(spark)
     ONE_SHOT[name](g)
     g.release()
     assert _cached(spark) == before
+
+
+def test_empty_graph_leaves_the_cache_as_found(spark):
+    """The empty-graph early returns keep no frame past release()."""
+    g = Graph.from_edges(spark.createDataFrame([], "src long, dst long"))
+    before = _cached(spark)
+    for run in (pagerank, hits, eigenvector_centrality, katz_centrality):
+        assert run(g).state.count() == 0
+    g.release()
+    assert _cached(spark) == before
+
+
+SHARED_VIEW = {
+    "pagerank-resume-articlerank": (
+        lambda g, ck: pagerank(g, tol=0.0, max_iter=2, engine=SuperstepEngine(
+            g.edges.sparkSession, checkpoint_dir=ck, checkpoint_every=1)),
+        lambda g, ck: pagerank(g, tol=0.0, max_iter=4, resume=True, engine=SuperstepEngine(
+            g.edges.sparkSession, checkpoint_dir=ck, checkpoint_every=1)),
+        lambda g, ck: articlerank(g, max_iter=2),
+    ),
+    "sssp-sssp_path": (lambda g, ck: sssp(g, 0), lambda g, ck: sssp_path(g, 0)),
+    "eigenvector-katz": (lambda g, ck: eigenvector_centrality(g, max_iter=3),
+                         lambda g, ck: katz_centrality(g, max_iter=3)),
+    "louvain-modularity": (
+        lambda g, ck: louvain(g, max_round=3, max_levels=2),
+        lambda g, ck: modularity(g, louvain_phase1(g, max_round=2).state),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(SHARED_VIEW))
+def test_calls_on_one_graph_build_their_view_once(spark, tmp_path, name):
+    """Algorithms that read the same message frame build it once per
+    Graph: the first call stores one view, the later calls read that
+    frame and store no other, and release() unpersists it. (A durable
+    engine's result is a persisted frame of its own, so the cache size
+    is not the measure here.)"""
+    g = _weighted_graph(spark, seed=200 + sorted(SHARED_VIEW).index(name))
+    ck = str(tmp_path / "ck")
+    first, *later = SHARED_VIEW[name]
+    first(g, ck)
+    [view] = g._views.values()
+    assert view.storageLevel != StorageLevel.NONE
+    for call in later:
+        call(g, ck)
+        assert list(g._views.values()) == [view]
+    g.release()
+    assert view.storageLevel == StorageLevel.NONE and not g._views
 
 
 def _check_msf(g, src, dst):
@@ -275,48 +392,84 @@ def _dedup_clusters(spark, tmp_path):
     return out.where(F.col("canonical_id") != F.col("doc_id")).count()
 
 
-@pytest.mark.parametrize("call", [_merge_twice, _dedup_clusters],
-                         ids=["merge_edges_into_components", "dedup_clusters"])
-def test_throwaway_graphs_leave_the_cache_as_found(spark, tmp_path, call):
-    """Callers that build a Graph of their own for one wcc run (a
-    streaming micro-batch merge, the near-dup clustering) release it:
-    the session caches after the call exactly what it cached before."""
+def _refresh_twice(spark, tmp_path):
+    state = str(tmp_path / "ranks")
+    for seed in (122, 123):
+        refresh_pagerank_snapshot(_frame(spark, *_edges(seed=seed)), state, max_iter=5)
+    return spark.read.parquet(state).count()
+
+
+def _lineitem(tmp_path) -> str:
+    """A small co-purchase corpus: a lineitem table of 300 orders of
+    1-7 lines over 80 parts, in the layout the entry queries read."""
+    rng = np.random.default_rng(9)
+    lines = rng.integers(1, 8, 300)
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    pd.DataFrame({"l_orderkey": np.repeat(np.arange(300, dtype=np.int64), lines),
+                  "l_partkey": rng.integers(0, 80, lines.sum()).astype(np.int64)}) \
+        .to_parquet(sf / "lineitem.parquet")
+    return str(sf)
+
+
+def _entry_query(name):
+    def call(spark, tmp_path):
+        return ent.queries()[name](spark, _lineitem(tmp_path)).count()
+    return call
+
+
+THROWAWAY = {"merge_edges_into_components": _merge_twice, "dedup_clusters": _dedup_clusters,
+             "refresh_pagerank_snapshot": _refresh_twice,
+             **{f"entry.{q}": _entry_query(q) for q in ("wcc", "cdlp", "pagerank", "eig_katz", "sssp")}}
+
+
+@pytest.mark.parametrize("name", sorted(THROWAWAY))
+def test_throwaway_graphs_leave_the_cache_as_found(spark, tmp_path, name):
+    """Callers that build a Graph of their own for one run (a streaming
+    micro-batch merge or rank refresh, the near-dup clustering, the
+    entry queries) release it: the session caches after the call
+    exactly what it cached before, and the returned frame (counted
+    after the release) still evaluates."""
     before = _cached(spark)
-    assert call(spark, tmp_path) > 0  # the wcc ran on a non-empty graph
+    assert THROWAWAY[name](spark, tmp_path) > 0  # the algorithm ran on a non-empty graph
     assert _cached(spark) == before
 
 
 # Algorithm functions that may build an edge frame of their own (call
-# symmetrized_edges() or dropDuplicates(["src", "dst"])), with the
-# reason: each one is not one of the two simple views on Graph.
+# symmetrized_edges() or to_undirected(), dropDuplicates(["src", "dst"])
+# or groupBy("src", "dst")), with the reason: each one is not a message
+# edge frame that Graph.edge_view() stores.
 OWN_EDGE_FRAMES: dict[str, str] = {
-    "centrality._directed_edges": "keeps self-loops",
-    "hits.hits": "keeps self-loops",
-    "msf.msf": "keeps the lightest parallel edge, and dedups the picked forest edges",
-    "traversal.lightest_edges": "keeps the lightest parallel edge (sssp family)",
+    "msf.msf": "dedups the picked forest edges",
     "pathenum.sampling_path": "keeps self-loops: a loop is a one-hop path",
     "patterns.match_pattern": "one query: AQE reuses its dedup exchange in every stage; a stored view measured slower",
     "structure._deg_frame": "directed degrees count a self-loop as an out- and an in-edge",
     "structure.degree_assortativity": "directed branch keeps self-loops",
     "structure.attribute_assortativity": "keeps self-loops: a loop mixes a category with itself",
     "structure.average_degree_connectivity": "directed branch keeps self-loops",
+    "structure.clustering_directed": "counts each pair's directions (reciprocity) on the directed view",
 }
 
 
 def _builds_edge_frame(fn: ast.FunctionDef) -> list[int]:
-    """Line numbers where `fn` symmetrizes or dedups an edge frame."""
+    """Line numbers where `fn` symmetrizes, dedups or reduces an edge
+    frame."""
+    def names(args) -> list:
+        return [getattr(a, "value", None) for a in args]
+
     return sorted(
         n.lineno for n in ast.walk(fn)
         if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
-        and (n.func.attr == "symmetrized_edges"
+        and (n.func.attr in ("symmetrized_edges", "to_undirected")
              or (n.func.attr == "dropDuplicates" and n.args and isinstance(n.args[0], ast.List)
-                 and [getattr(e, "value", None) for e in n.args[0].elts] == ["src", "dst"])))
+                 and names(n.args[0].elts) == ["src", "dst"])
+             or (n.func.attr == "groupBy" and names(n.args) == ["src", "dst"])))
 
 
 def test_algorithms_read_simple_views_from_graph():
-    """No module under linkgraph/algos builds a simple edge view of its
-    own: the symmetrized or deduplicated (src, dst) frame comes from
-    Graph.simple_undirected() / simple_directed()."""
+    """No module under linkgraph/algos builds a message edge frame of
+    its own: the symmetrized, deduplicated or weight-reduced (src, dst)
+    frame comes from Graph.edge_view()."""
     offenders, own_frames = [], set()
     for path in sorted(ALGOS.glob("*.py")):
         for fn in ast.parse(path.read_text()).body:
