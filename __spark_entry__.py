@@ -186,8 +186,9 @@ def _assert_unroll(res, budget: int, name: str) -> None:
 def _q_bfs(spark, sf_dir):
     """BFS levels (every vertex, -1 unreached) AND the deterministic
     min-parent BFS tree from the min vertex id, undirected view — one
-    gate driving both bfs() and bfs_tree() (bfs_generic.h:125-155
-    predecessors output)."""
+    gate reading both bfs() and bfs_tree() (bfs_generic.h:125-155
+    predecessors output), two projections of the one unit-weight
+    relaxation (levels, and its predecessor column)."""
     from linkgraph.algos.traversal import bfs_tree
 
     g = part_graph(spark, sf_dir)
@@ -197,6 +198,7 @@ def _q_bfs(spark, sf_dir):
     rest = bfs_tree(g, source=source, directed=False)
     _assert_unroll(rest, BFS_LAYERS, "bfs_tree")
     par = rest.state.select("id", F.coalesce("parent", F.col("id")).alias("parent"))
+    g.release()
     return (
         res.state.select("id", "level")
         .join(par, "id", "left")
@@ -206,11 +208,12 @@ def _q_bfs(spark, sf_dir):
 
 def _q_sssp(spark, sf_dir):
     """Weighted SSSP from the min vertex id over the undirected
-    co-occurrence graph — TWO engine paths in one gate: the frontier
-    relaxation (sssp(), column dist_bf) and the deterministic
-    predecessor-tracking tree (sssp_path(), columns pred/dist,
-    apps/sssp/sssp_path.h semantics); the oracle emits the same
-    distance through both recurrences."""
+    co-occurrence graph — one engine path, the frontier relaxation
+    with its deterministic min-(dist, pred) predecessor, read through
+    both of its projections: sssp() (column dist_bf) and the
+    predecessor tree sssp_path() (columns pred/dist,
+    apps/sssp/sssp_path.h semantics). The oracle derives the distance
+    through two independent recurrences."""
     from linkgraph.algos.paths import sssp_path
 
     edges = part_edges(spark, sf_dir)
@@ -239,8 +242,8 @@ def _q_hits(spark, sf_dir):
 def _q_kshell(spark, sf_dir):
     """Core (shell) number for EVERY vertex via the iterated H-index
     fixpoint (apps/kshell/kshell.h output) AND the k=KCORE_K core
-    membership through the independent degree-prune kcore() path —
-    one gate, two engine code paths."""
+    membership through kcore()'s peel waves — one gate, two fixpoints
+    (H-index and peel) of the same core decomposition."""
     from linkgraph.algos.cores import kshell
 
     g = part_graph(spark, sf_dir)
@@ -907,7 +910,11 @@ def _q_ordering(spark, sf_dir):
     (flash/core/{degeneracy-ordering.h:44-113,
     onion-layer-ordering.h:44-110}) on the %6-thinned graph; the
     shared core numbers are computed once (H-index fixpoint) and
-    emitted as a third column."""
+    emitted as a third column, and the k=KCS_K core membership
+    (flash/core/k-core-search.h:48-64) as a fourth. One peel-wave
+    path runs the two orderings and kcore(); the oracle derives
+    membership independently from the H-index core numbers
+    (core >= k)."""
     from linkgraph.algos.cores import kshell
     from linkgraph.algos.ordering import degeneracy_ordering, onion_layers
 
@@ -919,18 +926,13 @@ def _q_ordering(spark, sf_dir):
     _assert_unroll(r1, DEGEN_UNROLL, "degeneracy_ordering")
     r2 = onion_layers(g, shell=sh)
     _assert_unroll(r2, ONION_UNROLL, "onion_layers")
-    # k-core-search (flash/core/k-core-search.h:48-64): the PUSH-
-    # decrement wave engine path; the oracle derives membership
-    # independently from the H-index core numbers (core >= k)
-    from linkgraph.algos.cores import k_core_search
-
-    rk = k_core_search(g, k=KCS_K)
+    rk = kcore(g, k=KCS_K)
     g.release()
     return (
         sh.select("id", F.col("shell").cast("long").alias("core"))
         .join(r1.state.select("id", F.col("rank").alias("deg_rank")), "id")
         .join(r2.state.select("id", F.col("layer").alias("onion_layer")), "id")
-        .join(rk.state.select("id", "in_kcore"), "id")
+        .join(rk.state.select("id", F.col("in_core").alias("in_kcore")), "id")
     )
 
 
@@ -1003,17 +1005,18 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     including the 13 training-data pipeline ops — sits inside the
     checked window. Functions folded into a sibling gate: lcc/
     triangle_count/transitivity/avg_clustering → triangles/
-    triangle_stats, bfs_tree → bfs, sssp_path → sssp, kcore → kshell, harmonic → closeness, sssp_avg_length_w →
-    sssp_avg_length, louvain ⊂ louvain_full, mis/maximal_matching/
-    min_dominating_set → matching_family, degree/attr assortativity →
-    assortativity, node/edge boundary → boundary, is_simple_path/
-    all_simple_paths → simple_paths, doc_sha ⊂ blob_stats,
-    token_count/quality_score/lang_id → doc_features, lsh_candidates
-    ⊂ fingerprints + dedup_clusters, minhash_signatures/simhash →
-    fingerprints, embedding_ivf_topk → embedding_topk (method column),
+    triangle_stats, bfs_tree → bfs, sssp_path → sssp, kcore → kshell
+    and ordering (k-core search, in_kcore column), harmonic →
+    closeness, sssp_avg_length_w → sssp_avg_length, louvain ⊂
+    louvain_full, mis/maximal_matching/min_dominating_set →
+    matching_family, degree/attr assortativity → assortativity,
+    node/edge boundary → boundary, is_simple_path/all_simple_paths →
+    simple_paths, doc_sha ⊂ blob_stats, token_count/quality_score/
+    lang_id → doc_features, lsh_candidates ⊂ fingerprints +
+    dedup_clusters, minhash_signatures/simhash → fingerprints,
+    embedding_ivf_topk → embedding_topk (method column),
     eigenvector/katz → eig_katz, ppr/articlerank → rank_family,
-    k_core_search → ordering (in_kcore column), k_center →
-    diameter_approx (dis column)."""
+    k_center → diameter_approx (dis column)."""
     return {
         # graph ETL + flagship algorithms (SURVEY.md §2.2)
         "part_edges": _q_part_edges,

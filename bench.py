@@ -129,17 +129,6 @@ def main() -> None:
     col = run2("coloring", lambda: mat(greedy_color(g)))
     extra["coloring_rounds"] = col.rounds
 
-    # randomized-priority Jones-Plassmann (r5): expected O(log n) DAG
-    # depth on BOUNDED-DEGREE graphs; rounds reported so the claim
-    # stays measured. On THIS clique-heavy co-occurrence graph the
-    # depth is governed by max-clique size (any priority total order
-    # serializes inside a clique), and the measurement shows it:
-    # 71 rounds random vs 59 deterministic at sf0.1 — the variant's
-    # value is for sparse bounded-degree topologies, not dense ones
-    # (reported as measured; see BASELINE.md)
-    colr = run2("coloring_random", lambda: mat(greedy_color(g, priority="random")))
-    extra["coloring_random_rounds"] = colr.rounds
-
     run2("minhash_lsh", lambda: pl.lsh_candidate_pairs(spark, sf_dir).count())
 
     run2("embedding_topk", lambda: pl.embedding_topk(spark, sf_dir).count())

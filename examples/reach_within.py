@@ -9,8 +9,10 @@ is a plain callable — no codegen needed, Catalyst is the codegen):
     init_state : DataFrame          -- PEval input (vertex state)
     step_fn(state, round) -> (new_state, finalize)
       new_state : DataFrame         -- one superstep's declarative plan
-      finalize(materialized_state) -> {"halt": bool, ...metrics}
-                                     -- the Sum collective + vote-to-halt
+      finalize  : engine.Observed   -- the Sum collective + vote-to-halt,
+                                       computed by the state's own
+                                       materialization (or a plain
+                                       {"halt": bool, ...metrics} dict)
 
 This app marks every vertex within --k hops of --source (frontier
 BFS with an explicit hop budget):
@@ -22,6 +24,8 @@ BFS with an explicit hop budget):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from linkgraph.engine import Observed
 
 
 def make(graph, spark, args):
@@ -53,10 +57,11 @@ def make(graph, spark, args):
             )
         )
 
-        def finalize(df: DataFrame) -> dict:
-            fr = df.agg(F.sum(F.col("fr").cast("long")).alias("c")).collect()[0]["c"] or 0
-            return {"halt": fr == 0 or round_ + 1 >= k, "frontier": int(fr)}
+        def to_metrics(agg: dict) -> dict:
+            fr = int(agg["frontier"] or 0)
+            return {"halt": fr == 0 or round_ + 1 >= k, "frontier": fr}
 
-        return new_state, finalize
+        return new_state, Observed(
+            exprs=[F.sum(F.col("fr").cast("long")).alias("frontier")], to_metrics=to_metrics)
 
     return init, step

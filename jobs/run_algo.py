@@ -38,7 +38,7 @@ def main(argv: list[str] | None = None) -> int:
         "min_dominating_set", "msf", "harmonic", "diameter_approx",
         "kclique", "motif_census", "densest", "degeneracy_ordering",
         "onion_layers", "min_vertex_cover", "color", "fluid",
-        "k_core_search", "k_center", "custom",
+        "k_center", "custom",
     ])
     ap.add_argument("--edges", required=True, help="parquet with (src,dst[,props])")
     ap.add_argument("--vertices", default=None, help="optional parquet with (id,...)")
@@ -219,9 +219,6 @@ def main(argv: list[str] | None = None) -> int:
         from linkgraph.algos.coloring import fluid_community
         res = fluid_community(g, n_communities=args.k,
                               max_round=args.max_round, engine=eng)
-    elif args.algo == "k_core_search":
-        from linkgraph.algos.cores import k_core_search
-        res = k_core_search(g, k=args.k, engine=eng)
     elif args.algo == "k_center":
         from linkgraph.algos.paths import k_center
         res = k_center(g, k=args.k, engine=eng)

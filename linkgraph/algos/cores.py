@@ -6,16 +6,18 @@ undirected simple graph; survivors form the k-core) and
 apps/kshell/kshell.h (shell index = largest k whose k-core contains
 the vertex).
 
-The prune loop is a frontier job: each round removes vertices whose
-remaining degree dropped below k; only neighbors of removed vertices
-need their degree re-checked. Implemented dense (full recount per
-round) — the recount is one groupBy over the shrinking edge set, and
-AQE coalesces as it shrinks."""
+The prune loop is the peel wave of ``ordering`` (the PUSH-DECREMENT
+wave of flash/core/k-core-search.h:48-64): each round removes every
+remaining vertex whose residual degree dropped below k, and each
+removed vertex sends one decrement along each of its edges, so a
+round scatters only the wave's incident edges, not the remaining
+edge set."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
+from linkgraph.algos.ordering import _degree_waves
 from linkgraph.engine import Observed, SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
 
@@ -27,49 +29,13 @@ def kcore(
     max_iter: int = 10_000,
 ) -> SuperstepResult:
     """Returns state (id: long, in_core: boolean) — membership of the
-    k-core (vertices with no incident edge are never in a k≥1 core)."""
-    g = graph.materialized()
-    spark = g.edges.sparkSession
-    eng = engine or SuperstepEngine(spark)
-
-    all_verts = g.deduced_vertices()
-    edges0 = g.simple_undirected()
-    n_edges = edges0.count()
-
-    # state: surviving vertex set (id); edges induced on it each round
-    init = all_verts.select("id")
-    edge_box = {"e": edges0}
-
-    def step(state: DataFrame, round_: int):
-        e = edge_box["e"]
-        deg = e.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-        keep = deg.where(F.col("d") >= k).select("id")
-        survivors = state.join(keep, "id", "left_semi")
-        removed = state.count() - survivors.count()
-        if removed > 0:
-            new_e = (
-                e.join(survivors.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(survivors.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .select("src", "dst")
-                .persist()
-            )
-            new_e.count()
-            if edge_box["e"] is not edges0:
-                edge_box["e"].unpersist()
-            edge_box["e"] = new_e
-        return survivors, {
-            "halt": removed == 0,
-            "removed": int(removed),
-            "edges_processed": n_edges,
-        }
-
-    result = eng.run(init, step, max_rounds=max_iter)
-    core_ids = result.state
-    result.state = all_verts.join(
-        core_ids.select("id", F.lit(True).alias("in_core")), "id", "left"
-    ).select("id", F.coalesce("in_core", F.lit(False)).alias("in_core"))
-    if edge_box["e"] is not edges0:
-        edge_box["e"].unpersist()
+    k-core (vertices with no incident edge are never in a k≥1 core).
+    Each metrics row counts the round's wave (``removed``) and the
+    vertices left (``active``); the last ``active`` is the k-core size
+    (k-core-search.h's GlobalRes). The run halts on the first wave that
+    removes nothing or leaves nothing."""
+    result = _degree_waves(graph, F.lit(k - 1), "wave", engine, max_iter)
+    result.state = result.state.select("id", (F.col("wave") < 0).alias("in_core"))
     return result
 
 
@@ -93,7 +59,6 @@ def kshell(
     per-vertex DISTINCT h values — bounded by sqrt(2|E|) per vertex,
     far below raw degree, so the window carries no hub-row skew).
     """
-    from linkgraph.engine import SuperstepEngine
     from pyspark.sql.window import Window
 
     g = graph.materialized()
@@ -172,80 +137,4 @@ def kshell(
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", F.col("h").alias("shell"))
-    return result
-
-
-def k_core_search(
-    graph: Graph,
-    k: int,
-    engine: SuperstepEngine | None = None,
-    max_iter: int = 10_000,
-) -> SuperstepResult:
-    """k-core membership via the reference's PUSH-DECREMENT wave
-    (flash/core/k-core-search.h:48-64): instead of recounting induced
-    degrees (kcore() above, kcore.h semantics), each newly-removed
-    vertex scatters a -1 to every still-alive neighbor exactly once,
-    and only receivers that drop below k join the next removal wave.
-    Same fixpoint as kcore(), different engine path: the per-round
-    scatter touches only the frontier's incident edges, so late waves
-    cost O(frontier edges), not O(remaining edges).
-
-    Returns state (id: long, in_kcore: boolean); the final metrics row
-    carries kcore_size (k-core-search.h's GlobalRes)."""
-    g = graph.materialized()
-    spark = g.edges.sparkSession
-    eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    edges = g.simple_undirected()
-    n_edges = edges.count()
-    verts = g.deduced_vertices()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-
-    init = (
-        verts.join(deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("d", F.lit(0)).cast("long").alias("d"),
-            F.lit(True).alias("alive"),
-        )
-        .repartition(P, "id")
-    )
-
-    def step(state: DataFrame, round_: int):
-        removed = state.where(F.col("alive") & (F.col("d") < k)).select(
-            F.col("id").alias("src")
-        )
-        dec = (
-            edges.join(removed.hint("SHUFFLE_HASH"), "src", "left_semi")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.count("*").alias("dec"))
-        )
-        new_state = (
-            state.join(dec.hint("SHUFFLE_HASH"), "id", "left")
-            .select(
-                "id",
-                (F.col("d") - F.coalesce("dec", F.lit(0))).alias("d"),
-                (F.col("alive") & (F.col("d") >= k)).alias("alive"),
-            )
-        )
-
-        def to_metrics(row: dict) -> dict:
-            return {
-                "halt": (row["nxt"] or 0) == 0,
-                "next_wave": int(row["nxt"] or 0),
-                "kcore_size": int(row["alive_n"] or 0),
-                "edges_processed": n_edges,
-            }
-
-        return new_state, Observed(
-            exprs=[
-                F.sum((F.col("alive") & (F.col("d") < k)).cast("long")).alias("nxt"),
-                F.sum(F.col("alive").cast("long")).alias("alive_n"),
-            ],
-            to_metrics=to_metrics,
-        )
-
-    result = eng.run(init, step, max_rounds=max_iter)
-    result.state = result.state.select("id", F.col("alive").alias("in_kcore"))
     return result

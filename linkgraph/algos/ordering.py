@@ -22,10 +22,11 @@ Both are wave-synchronous peels run by the SuperstepEngine over one
 vertex-state frame whose stamp column (rank / layer) is -1 until the
 vertex is peeled and then the engine round: each round is one
 degree-filter + one scatter-join + one groupBy decrement + one state
-join — the same superstep shape as kcore, keyed joins only, so the
-plan is identical at 100 TB with the state hash-partitioned by id. The
-per-round counts ride the engine's truncation action; a wave that
-removes nothing halts the run with converged=False.
+join, keyed joins only, so the plan is identical at 100 TB with the
+state hash-partitioned by id. ``cores.kcore`` runs the same step with
+limit k-1. The per-round counts ride the engine's truncation action; a
+wave that removes nothing halts the run (converged=False here, since
+an ordering must stamp every vertex).
 """
 
 from __future__ import annotations
@@ -56,6 +57,26 @@ def _waves(edges: DataFrame, limit: F.Column, stamp: str, n: int):
     return step
 
 
+def _degree_waves(graph: Graph, limit: F.Column, stamp: str,
+                  engine: SuperstepEngine | None, max_rounds: int) -> SuperstepResult:
+    """Peel the simple undirected view of the cut of `graph` from its
+    vertex degrees: the engine state is (id, d, stamp), stamp -1 until
+    the wave that removes the vertex."""
+    g = graph.materialized()
+    spark = g.edges.sparkSession
+    eng = engine or SuperstepEngine(spark)
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = g.simple_undirected()
+    verts = g.deduced_vertices()
+    n = verts.count()
+    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
+    init = state_join(verts, deg).select(
+        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
+        F.lit(-1).cast("long").alias(stamp),
+    ).repartition(P, "id")
+    return eng.run(init, _waves(edges, limit, stamp, n), max_rounds=max_rounds)
+
+
 def _peeled(result: SuperstepResult, stamp: str) -> SuperstepResult:
     # converged=False ⇔ some vertex carries stamp -1 (max_rounds hit, or
     # a stale caller-supplied shell made a wave remove nothing)
@@ -76,23 +97,9 @@ def degeneracy_ordering(
     from linkgraph.algos.cores import kshell
 
     g = graph.materialized()
-    spark = g.edges.sparkSession
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = g.simple_undirected()
-
     sh = shell if shell is not None else kshell(g).state
     dg = sh.agg(F.max("shell").alias("m")).collect()[0]["m"] or 0
-
-    verts = g.deduced_vertices()
-    n = verts.count()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    init = state_join(verts, deg).select(
-        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
-        F.lit(-1).cast("long").alias("rank"),
-    ).repartition(P, "id")
-    eng = SuperstepEngine(spark)
-    return _peeled(eng.run(init, _waves(edges, F.lit(dg), "rank", n), max_rounds=max_rounds),
-                   "rank")
+    return _peeled(_degree_waves(g, F.lit(dg), "rank", None, max_rounds), "rank")
 
 
 def onion_layers(

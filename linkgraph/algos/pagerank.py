@@ -230,10 +230,7 @@ def ppr(
             (restart + F.lit(alpha) * F.coalesce("msg", F.lit(0.0))).alias("rank"),
         )
 
-        def finalize(df: DataFrame) -> dict:
-            return {"halt": round_ + 1 >= max_iter, "edges_processed": n_edges}
-
-        return new_state, finalize
+        return new_state, {"halt": round_ + 1 >= max_iter, "edges_processed": n_edges}
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", "rank")
@@ -283,10 +280,7 @@ def articlerank(
             (F.lit(1.0 - damping) + F.coalesce("msg", F.lit(0.0))).alias("rank"),
         )
 
-        def finalize(df: DataFrame) -> dict:
-            return {"halt": round_ + 1 >= max_iter, "edges_processed": n_edges}
-
-        return new_state, finalize
+        return new_state, {"halt": round_ + 1 >= max_iter, "edges_processed": n_edges}
 
     result = eng.run(init, step, max_rounds=max_iter)
     result.state = result.state.select("id", "rank")

@@ -12,7 +12,8 @@ Reference semantics (transcribed, NOT ported):
     all_pairs_shortest_path_length.h (BFS from every vertex).
   * sssp_path — apps/sssp/sssp_path.h:30-174: shortest-path TREE rows
     (predecessor, vertex, distance); predecessor = the relaxation
-    winner (made deterministic here: min(dist, pred) struct order).
+    winner (made deterministic here: min(dist, pred) struct order),
+    read from traversal's single-source relaxation.
   * sssp_has_path / sssp_average_length — apps/sssp/sssp_has_path.h,
     sssp_average_length.h:35-168 (avg of all-pairs sssp lengths; the
     reference notes it is "time consuming" — a sampled-source
@@ -23,24 +24,25 @@ Reference semantics (transcribed, NOT ported):
     first `max_round` sources; norm = (directed ? 1 : 0.5) ×
     1/(K(K-1)) when normalized (betweenness_centrality_context.h:38-67).
 
-Execution model: ALL of these share one engine — a multi-source BFS
-whose vertex state is the sparse PAIR frame (s, id, dist). Supersteps
-expand the per-source frontier through the cached edge frame; the
-pair frame is hash-partitioned by id so the per-round scatter join
-reuses the edge partitioning. At 100 TB scale the pair frame is the
-product |sources|×|reached| — callers bound |sources| (landmark /
-sampled mode, the same contract as the reference's `max_round`
-source cap) and the full all-pairs mode stays O(V·E) by design,
-exactly like the reference's per-vertex loop.
+Execution model: all of these but sssp_path (a projection of
+traversal's single-source relaxation) share one engine — a
+multi-source BFS whose vertex state is the sparse PAIR frame
+(s, id, dist). Supersteps expand the per-source frontier through the
+cached edge frame; the pair frame is hash-partitioned by id so the
+per-round scatter join reuses the edge partitioning. At 100 TB scale
+the pair frame is the product |sources|×|reached| — callers bound
+|sources| (landmark / sampled mode, the same contract as the
+reference's `max_round` source cap) and the full all-pairs mode stays
+O(V·E) by design, exactly like the reference's per-vertex loop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algos.traversal import INF, _relax
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph, weight_projected
-from linkgraph.joins import state_join
 
 
 def _sources_df(graph: Graph, sources) -> DataFrame:
@@ -313,52 +315,15 @@ def sssp_path(
     for every reached vertex (source row has pred = source, dist 0),
     matching sssp_path.h's [predecessor, node, sssp_length] output.
 
+    The tree is sssp's own relaxation (``traversal._relax``), which
+    records the winner of each vertex's last improving relaxation.
     Deterministic predecessor: among equal-distance relaxations the
     minimum (dist, pred) struct wins — the reference keeps whichever
     message arrived last, which is nondeterministic under MPI; a
     fixed tie-break makes the result oracle-checkable."""
-    g = graph.materialized()
-    spark = g.edges.sparkSession
-    eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # the lightest of parallel edges, self-loops dropped
-    edges = g.edge_view(not (g.directed if directed is None else directed), reduce="min")
-    n_edges = edges.count()
-
-    INF = float("inf")
-    init = g.deduced_vertices().select(
-        "id",
-        F.when(F.col("id") == source, 0.0).otherwise(F.lit(INF)).alias("dist"),
-        F.when(F.col("id") == source, F.lit(source).cast("long"))
-        .otherwise(F.lit(None).cast("long")).alias("pred"),
-        (F.col("id") == source).alias("changed"),
-    ).repartition(P, "id")
-
-    def step(state: DataFrame, round_: int):
-        frontier = state.where(F.col("changed")).select(
-            F.col("id").alias("src"), F.col("dist").alias("sd")
-        )
-        relax = (
-            edges.join(frontier.hint("SHUFFLE_HASH"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.struct((F.col("sd") + F.col("w")).alias("d"),
-                                F.col("src").alias("p"))).alias("m"))
-            .select("id", F.col("m.d").alias("cand"), F.col("m.p").alias("cand_pred"))
-        )
-        new_state = state_join(state, relax).select(
-            "id",
-            F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-            F.when(
-                F.coalesce("cand", F.lit(INF)) < F.col("dist"), F.col("cand_pred")
-            ).otherwise(F.col("pred")).alias("pred"),
-            (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-        )
-
-        return new_state, observed_count("changed", n_edges)
-
-    result = eng.run(init, step, max_rounds=max_iter)
-    result.state = result.state.where(F.col("dist") != INF).select("id", "pred", "dist")
-    return result
+    res = _relax(graph, graph.weight_col, source, engine, max_iter, directed, False)
+    res.state = res.state.where(F.col("dist") < INF).select("id", "pred", "dist")
+    return res
 
 
 def sssp_has_path(graph: Graph, source: int, target: int, **kw) -> bool:
@@ -487,10 +452,7 @@ def betweenness_centrality(
             )
         )
 
-        def finalize(df: DataFrame) -> dict:
-            return {"halt": d <= 0, "depth": d, "edges_processed": n_edges}
-
-        return new_state, finalize
+        return new_state, {"halt": d <= 0, "depth": d, "edges_processed": n_edges}
 
     if max_depth > 0:
         bwd = eng.run(binit, bwd_step, max_rounds=max_depth)

@@ -10,8 +10,11 @@ source; unreached vertices get a sentinel (-1 here).
 
 Both are delta-frontier jobs: only vertices whose distance improved
 last round relax their out-edges (wcc_projected.h's curr_modified
-pattern). BFS is SSSP with unit weights, so one implementation serves
-both; level = superstep index.
+pattern). BFS is SSSP with unit weights, so one relaxation serves
+both; level = superstep index. The relaxation also records each
+vertex's predecessor (the winner of its last improving relaxation, as
+apps/sssp/sssp_path.h does), so the trees — ``bfs_tree`` here and
+``paths.sssp_path`` — are projections of the same run.
 """
 
 from __future__ import annotations
@@ -21,6 +24,9 @@ from pyspark.sql import DataFrame, functions as F
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph, weight_projected
 from linkgraph.joins import scatter_join, state_join
+
+
+INF = float("inf")
 
 
 @weight_projected
@@ -39,7 +45,10 @@ def sssp(
     without one has unit weights (= BFS levels as doubles).
     resume=True continues from the engine's latest durable checkpoint.
     """
-    return _relax(graph, graph.weight_col, source, engine, max_iter, directed, resume)
+    res = _relax(graph, graph.weight_col, source, engine, max_iter, directed, resume)
+    res.state = res.state.select(
+        "id", F.when(F.col("dist") == INF, F.lit(-1.0)).otherwise(F.col("dist")).alias("dist"))
+    return res
 
 
 def _relax(
@@ -53,7 +62,11 @@ def _relax(
 ) -> SuperstepResult:
     """The sssp fixpoint over the cut of `graph`, weights from its
     column `w` (unit weights when None): the lightest of parallel
-    edges, self-loops dropped."""
+    edges, self-loops dropped. Returns state (id, dist, pred) with
+    dist = inf where unreached; pred is the source at the source, the
+    winner of the vertex's last improving relaxation elsewhere (the
+    least (distance, predecessor) pair, so ties go to the smallest
+    predecessor id) and NULL where unreached."""
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
@@ -65,11 +78,12 @@ def _relax(
 
     verts = g.deduced_vertices()
     n_verts = verts.count()
-    INF = float("inf")
+    is_source = F.col("id") == source
     init = verts.select(
         "id",
-        F.when(F.col("id") == source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-        (F.col("id") == source).alias("changed"),
+        F.when(is_source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
+        F.when(is_source, F.col("id")).alias("pred"),
+        is_source.alias("changed"),
     ).repartition(P, "id")
 
     def step(state: DataFrame, round_: int):
@@ -79,22 +93,20 @@ def _relax(
         relax = (
             scatter_join(edges, frontier, "src", n_verts)
             .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("sd") + F.col("w")).alias("cand"))
+            .agg(F.min(F.struct((F.col("sd") + F.col("w")).alias("d"),
+                                F.col("src").alias("p"))).alias("m"))
         )
-        new_state = (
-            state_join(state, relax)
-            .select(
-                "id",
-                F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-            )
+        better = F.coalesce(F.col("m.d"), F.lit(INF)) < F.col("dist")
+        new_state = state_join(state, relax).select(
+            "id",
+            F.when(better, F.col("m.d")).otherwise(F.col("dist")).alias("dist"),
+            F.when(better, F.col("m.p")).otherwise(F.col("pred")).alias("pred"),
+            better.alias("changed"),
         )
         return new_state, observed_count("changed", n_edges)
 
     result = eng.run(init, step, max_rounds=max_iter, resume=resume)
-    result.state = result.state.select(
-        "id", F.when(F.col("dist") == INF, F.lit(-1.0)).otherwise(F.col("dist")).alias("dist")
-    )
+    result.state = result.state.select("id", "dist", "pred")
     return result
 
 
@@ -112,7 +124,9 @@ def bfs(
     would silently turn BFS levels into weighted distances.
     """
     res = _relax(graph, None, source, engine, max_iter, directed, False)
-    res.state = res.state.select("id", F.col("dist").cast("long").alias("level"))
+    res.state = res.state.select(
+        "id", F.when(F.col("dist") == INF, F.lit(-1)).otherwise(F.col("dist"))
+        .cast("long").alias("level"))
     return res
 
 
@@ -126,37 +140,19 @@ def bfs_tree(
     modes of apps/bfs/bfs_generic.h:125-155 (which emit (vertex,
     predecessor) pairs over the BFS tree). Returns state (id: long,
     parent: long, level: long) for every REACHED vertex; the source
-    row has parent = NULL. The reference keeps whichever predecessor
-    message arrived first (MPI-nondeterministic); here the MINIMUM
-    level-(L-1) in-neighbor wins, making the tree deterministic and
+    row has parent = NULL.
+
+    The tree is the unit-weight relaxation's own predecessor column:
+    the round-r frontier is exactly the level-r vertices, so a vertex's
+    winning relaxation comes from its MINIMUM level-(L-1) in-neighbor.
+    The reference keeps whichever predecessor message arrived first
+    (MPI-nondeterministic); the min makes the tree deterministic and
     oracle-checkable.
-
-    No extra iteration: the tree is one post-pass join over the
-    converged level frame (edges ⋈ levels on both endpoints, keep
-    level(src)+1 == level(dst), min(src) per dst).
     """
-    res = bfs(graph, source, engine=engine, directed=directed)
-    use_directed = graph.directed if directed is None else directed
-    # the undirected view always symmetrizes: an undirected graph may
-    # store one direction per pair, and levels reached via the
-    # unstored direction would otherwise get parent = NULL.
-    e = graph.simple_directed() if use_directed else graph.simple_undirected()
-
-    # res.state is already engine-materialized (localCheckpoint), so
-    # the three reads below rescan a cached frame — no extra persist
-    levels = res.state.where(F.col("level") >= 0)
-    lv_src = levels.select(F.col("id").alias("src"), F.col("level").alias("ls"))
-    lv_dst = levels.select(F.col("id").alias("dst"), F.col("level").alias("ld"))
-    parents = (
-        e.join(lv_src.hint("SHUFFLE_HASH"), "src")
-        .join(lv_dst.hint("SHUFFLE_HASH"), "dst")
-        .where(F.col("ls") + 1 == F.col("ld"))
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("parent"))
+    res = _relax(graph, None, source, engine, 10_000, directed, False)
+    res.state = res.state.where(F.col("dist") < INF).select(
+        "id",
+        F.when(F.col("id") != source, F.col("pred")).alias("parent"),
+        F.col("dist").cast("long").alias("level"),
     )
-    tree = (
-        levels.join(parents.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", "parent", "level")
-    )
-    res.state = tree
     return res

@@ -106,13 +106,12 @@ class SuperstepEngine:
     """Runs ``step_fn`` until convergence with persistence + checkpoints.
 
     step_fn(state: DataFrame, round: int) -> (new_state, finalize)
-      where ``finalize(truncated_state) -> metrics_dict`` computes the
-      convergence aggregates (the Sum collectives) on the already
-      materialized state — so each superstep executes its plan exactly
-      once. ``metrics_dict`` may contain 'halt': True to vote-to-halt,
-      plus any scalars (l1_delta, frontier, ...). For backward
-      compatibility step_fn may return a plain metrics dict instead of
-      a callable (then the step computed its own aggregates).
+      where ``finalize`` is an :class:`Observed` (the convergence
+      aggregates, the Sum collectives, ride the truncation action, so
+      each superstep executes its plan exactly once) or a plain metrics
+      dict (a step that needs no aggregate, e.g. a fixed round count).
+      The metrics may contain 'halt': True to vote-to-halt, plus any
+      scalars (l1_delta, frontier, ...).
 
     Lineage control: the plan is truncated EVERY round — durably
     (parquet write+read under checkpoint_dir, on the
@@ -127,7 +126,6 @@ class SuperstepEngine:
         spark: SparkSession,
         checkpoint_dir: str | None = None,
         checkpoint_every: int = 5,
-        storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
         record_partition_lineage: bool = False,
         checkpoint_format: str | None = None,
         truncate_level: StorageLevel | None = None,
@@ -135,7 +133,6 @@ class SuperstepEngine:
         self.spark = spark
         self.checkpoint_dir = checkpoint_dir
         self.checkpoint_every = max(1, checkpoint_every)
-        self.storage_level = storage_level
         # storage level for the per-round localCheckpoint truncation of
         # the state frame. None keeps the JVM default (deserialized
         # MEMORY_AND_DISK_DESER rows). PySpark's MEMORY_AND_DISK is the
@@ -244,7 +241,7 @@ class SuperstepEngine:
     def run(
         self,
         initial_state: DataFrame,
-        step_fn: Callable[[DataFrame, int], tuple[DataFrame, dict[str, Any]]],
+        step_fn: Callable[[DataFrame, int], tuple[DataFrame, Observed | dict[str, Any]]],
         max_rounds: int = 100,
         resume: bool = False,
         start_round: int = 0,
@@ -273,24 +270,19 @@ class SuperstepEngine:
             on_cadence = self.checkpoint_dir and (round_ + 1) % self.checkpoint_every == 0
             if on_cadence:
                 # durable truncation: the parquet write executes the
-                # superstep plan; the reread is a shallow scan
+                # superstep plan; the reread is a shallow scan, stored
+                # by the next job that reads it (not registered in the
+                # session cache, so the returned state pins nothing)
                 path = self._ckpt_path(round_)
                 new_state.write.mode("overwrite").format(self.checkpoint_format).save(path)
-                new_state = (
-                    self.spark.read.format(self.checkpoint_format).load(path)
-                    .persist(self.storage_level)
-                )
+                new_state = self.spark.read.format(self.checkpoint_format).load(path) \
+                    .localCheckpoint(eager=False, storageLevel=self.truncate_level)
             else:
                 # in-memory truncation (single execution, cached)
                 new_state = new_state.localCheckpoint(
                     eager=True, storageLevel=self.truncate_level)
 
-            if obs is not None:
-                metrics = dict(finalize.to_metrics(obs.get))
-            elif callable(finalize):
-                metrics = dict(finalize(new_state))
-            else:
-                metrics = dict(finalize)
+            metrics = dict(finalize.to_metrics(obs.get) if obs is not None else finalize)
             metrics["superstep_sec"] = time.time() - t0
             metrics["round"] = round_
 

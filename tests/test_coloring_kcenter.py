@@ -1,5 +1,5 @@
-"""greedy_color / fluid_community / k_core_search / k_center vs
-pure-python replay oracles on small random graphs — the oracles
+"""greedy_color / fluid_community / kcore (k-core search) / k_center
+vs pure-python replay oracles on small random graphs — the oracles
 re-derive the reference semantics (flash/clustering/color.h,
 fluid-community.h, flash/core/k-core-search.h,
 flash/measurement/k-center.h) independently of the Spark plans."""
@@ -9,8 +9,11 @@ from __future__ import annotations
 import random
 from collections import deque
 
+import numpy as np
+
+from linkgraph import oracle
 from linkgraph.algos.coloring import fluid_community, greedy_color
-from linkgraph.algos.cores import k_core_search, kcore
+from linkgraph.algos.cores import kcore
 from linkgraph.algos.paths import k_center
 from linkgraph.graph import Graph
 
@@ -84,56 +87,6 @@ def test_greedy_color_path(spark):
     assert got == _color_oracle(_adj([(1, 2), (2, 3)]))
 
 
-def test_greedy_color_random_priority(spark):
-    """priority='random' (Jones–Plassmann, seeded xxhash64 order):
-    proper coloring, equals the sequential greedy replay along the
-    same hash order, and converges in no more rounds than the
-    priority DAG is deep."""
-    from pyspark.sql import functions as F
-
-    pairs = _rand_und(40, 150, seed=11)
-    adj = _adj(pairs)
-    g = _graph(spark, pairs)
-    res = greedy_color(g, priority="random", seed=7)
-    got = {r["id"]: r["color"] for r in res.state.collect()}
-    assert res.converged
-    for a, b in pairs:
-        assert got[a] != got[b]
-    # replay oracle: same order = (xxhash64(id, 7) desc, id desc)
-    pr = {
-        r["id"]: r["p"]
-        for r in g.deduced_vertices()
-        .select("id", F.xxhash64(F.col("id"), F.lit(7)).alias("p"))
-        .collect()
-    }
-    order = sorted(adj, key=lambda v: (pr[v], v), reverse=True)
-    col = {}
-    for v in order:
-        used = {col[u] for u in adj[v] if u in col}
-        c = 0
-        while c in used:
-            c += 1
-        col[v] = c
-    assert got == col
-
-
-def test_greedy_color_random_seed_changes_order(spark):
-    """Different seeds give (generally) different colorings but both
-    proper — the knob is deterministic per seed."""
-    pairs = _rand_und(30, 90, seed=3)
-    g = _graph(spark, pairs)
-
-    def color(seed):
-        return {r["id"]: r["color"] for r in greedy_color(g, priority="random", seed=seed).state.collect()}
-
-    a, b = color(1), color(2)
-    assert color(1) == a  # same seed -> identical
-    assert a != b  # another seed -> another order
-    for x, y in pairs:
-        assert a[x] != a[y]
-        assert b[x] != b[y]
-
-
 # -- fluid community (fluid-community.h, synchronous) ------------------
 
 
@@ -195,24 +148,37 @@ def test_fluid_community_disconnected_stays_unlabeled(spark):
     assert all(got[v] in (0, 1) for v in range(4))
 
 
-# -- k-core search (k-core-search.h push-decrement) --------------------
+# -- k-core search (k-core-search.h push-decrement waves, run by kcore) --
 
 
 def test_k_core_search_matches_recount_kcore(spark):
-    pairs = _rand_und(60, 200, seed=17)
-    g = _graph(spark, pairs)
-    for k in (2, 3, 5):
-        a = {r["id"]: r["in_kcore"] for r in k_core_search(g, k=k).state.collect()}
-        b = {r["id"]: r["in_core"] for r in kcore(g, k=k).state.collect()}
-        assert a == b, f"k={k}"
+    """kcore's peel waves against the sequential peel's core numbers
+    (core >= k) on random 80-vertex graphs with parallel edges and a
+    vertex that has only a self-loop, as stored (directed) and
+    undirected; an empty k-core converges too."""
+    for seed in (17, 18, 19):
+        pairs = _rand_und(80, 200, seed=seed)
+        rng = random.Random(seed)
+        rows = pairs + [(b, a) for a, b in rng.sample(pairs, 20)] + [(500, 500)]
+        src, dst = (np.array(c, dtype=np.int64) for c in zip(*rows))
+        ids, core = oracle.core_numbers(src, dst)
+        for directed in (True, False):
+            g = Graph.from_edges(spark.createDataFrame(rows, "src long, dst long"),
+                                 directed=directed)
+            for k in (1, 2, 3, 4, 6):
+                res = kcore(g, k=k)
+                got = {r["id"]: r["in_core"] for r in res.state.collect()}
+                assert got == {int(i): bool(c >= k) for i, c in zip(ids, core)}, (seed, directed, k)
+                assert res.converged and res.last["active"] == int((core >= k).sum())
+            g.release()
 
 
 def test_k_core_search_size_metric(spark):
     pairs = [(0, 1), (1, 2), (2, 0), (2, 3)]  # triangle + pendant
-    res = k_core_search(_graph(spark, pairs), k=2)
-    got = {r["id"]: r["in_kcore"] for r in res.state.collect()}
+    res = kcore(_graph(spark, pairs), k=2)
+    got = {r["id"]: r["in_core"] for r in res.state.collect()}
     assert got == {0: True, 1: True, 2: True, 3: False}
-    assert res.metrics[-1]["kcore_size"] == 3
+    assert res.converged and res.last["active"] == 3  # k-core-search.h's GlobalRes
 
 
 # -- k-center (k-center.h greedy farthest-point) -----------------------

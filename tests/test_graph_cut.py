@@ -293,6 +293,20 @@ def test_release_leaves_the_cache_as_found(spark, name):
     assert _cached(spark) == before
 
 
+def test_durable_run_leaves_the_cache_as_found(spark, tmp_path):
+    """A durable run's state, read back from its last checkpoint, is
+    not registered in the session cache: pagerank with a checkpoint
+    every round, then release(), leaves the cache as found, and the
+    result still evaluates."""
+    g = _weighted_graph(spark, seed=300)
+    before = _cached(spark)
+    res = pagerank(g, tol=0.0, max_iter=3, engine=SuperstepEngine(
+        spark, checkpoint_dir=str(tmp_path / "ck"), checkpoint_every=1))
+    g.release()
+    assert res.state.count() > 0
+    assert _cached(spark) == before
+
+
 def test_empty_graph_leaves_the_cache_as_found(spark):
     """The empty-graph early returns keep no frame past release()."""
     g = Graph.from_edges(spark.createDataFrame([], "src long, dst long"))
@@ -325,10 +339,10 @@ SHARED_VIEW = {
 def test_calls_on_one_graph_build_their_view_once(spark, tmp_path, name):
     """Algorithms that read the same message frame build it once per
     Graph: the first call stores one view, the later calls read that
-    frame and store no other, and release() unpersists it. (A durable
-    engine's result is a persisted frame of its own, so the cache size
-    is not the measure here.)"""
+    frame and store no other, and release() unpersists it, leaving the
+    cache as found."""
     g = _weighted_graph(spark, seed=200 + sorted(SHARED_VIEW).index(name))
+    before = _cached(spark)
     ck = str(tmp_path / "ck")
     first, *later = SHARED_VIEW[name]
     first(g, ck)
@@ -339,6 +353,7 @@ def test_calls_on_one_graph_build_their_view_once(spark, tmp_path, name):
         assert list(g._views.values()) == [view]
     g.release()
     assert view.storageLevel == StorageLevel.NONE and not g._views
+    assert _cached(spark) == before
 
 
 def _check_msf(g, src, dst):
@@ -357,9 +372,9 @@ def _check_bfs_tree(g, src, dst):
 
 @pytest.mark.parametrize("check", [_check_msf, _check_bfs_tree], ids=["msf", "bfs_tree"])
 def test_evaluates_its_source_once(spark, check):
-    """msf (edges and vertex set) and bfs_tree (its levels and its
-    parent pass) read their graph through one cut: the source plan
-    runs once per call."""
+    """msf (edges and vertex set) and bfs_tree (its edge view and its
+    vertex set) read their graph through one cut: the source plan runs
+    once per call."""
     src, dst = _edges()
     rows = spark.sparkContext.accumulator(0)
 
@@ -420,7 +435,7 @@ def _entry_query(name):
 
 THROWAWAY = {"merge_edges_into_components": _merge_twice, "dedup_clusters": _dedup_clusters,
              "refresh_pagerank_snapshot": _refresh_twice,
-             **{f"entry.{q}": _entry_query(q) for q in ("wcc", "cdlp", "pagerank", "eig_katz", "sssp")}}
+             **{f"entry.{q}": _entry_query(q) for q in ("wcc", "cdlp", "pagerank", "eig_katz", "sssp", "bfs")}}
 
 
 @pytest.mark.parametrize("name", sorted(THROWAWAY))

@@ -75,6 +75,28 @@ def test_articlerank_matches_numpy(spark, small_graph, small_edges_np):
         assert abs(got[v] - x) < 1e-9, (v, got[v], x)
 
 
+def _min_parent_bfs(pairs, source, directed):
+    """Level-synchronous BFS: parent = the minimum in-neighbor one
+    level up (self-loops and parallel edges change nothing)."""
+    out = {}
+    for a, b in pairs:
+        if a != b:
+            out.setdefault(a, set()).add(b)
+            if not directed:
+                out.setdefault(b, set()).add(a)
+    tree, frontier, level = {source: (None, 0)}, [source], 0
+    while frontier:
+        nxt = {}
+        for u in frontier:
+            for v in out.get(u, ()):
+                if v not in tree:
+                    nxt[v] = min(nxt.get(v, u), u)
+        level += 1
+        tree.update({v: (p, level) for v, p in nxt.items()})
+        frontier = list(nxt)
+    return tree
+
+
 def test_bfs_tree_parents(spark):
     # path 1-2-3 plus branch 2-4; min-parent tie: 5 reachable from 3 and 4
     e = [(1, 2), (2, 3), (2, 4), (3, 5), (4, 5)]
@@ -86,6 +108,18 @@ def test_bfs_tree_parents(spark):
     assert rows[3] == (2, 2)
     assert rows[4] == (2, 2)
     assert rows[5] == (3, 3)  # min(3, 4) wins deterministically
+    # random graphs with self-loops and parallel edges, both directions
+    rng = np.random.default_rng(4)
+    for trial in range(3):
+        pairs = [tuple(map(int, e)) for e in rng.integers(0, 60, (150, 2))]
+        pairs += pairs[:10] + [(70 + trial, 70 + trial)]
+        df = spark.createDataFrame(pairs, "src long, dst long")
+        for directed in (True, False):
+            g = Graph.from_edges(df, directed=directed)
+            rows = {r["id"]: (r["parent"], r["level"])
+                    for r in bfs_tree(g, source=pairs[0][0]).state.collect()}
+            assert rows == _min_parent_bfs(pairs, pairs[0][0], directed), (trial, directed)
+            g.release()
 
 
 def test_multi_source_sssp_weighted(spark):

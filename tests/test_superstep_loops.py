@@ -1,8 +1,9 @@
 """One superstep loop: the greedy (matching.py) and peeling
 (ordering.py) algorithms run their rounds through SuperstepEngine, so
 they honour a caller's engine, write per-round metrics rows, and report
-converged=False when max_rounds stops them early. An AST guard keeps
-new hand-written round loops out of linkgraph/algos/."""
+converged=False when max_rounds stops them early. AST guards keep
+new hand-written round loops out of linkgraph/algos/, and Spark actions
+out of the step functions the engine runs."""
 
 from __future__ import annotations
 
@@ -129,3 +130,57 @@ def test_no_hand_written_round_loops():
     offenders = loops - set(LOOPS_ALLOWED)
     assert not offenders, "round loops outside SuperstepEngine: " + ", ".join(sorted(offenders))
     assert set(LOOPS_ALLOWED) <= loops, "stale allowlist entries"
+
+
+# -- tooling guard: a step function runs no Spark action of its own
+
+# Methods that run a Spark job (plus count() with no argument; count(x)
+# is the aggregate). A step's counts ride the engine's truncation
+# action instead (engine.Observed).
+STEP_ACTIONS = {"collect", "first", "take", "isEmpty"}
+
+# Functions whose step function runs an action, with the reason.
+STEP_ACTIONS_ALLOWED: dict[str, str] = {
+    "pagerank.pagerank": "bootstraps the dangling mass from the state in its first round "
+                         "(round 0, or the first round after a resume); later rounds observe it",
+}
+
+
+def _is_action(node: ast.AST) -> bool:
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    name = node.func.attr
+    return name in STEP_ACTIONS or (name == "count" and not node.args and not node.keywords)
+
+
+def _acting_steps(tree: ast.Module) -> dict[str, list[int]]:
+    """Module-level function name -> lines of the Spark actions inside
+    the step functions it passes to `eng.run`: a def of its own, or a
+    module-level function called to build the step."""
+    defs = {fn.name: fn for fn in tree.body if isinstance(fn, ast.FunctionDef)}
+    found: dict[str, list[int]] = {}
+    for outer in defs.values():
+        local = {fn.name: fn for fn in ast.walk(outer) if isinstance(fn, ast.FunctionDef)}
+        for call in ast.walk(outer):
+            if not (isinstance(call, ast.Call) and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "run" and isinstance(call.func.value, ast.Name)
+                    and call.func.value.id == "eng"):
+                continue
+            arg = call.args[1]
+            if isinstance(arg, ast.Call) and isinstance(arg.func, ast.Name):
+                step = defs.get(arg.func.id)
+            else:
+                step = local.get(arg.id) if isinstance(arg, ast.Name) else None
+            assert step is not None, f"{outer.name}:{call.lineno}: step function not found"
+            lines = [n.lineno for n in ast.walk(step) if _is_action(n)]
+            if lines:
+                found.setdefault(outer.name, []).extend(lines)
+    return found
+
+
+def test_step_functions_run_no_spark_action():
+    acting = {f"{path.stem}.{name}": lines for path in sorted(ALGOS.glob("*.py"))
+              for name, lines in _acting_steps(ast.parse(path.read_text())).items()}
+    offenders = {k: v for k, v in acting.items() if k not in STEP_ACTIONS_ALLOWED}
+    assert not offenders, f"Spark actions inside step functions (function: lines): {offenders}"
+    assert set(STEP_ACTIONS_ALLOWED) <= set(acting), "stale allowlist entries"
