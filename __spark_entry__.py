@@ -31,7 +31,7 @@ from linkgraph.algos.pagerank import pagerank
 from linkgraph.algos.traversal import bfs, sssp
 from linkgraph.algos.triangles import lcc, triangle_corners, triangles
 from linkgraph.algos.wcc import wcc
-from linkgraph.graph import Graph
+from linkgraph.graph import Graph, _checkpoint
 from linkgraph.tpch_graph import PART_EDGES_SQL, part_edges, part_graph
 
 PR_ITERS = 15
@@ -101,16 +101,26 @@ def entry(spark: SparkSession) -> DataFrame:
 # Spark-side query callables
 # ---------------------------------------------------------------------------
 
+def _stored(result: DataFrame, *graphs: Graph) -> DataFrame:
+    """`result` evaluated once and stored, then `graphs` released: the
+    returned frame no longer reads their stored views."""
+    out = _checkpoint(result)
+    for g in graphs:
+        g.release()
+    return out
+
+
 def _q_part_edges(spark, sf_dir):
     return part_edges(spark, sf_dir)
 
 
 def _q_degree_centrality(spark, sf_dir):
     g = part_graph(spark, sf_dir)
-    n = g.num_vertices()
-    return g.degrees("both").select(
+    deg = g.degrees(True, loops=True, reduce="all")  # every edge end
+    n = g.materialized().num_vertices()
+    return _stored(deg.select(
         "id", F.round(F.col("degree") / F.lit(float(n - 1)), 8).alias("centrality")
-    )
+    ), g)
 
 
 def _q_pagerank(spark, sf_dir):
@@ -144,31 +154,24 @@ def _q_triangles(spark, sf_dir):
     g = part_graph(spark, sf_dir)
     t = triangles(g).select("id", "tri")
     l = lcc(g).select("id", F.round("lcc", 8).alias("lcc"))
-    return t.join(l, "id")
+    return _stored(t.join(l, "id"), g)
 
 
 def _q_triangle_stats(spark, sf_dir):
     """Scalar triangle family in one row: global count, transitivity,
     average clustering (apps/clustering/{transitivity,avg_clustering}.h)."""
     g = part_graph(spark, sf_dir)
-    und = (
-        g.symmetrized_edges()
-        .select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    deg = und.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
+    deg = g.degrees(symmetric=True)
     wedges = deg.agg(F.sum(F.col("degree") * (F.col("degree") - 1) / 2).alias("w"))
     tri = triangle_corners(g).agg(F.count("*").alias("n_triangles"))
     avg = lcc(g).agg(F.round(F.avg("lcc"), 8).alias("avg_clustering"))
-    return (
+    return _stored(
         tri.crossJoin(wedges).crossJoin(avg)
         .select(
             F.col("n_triangles").cast("long").alias("n_triangles"),
             F.round(3.0 * F.col("n_triangles") / F.col("w"), 8).alias("transitivity"),
             "avg_clustering",
-        )
-    )
+        ), g)
 
 
 def _assert_unroll(res, budget: int, name: str) -> None:
@@ -413,7 +416,8 @@ def _q_bridges(spark, sf_dir):
     subtree(x)."""
     from linkgraph.algos.biconnectivity import biconnectivity
 
-    return biconnectivity(_thinned_graph(spark, sf_dir)).bridges
+    g = _thinned_graph(spark, sf_dir)
+    return _stored(biconnectivity(g).bridges, g)
 
 
 def _q_articulation(spark, sf_dir):
@@ -422,7 +426,8 @@ def _q_articulation(spark, sf_dir):
     children span >= 2 groups)."""
     from linkgraph.algos.biconnectivity import biconnectivity
 
-    return biconnectivity(_thinned_graph(spark, sf_dir)).cut_points
+    g = _thinned_graph(spark, sf_dir)
+    return _stored(biconnectivity(g).cut_points, g)
 
 
 def _q_bcc(spark, sf_dir):
@@ -432,7 +437,8 @@ def _q_bcc(spark, sf_dir):
     root ids are arbitrary; the partition is the semantics)."""
     from linkgraph.algos.biconnectivity import biconnectivity
 
-    return biconnectivity(_thinned_graph(spark, sf_dir)).bcc
+    g = _thinned_graph(spark, sf_dir)
+    return _stored(biconnectivity(g).bcc, g)
 
 
 def _q_matching_family(spark, sf_dir):
@@ -552,9 +558,9 @@ def _q_clustering_directed(spark, sf_dir):
     from linkgraph.algos.structure import clustering_directed
 
     g = part_graph(spark, sf_dir)
-    return clustering_directed(g).select(
+    return _stored(clustering_directed(g).select(
         "id", F.round("clustering", 8).alias("clustering")
-    )
+    ), g)
 
 
 def _q_assortativity(spark, sf_dir):
@@ -571,6 +577,7 @@ def _q_assortativity(spark, sf_dir):
     r = degree_assortativity(g, directed=False)
     attr = g.deduced_vertices().select("id", (F.col("id") % ATTR_CATS).alias("cat"))
     r2 = attribute_assortativity(g, attr)
+    g.release()
     return spark.createDataFrame(
         [(round(r, 8), round(r2, 8))],
         "degree_assortativity double, attr_assortativity double",
@@ -583,9 +590,9 @@ def _q_avg_degree_connectivity(spark, sf_dir):
     from linkgraph.algos.structure import average_degree_connectivity
 
     g = part_graph(spark, sf_dir)
-    return average_degree_connectivity(g, directed=False).select(
+    return _stored(average_degree_connectivity(g, directed=False).select(
         "degree", F.round("avg_nbr_degree", 8).alias("avg_nbr_degree")
-    )
+    ), g)
 
 
 def _q_boundary(spark, sf_dir):
@@ -616,7 +623,7 @@ def _q_voterank(spark, sf_dir):
     from linkgraph.algos.ranking import voterank
 
     g = part_graph(spark, sf_dir)
-    return voterank(g, num_seeds=VOTERANK_SEEDS, directed=False)
+    return _stored(voterank(g, num_seeds=VOTERANK_SEEDS, directed=False), g)
 
 
 def _q_lpa_u2i(spark, sf_dir):
@@ -668,10 +675,10 @@ def _q_simple_paths(spark, sf_dir):
     ids = [r["id"] for r in g.deduced_vertices().orderBy("id").limit(3).collect()]
     ok = is_simple_path(g, ids, directed=False)
     out = all_simple_paths(g, ids[0], ids[1], cutoff=ASP_CUTOFF, directed=False)
-    return out.select(
+    return _stored(out.select(
         F.concat_ws("-", F.col("path").cast("array<string>")).alias("path"),
         F.lit(bool(ok)).alias("probe_is_path"),
-    )
+    ), g)
 
 
 def _q_dfs(spark, sf_dir):
@@ -754,7 +761,8 @@ def _q_kclique(spark, sf_dir):
     equi-join extension stages."""
     from linkgraph.algos.subgraph import kclique_counts
 
-    return kclique_counts(_subgraph_graph(spark, sf_dir), ks=(3, 4, 5))
+    g = _subgraph_graph(spark, sf_dir)
+    return _stored(kclique_counts(g, ks=(3, 4, 5)), g)
 
 
 def _q_motif_census(spark, sf_dir):
@@ -780,7 +788,8 @@ def _q_motif_census(spark, sf_dir):
             heavy.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).unionByName(light)
     )
-    return motif_census(Graph.from_edges(de, directed=True))
+    g = Graph.from_edges(de, directed=True)
+    return _stored(motif_census(g), g)
 
 
 def _q_densest(spark, sf_dir):
@@ -790,7 +799,8 @@ def _q_densest(spark, sf_dir):
     fixpoint substrate)."""
     from linkgraph.algos.subgraph import densest_subgraph
 
-    return densest_subgraph(part_graph(spark, sf_dir))
+    g = part_graph(spark, sf_dir)
+    return _stored(densest_subgraph(g), g)
 
 
 def _q_subgraph_census(spark, sf_dir):
@@ -882,15 +892,16 @@ def _q_project_labels(spark, sf_dir):
         .add_edges("contains", contains, "order", "part")
     )
     assert pg.schema()["edges"]["placed"]["relation"] == ("customer", "order")
-    out = None
+    out, graphs = None, []
     for tag, gsel in (
         ("g1", pg.project(vertices={"customer": [], "order": []},
                           edges={"placed": []})),
         ("g2", pg.project(vertices={"order": [], "part": []},
                           edges={"contains": []})),
     ):
+        graphs.append(gsel)
         comp = _wcc(gsel).state
-        degs = gsel.degrees("both")
+        degs = gsel.degrees(True, loops=True, reduce="all")  # every edge end
         r = (
             gsel.vertices.select("id", "label")
             .join(comp, "id", "left")
@@ -902,7 +913,7 @@ def _q_project_labels(spark, sf_dir):
             )
         )
         out = r if out is None else out.unionByName(r)
-    return out
+    return _stored(out, *graphs)
 
 
 def _q_ordering(spark, sf_dir):

@@ -29,7 +29,6 @@ from linkgraph.engine import Observed
 
 
 def make(graph, spark, args):
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # the graph's stored simple directed view, freed by graph.release()
     edges = graph.simple_directed()
     k = args.k
@@ -37,7 +36,7 @@ def make(graph, spark, args):
         "id",
         F.when(F.col("id") == args.source, 0).otherwise(-1).cast("long").alias("hops"),
         (F.col("id") == args.source).alias("fr"),
-    ).repartition(P, "id")
+    )  # handed over as built: the engine lays it out
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("fr")).select(F.col("id").alias("src"))

@@ -93,21 +93,19 @@ def _bfs_forest(
 
     g = graph.materialized()
     edges = g.simple_undirected()
-    n_edges = edges.count()
+    n_edges = g.view_size(symmetric=True)
 
     comp = wcc(g, engine=eng)
     roots = comp.state.where(F.col("id") == F.col("comp")).select("id")
 
     INF = float("inf")
-    verts = g.deduced_vertices()
     init = (
-        verts.join(roots.withColumn("_r", F.lit(1)), "id", "left")
+        g.deduced_vertices().join(roots.withColumn("_r", F.lit(1)), "id", "left")
         .select(
             "id",
             F.when(F.col("_r").isNotNull(), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
             F.col("_r").isNotNull().alias("changed"),
         )
-        .repartition(P, "id")
     )
 
     def step(state: DataFrame, round_: int):

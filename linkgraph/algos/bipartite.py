@@ -69,7 +69,6 @@ def lpa_u2i(
             F.coalesce("od", F.lit(0.0)).alias("od"),
             F.coalesce("ns", F.lit(0.0)).alias("ns"),
         )
-        .repartition(P, "user")
     )
 
     def step(state: DataFrame, round_: int):

@@ -39,16 +39,14 @@ def cdlp(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # the view is symmetric, so scattering each label along src -> dst
     # and grouping by dst counts every neighbour's label once
     edges = g.simple_undirected()
-    n_edges = edges.count()
-    verts = g.deduced_vertices()
-    n_verts = verts.count()
+    n_edges = g.view_size(symmetric=True)
+    n_verts = g.num_vertices()
 
-    init = verts.select("id", F.col("id").alias("label")).repartition(P, "id")
+    init = g.deduced_vertices().select("id", F.col("id").alias("label"))
 
     def step(state: DataFrame, round_: int):
         hist = (

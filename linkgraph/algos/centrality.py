@@ -34,19 +34,18 @@ def eigenvector_centrality(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # distinct pairs with self-loops, symmetrised on an undirected graph
     edges = g.edge_view(symmetric=not g.directed, loops=True)
-    n_edges = edges.count()
+    n_edges = g.view_size(symmetric=not g.directed, loops=True)
     verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
     if n == 0:
         return SuperstepResult(
             state=verts.select("id", F.lit(0.0).alias("centrality")),
             rounds=0, converged=True,
         )
 
-    init = verts.select("id", F.lit(1.0 / n).alias("x")).repartition(P, "id")
+    init = verts.select("id", F.lit(1.0 / n).alias("x"))
     norm: dict[str, float] = {"v": 1.0}
 
     def step(state: DataFrame, round_: int):
@@ -108,19 +107,18 @@ def katz_centrality(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # distinct pairs with self-loops, symmetrised on an undirected graph
     edges = g.edge_view(symmetric=not g.directed, loops=True)
-    n_edges = edges.count()
+    n_edges = g.view_size(symmetric=not g.directed, loops=True)
     verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
     if n == 0:
         return SuperstepResult(
             state=verts.select("id", F.lit(0.0).alias("centrality")),
             rounds=0, converged=True,
         )
 
-    init = verts.select("id", F.lit(beta).alias("x")).repartition(P, "id")
+    init = verts.select("id", F.lit(beta).alias("x"))
 
     def step(state: DataFrame, round_: int):
         state = state.drop("prev")

@@ -59,15 +59,11 @@ def greedy_color(
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     sym = g.simple_undirected()
-    n_edges = sym.count()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg"))
-    verts = g.deduced_vertices()
+    n_edges = g.view_size(symmetric=True)
 
     # orient each undirected pair higher-priority -> lower-priority
     # once; every round's messages flow down this DAG only
-    dv = verts.join(deg, "id", "left").select(
-        "id", F.coalesce("deg", F.lit(0)).alias("deg")
-    )
+    dv = g.degrees(symmetric=True).withColumnRenamed("degree", "deg")
     oriented = (
         sym.join(dv.select(F.col("id").alias("src"), F.col("deg").alias("ds")), "src")
         .join(dv.select(F.col("id").alias("dst"), F.col("deg").alias("dd")), "dst")
@@ -83,9 +79,9 @@ def greedy_color(
 
     # init: mex of the empty set — vertices with no higher-priority
     # neighbor are already final at color 0
-    init = verts.select(
+    init = g.deduced_vertices().select(
         "id", F.lit(0).cast("long").alias("color"), F.lit(True).alias("_chg")
-    ).repartition(P, "id")
+    )
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("_chg")).select(F.col("id").alias("src"))
@@ -142,10 +138,9 @@ def fluid_community(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     sym = g.simple_undirected()
-    n_edges = sym.count()
+    n_edges = g.view_size(symmetric=True)
     verts = g.deduced_vertices()
 
     seeds = verts.orderBy("id").limit(n_communities).select(
@@ -154,7 +149,6 @@ def fluid_community(
     init = (
         verts.join(seeds.withColumnRenamed("lab", "_s"), "id", "left")
         .select("id", F.coalesce("_s", F.lit(-1)).cast("long").alias("lab"))
-        .repartition(P, "id")
     )
 
     def step(state: DataFrame, round_: int):

@@ -64,18 +64,10 @@ def kshell(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = g.simple_undirected()
-    n_edges = edges.count()
-    verts = g.deduced_vertices()
-
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    init = (
-        verts.join(deg, "id", "left")
-        .select("id", F.coalesce("d", F.lit(0)).cast("long").alias("h"))
-        .repartition(P, "id")
-    )
-    n_verts = verts.count()
+    n_edges = g.view_size(symmetric=True)
+    init = g.degrees(symmetric=True).select("id", F.col("degree").alias("h"))
+    n_verts = g.num_vertices()
 
     # H-index values are monotone non-increasing and h(v) can only move
     # when some neighbor's h moved, so late rounds (the long tail of the

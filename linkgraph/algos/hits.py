@@ -42,13 +42,12 @@ def hits(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # the stored directions as distinct pairs, self-loops kept
     edges = g.edge_view(symmetric=False, loops=True)
-    n_edges = edges.count()
+    n_edges = g.view_size(symmetric=False, loops=True)
     verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
     if n == 0:
         return SuperstepResult(
             state=verts.select("id", F.lit(0.0).alias("hub"), F.lit(0.0).alias("auth")),
@@ -63,7 +62,7 @@ def hits(
         F.lit(1.0).alias("rh"),
         F.lit(1.0).alias("prev_hub"),
         F.lit(1.0).alias("prev_auth"),
-    ).repartition(P, "id")
+    )
     norms: dict[str, float] = {"na": 1.0, "nh": 1.0}
 
     def step(state: DataFrame, round_: int):

@@ -61,10 +61,9 @@ def louvain_local_move(
     """
     spark = edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     bcast_sig = n_nodes is not None and n_nodes <= BROADCAST_COMMS_MAX
 
-    init = nodes.select("id", F.col("id").alias("c"), "k", "internal").repartition(P, "id")
+    init = nodes.select("id", F.col("id").alias("c"), "k", "internal")
     # a round with zero moves is NOT a fixpoint by itself: the parity
     # guard may cancel a move on round r that round r+1 would allow —
     # halt only after two consecutive clean rounds (both parities)
@@ -175,7 +174,7 @@ def louvain_phase1(
     )
     m2 = nodes.agg(F.sum("k")).collect()[0][0] or 1.0
     res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
-                             n_nodes=nodes.count())
+                             n_nodes=g.num_vertices())
     res.state = res.state.select("id", F.col("c").alias("community"))
     return res
 
@@ -212,7 +211,7 @@ def louvain(
 
     mapping = None  # original id -> current supernode id
     total_rounds = 0
-    n_nodes = nodes.count()
+    n_nodes = g.num_vertices()
     for level in range(max_levels):
         res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
                                  n_nodes=n_nodes)

@@ -47,14 +47,14 @@ from linkgraph.joins import scatter_join, state_join
 OPEN, IN_SET, DOMINATED = 0, 1, 2
 
 
-def _closed(g: Graph, P: int) -> DataFrame:
+def _closed(g: Graph) -> DataFrame:
     """Closed neighbourhoods as (src, dst): the simple undirected edges
     plus one self-loop per vertex, so one scatter reaches a vertex and
-    its neighbours and each derived frame is read once per round."""
+    its neighbours and each derived frame is read once per round.
+    Persisted; the first round that reads it stores it."""
     loops = g.deduced_vertices().select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    closed = g.simple_undirected().unionByName(loops).repartition(P, "src").persist()
-    closed.count()
-    return closed
+    P = int(g.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return g.simple_undirected().unionByName(loops).repartition(P, "src").persist()
 
 
 def _settle(state: DataFrame, closed: DataFrame, sel: DataFrame, n: int) -> DataFrame:
@@ -90,20 +90,17 @@ def mis(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    closed = _closed(g, P)
-    n = g.deduced_vertices().count()
+    closed = _closed(g)
+    n = g.num_vertices()
 
     # priority r(v) = (deg, id) compared LEXICOGRAPHICALLY: a strict
     # total order for arbitrary long ids (the reference's deg·n + id
     # arithmetic assumes ids dense in [0, n) — with sparse ids two
     # adjacent vertices can tie and neither is ever a strict local
     # minimum, stalling the greedy loop).
-    init = (
-        closed.groupBy(F.col("src").alias("id"))
-        .agg((F.count("*") - 1).alias("d"))
-        .select("id", F.struct("d", F.col("id").alias("i")).alias("r"), F.lit(OPEN).alias("st"))
-    )
+    init = g.degrees(symmetric=True).select(
+        "id", F.struct(F.col("degree").alias("d"), F.col("id").alias("i")).alias("r"),
+        F.lit(OPEN).alias("st"))
 
     def step(state: DataFrame, round_: int):
         undecided = state.where(F.col("st") == OPEN)
@@ -136,14 +133,12 @@ def maximal_matching(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = g.simple_undirected()
-    verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
 
     # `new` marks the vertices matched in the round that wrote the state
-    init = verts.select("id", F.lit(-1).cast("long").alias("match"),
-                        F.lit(False).alias("new")).repartition(P, "id")
+    init = g.deduced_vertices().select("id", F.lit(-1).cast("long").alias("match"),
+                                       F.lit(False).alias("new"))
 
     def step(state: DataFrame, round_: int):
         # p(v) = max unmatched neighbour id; only unmatched vertices
@@ -185,11 +180,9 @@ def min_dominating_set(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    closed = _closed(g, P)
-    verts = g.deduced_vertices()
-    n = verts.count()
-    init = verts.select("id", F.lit(OPEN).alias("st")).repartition(P, "id")
+    closed = _closed(g)
+    n = g.num_vertices()
+    init = g.deduced_vertices().select("id", F.lit(OPEN).alias("st"))
 
     def step(state: DataFrame, round_: int):
         active = state.where(F.col("st") == OPEN).select("id")
@@ -239,16 +232,11 @@ def min_vertex_cover(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     edges = g.simple_undirected()
-    verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
 
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
     # d = residual degree; active = not in the cover with d > 0
-    init = state_join(verts, deg).select(
-        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"), F.lit(False).alias("c")
-    ).repartition(P, "id")
+    init = g.degrees(symmetric=True).select("id", F.col("degree").alias("d"), F.lit(False).alias("c"))
     active = ~F.col("c") & (F.col("d") > 0)
 
     def admit(state: DataFrame, round_: int):

@@ -65,16 +65,10 @@ def _degree_waves(graph: Graph, limit: F.Column, stamp: str,
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    edges = g.simple_undirected()
-    verts = g.deduced_vertices()
-    n = verts.count()
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
-    init = state_join(verts, deg).select(
-        "id", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
-        F.lit(-1).cast("long").alias(stamp),
-    ).repartition(P, "id")
-    return eng.run(init, _waves(edges, limit, stamp, n), max_rounds=max_rounds)
+    init = g.degrees(symmetric=True).select(
+        "id", F.col("degree").alias("d"), F.lit(-1).cast("long").alias(stamp))
+    return eng.run(init, _waves(g.simple_undirected(), limit, stamp, g.num_vertices()),
+                   max_rounds=max_rounds)
 
 
 def _peeled(result: SuperstepResult, stamp: str) -> SuperstepResult:
@@ -133,18 +127,15 @@ def onion_layers(
         .groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("d"))
     )
-    verts = g.deduced_vertices()
-    n = verts.count()
     init = (
-        verts.join(sh, "id", "left")
+        g.deduced_vertices().join(sh, "id", "left")
         .join(d0.hint("SHUFFLE_HASH"), "id", "left")
         .select("id", "core", F.coalesce("d", F.lit(0)).cast("long").alias("d"),
                 F.lit(-1).cast("long").alias("layer"))
-        .repartition(P, "id")
     )
     eng = SuperstepEngine(spark)
     same_core = ec.where(F.col("cs") == F.col("cd"))
-    result = _peeled(eng.run(init, _waves(same_core, F.col("core"), "layer", n),
+    result = _peeled(eng.run(init, _waves(same_core, F.col("core"), "layer", g.num_vertices()),
                              max_rounds=max_rounds), "layer")
     ec.unpersist()
     return result

@@ -38,23 +38,16 @@ def _rank_inputs(g: Graph, directed: bool) -> tuple[DataFrame, int, DataFrame]:
     """(edges, n_edges, deg) of the rank algorithms over the cut graph
     `g`: the (src, dst) message edges, read from the graph's stored
     view (hash-partitioned on src, so every superstep's scatter reuses
-    that layout), their count, and the (id, deg) out-degree of every
-    vertex.
+    that layout), their count, and the view's stored (id, deg)
+    out-degree of every vertex.
 
     Directed: every stored row, self-loops and parallel edges counted.
     Undirected: both directions of the deduped edge set, u→v AND v→u
     exactly once each (a second symmetrize would double every
     superstep's join/shuffle work; VERDICT r1 "what's wrong" #2)."""
-    edges = g.edge_view(symmetric=not directed, loops=True,
-                        reduce="all" if directed else "distinct")
-    n_edges = edges.count()
-    deg = (
-        g.deduced_vertices().join(
-            edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("deg")),
-            "id", "left",
-        ).select("id", F.coalesce("deg", F.lit(0)).cast("long").alias("deg"))
-    )
-    return edges, n_edges, deg
+    view = (not directed, True, "all" if directed else "distinct")
+    deg = g.degrees(*view).withColumnRenamed("degree", "deg")
+    return g.edge_view(*view), g.view_size(*view), deg
 
 
 def pagerank(
@@ -85,10 +78,9 @@ def pagerank(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = _rank_inputs(g, g.directed)
-    n = deg.count()
+    n = g.num_vertices()
     if n == 0:
         return SuperstepResult(state=deg.select("id", F.lit(0.0).alias("rank")),
                                rounds=0, converged=True)
@@ -104,7 +96,6 @@ def pagerank(
         init = seeded.select("id", "deg", (F.col("rank") / F.lit(float(s))).alias("rank"))
     else:
         init = deg.select("id", "deg", F.lit(1.0 / n).alias("rank"))
-    init = init.repartition(P, "id")
 
     # dangling mass is computed lazily from the current state (so a
     # resumed run rebuilds it from the checkpoint), then carried
@@ -205,16 +196,15 @@ def ppr(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = _rank_inputs(g, directed)
-    n = deg.count()
+    n = g.num_vertices()
 
     restart = F.when(F.col("id") == source, F.lit(1.0 - alpha)).otherwise(0.0)
     init = deg.select(
         "id", "deg",
         F.when(F.col("id") == source, F.lit(1.0)).otherwise(0.0).alias("rank"),
-    ).repartition(P, "id")
+    )
 
     def step(state: DataFrame, round_: int):
         msgs = state.where(F.col("deg") > 0).select(
@@ -257,13 +247,12 @@ def articlerank(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     edges, n_edges, deg = _rank_inputs(g, True)
-    n = deg.count()
-    avg = (deg.agg(F.sum("deg")).collect()[0][0] or 0) / float(n) if n else 0.0
+    n = g.num_vertices()
+    avg = n_edges / float(n) if n else 0.0
 
-    init = deg.select("id", "deg", F.lit(0.0).alias("rank")).repartition(P, "id")
+    init = deg.select("id", "deg", F.lit(0.0).alias("rank"))
 
     def step(state: DataFrame, round_: int):
         msgs = state.select(

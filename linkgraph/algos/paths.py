@@ -78,24 +78,20 @@ def multi_source_bfs(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     use_directed = g.directed if directed is None else directed
-    edges = g.simple_directed() if use_directed else g.simple_undirected()
+    edges = g.edge_view(symmetric=not use_directed)
+    n_edges = g.view_size(symmetric=not use_directed)
     reversed_ = reverse and use_directed
     if reversed_:
         # reverse BFS: a column swap of the directed view, re-keyed on
         # its new src so every round's scatter still moves only the
-        # frontier
+        # frontier (stored by the first round that reads it)
+        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
         edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")) \
                      .repartition(P, "src").persist()
-    n_edges = edges.count()
 
-    init = (
-        _sources_df(g, sources)
-        .select("s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"),
-                F.lit(True).alias("fr"))
-        .repartition(P, "id")
-    )
+    init = _sources_df(g, sources).select(
+        "s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"), F.lit(True).alias("fr"))
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("fr")).select("s", F.col("id").alias("src"))
@@ -145,17 +141,13 @@ def multi_source_sssp(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # the lightest of parallel edges, self-loops dropped
-    edges = g.edge_view(not (g.directed if directed is None else directed), reduce="min")
-    n_edges = edges.count()
+    symmetric = not (g.directed if directed is None else directed)
+    edges = g.edge_view(symmetric, reduce="min")
+    n_edges = g.view_size(symmetric, reduce="min")
 
-    init = (
-        _sources_df(g, sources)
-        .select("s", F.col("s").alias("id"), F.lit(0.0).alias("dist"),
-                F.lit(True).alias("fr"))
-        .repartition(P, "id")
-    )
+    init = _sources_df(g, sources).select(
+        "s", F.col("s").alias("id"), F.lit(0.0).alias("dist"), F.lit(True).alias("fr"))
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("fr")).select(
@@ -386,10 +378,9 @@ def betweenness_centrality(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     use_directed = g.directed if directed is None else directed
-    edges = g.simple_directed() if use_directed else g.simple_undirected()
-    n_edges = edges.count()
+    edges = g.edge_view(symmetric=not use_directed)
+    n_edges = g.view_size(symmetric=not use_directed)
     src_df = _sources_df(g, sources)
     k = src_df.count()
 
@@ -397,7 +388,7 @@ def betweenness_centrality(
     init = src_df.select(
         "s", F.col("s").alias("id"), F.lit(0).cast("long").alias("depth"),
         F.lit(1.0).alias("sigma"), F.lit(True).alias("fr")
-    ).repartition(P, "id")
+    )
 
     def fwd_step(state: DataFrame, round_: int):
         frontier = state.where(F.col("fr")).select(
@@ -427,8 +418,7 @@ def betweenness_centrality(
     # one full-frame superstep per depth (a per-layer loop measured
     # 2.4x slower at 1.3M pairs, BASELINE.md "Betweenness backward-pass
     # A/B")
-    binit = depth_sigma.select("s", "id", "depth", "sigma",
-                               F.lit(0.0).alias("delta")).repartition(P, "id")
+    binit = depth_sigma.select("s", "id", "depth", "sigma", F.lit(0.0).alias("delta"))
 
     def bwd_step(state: DataFrame, round_: int):
         d = max_depth - 1 - round_
@@ -501,13 +491,10 @@ def k_center(
     """
     g = graph.materialized()
     use_directed = g.directed if directed is None else directed
-    sym = g.simple_directed() if use_directed else g.simple_undirected()
     verts = g.deduced_vertices()
-    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("d"))
     first = (
-        verts.join(deg, "id", "left")
-        .select("id", F.coalesce("d", F.lit(0)).alias("d"))
-        .orderBy(F.col("d").desc(), F.col("id").asc())
+        g.degrees(symmetric=not use_directed)
+        .orderBy(F.col("degree").desc(), F.col("id").asc())
         .limit(1)
         .collect()[0]["id"]
     )

@@ -44,11 +44,11 @@ def voterank(
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     use_directed = g.directed if directed is None else directed
     # every election joins the abilities on dst: key the view that way
-    e = (g.simple_directed() if use_directed else g.simple_undirected()) \
-        .repartition(P, "dst").persist()
-    n_edges = e.count()
+    # (stored by the first election that reads it)
+    e = g.edge_view(symmetric=not use_directed).repartition(P, "dst").persist()
+    n_edges = g.view_size(symmetric=not use_directed)
     verts = g.deduced_vertices()
-    n = verts.count()
+    n = g.num_vertices()
     if n == 0 or n_edges == 0:
         e.unpersist()
         return verts.select("id", F.lit(0).cast("long").alias("vote_rank")).limit(0)

@@ -57,7 +57,7 @@ def scc(
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     fwd = g.simple_directed()
-    n_edges = fwd.count()
+    n_edges = g.view_size(symmetric=False)
 
     active = g.deduced_vertices().select("id").repartition(P, "id") \
                   .localCheckpoint(eager=True)

@@ -65,9 +65,7 @@ def degree_assortativity(
         dt = _deg_frame(graph, target_degree)
     else:
         e = graph.simple_undirected()
-        ds = dt = _deg_frame(
-            Graph.from_edges(e, directed=True), "out"
-        )  # total degree on the symmetric view
+        ds = dt = graph.degrees(symmetric=True).withColumnRenamed("degree", "deg")
     row = (
         e.join(ds.select(F.col("id").alias("src"), F.col("deg").alias("dx")), "src")
         .join(dt.select(F.col("id").alias("dst"), F.col("deg").alias("dy")), "dst")
@@ -124,7 +122,7 @@ def average_degree_connectivity(
         dt = _deg_frame(graph, "in")
     else:
         e = graph.simple_undirected()
-        ds = dt = _deg_frame(Graph.from_edges(e, directed=True), "out")
+        ds = dt = graph.degrees(symmetric=True).withColumnRenamed("degree", "deg")
     return (
         e.join(ds.select(F.col("id").alias("src"), F.col("deg").alias("dx")), "src")
         .join(dt.select(F.col("id").alias("dst"), F.col("deg").alias("dy")), "dst")
@@ -185,8 +183,9 @@ def clustering_directed(graph: Graph) -> DataFrame:
         .groupBy(F.col("src").alias("id"))
         .agg((F.count("*")).cast("double").alias("dr"))
     )
-    # degree-ordered orientation ON THE SUPPORT graph bounds hub work
-    sup_deg = bsym.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("sd"))
+    # degree-ordered orientation ON THE SUPPORT graph (the simple
+    # undirected view) bounds hub work
+    sup_deg = g.degrees(symmetric=True).withColumnRenamed("degree", "sd")
     ori = (
         bsym.join(sup_deg.select(F.col("id").alias("src"), F.col("sd").alias("ds")), "src")
         .join(sup_deg.select(F.col("id").alias("dst"), F.col("sd").alias("dd")), "dst")

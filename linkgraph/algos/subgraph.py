@@ -67,11 +67,11 @@ def kclique_counts(graph: Graph, ks: tuple[int, ...] = (3, 4, 5)) -> DataFrame:
     exactly once, hub fan-out bounded by oriented out-degree."""
     ks = tuple(sorted(set(ks)))
     kmax = ks[-1]
-    e, _, verts = _oriented(graph)
+    e, _, _ = _oriented(graph)
     e = e.persist()
     counts: dict[int, int] = {}
     if 1 in ks:
-        counts[1] = verts.count()
+        counts[1] = graph.materialized().num_vertices()
     if 2 in ks:
         counts[2] = e.count()
     cur = e.select(F.col("src").alias("v1"), F.col("dst").alias("v2"))
@@ -109,8 +109,8 @@ def motif_census(graph: Graph) -> DataFrame:
 
     Every column is an independent aggregate subtree over the shared
     edge frames; Spark runs them as parallel stages under one job. The
-    frames are plans over the graph's two stored views, so the call
-    keeps no cached frame of its own."""
+    frames are plans over the graph's stored views and degree frame,
+    so the call keeps no cached frame of its own."""
     g = graph.materialized()
     d = g.simple_directed()
     sym = g.simple_undirected()

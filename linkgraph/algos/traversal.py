@@ -70,21 +70,20 @@ def _relax(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
     symmetric = not (g.directed if directed is None else directed)
-    edges = (g.edge_view(symmetric, reduce="min") if w
-             else g.edge_view(symmetric).withColumn("w", F.lit(1.0)))
-    n_edges = edges.count()
-
-    verts = g.deduced_vertices()
-    n_verts = verts.count()
+    reduce = "min" if w else "distinct"
+    edges = g.edge_view(symmetric, reduce=reduce)
+    if not w:
+        edges = edges.withColumn("w", F.lit(1.0))
+    n_edges = g.view_size(symmetric, reduce=reduce)
+    n_verts = g.num_vertices()
     is_source = F.col("id") == source
-    init = verts.select(
+    init = g.deduced_vertices().select(
         "id",
         F.when(is_source, F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
         F.when(is_source, F.col("id")).alias("pred"),
         is_source.alias("changed"),
-    ).repartition(P, "id")
+    )
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("changed")).select(

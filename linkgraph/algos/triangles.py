@@ -27,11 +27,12 @@ from linkgraph.graph import Graph
 def _oriented(graph: Graph):
     """Undirected simple edge set oriented by (deg, id); returns
     (oriented_edges(src,dst), degrees(id,degree), vertices(id)). A
-    plan over the graph's stored undirected view: nothing here is
-    persisted, so a caller keeps no cached frame of its own."""
+    plan over the graph's stored undirected view and its stored degree
+    frame (0 for an isolated vertex): nothing here is persisted, so a
+    caller keeps no cached frame of its own."""
     g = graph.materialized()
     und = g.simple_undirected()
-    deg = und.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
+    deg = g.degrees(symmetric=True)
     e = (
         und.join(deg.select(F.col("id").alias("src"), F.col("degree").alias("ds")), "src")
         .join(deg.select(F.col("id").alias("dst"), F.col("degree").alias("dd")), "dst")

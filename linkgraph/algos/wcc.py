@@ -36,16 +36,13 @@ def wcc(
     g = graph.materialized()
     spark = g.edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     # undirected message graph: both directions, deduped, no self-loops
     edges = g.simple_undirected()
-    n_edges = edges.count()
-
-    verts = g.deduced_vertices()
-    n = verts.count()
+    n_edges = g.view_size(symmetric=True)
+    n = g.num_vertices()
     # state: (id, comp, changed); init comp = id, everyone in frontier
-    init = verts.select("id", F.col("id").alias("comp"), F.lit(True).alias("changed")).repartition(P, "id")
+    init = g.deduced_vertices().select("id", F.col("id").alias("comp"), F.lit(True).alias("changed"))
 
     def step(state: DataFrame, round_: int):
         frontier = state.where(F.col("changed"))

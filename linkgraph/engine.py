@@ -113,6 +113,12 @@ class SuperstepEngine:
       The metrics may contain 'halt': True to vote-to-halt, plus any
       scalars (l1_delta, frontier, ...).
 
+    Layout: a fresh (not resumed) initial state is repartitioned
+    across ``spark.sql.shuffle.partitions``, on ``id`` when the state
+    has that column and round-robin otherwise, so an algorithm hands
+    over its initial state as built. A resumed state is read back from
+    its checkpoint as written.
+
     Lineage control: the plan is truncated EVERY round — durably
     (parquet write+read under checkpoint_dir, on the
     ``checkpoint_every`` cadence and at halt) or in-memory
@@ -246,12 +252,18 @@ class SuperstepEngine:
         resume: bool = False,
         start_round: int = 0,
     ) -> SuperstepResult:
-        state = initial_state
-        if resume:
-            latest = self.latest_checkpoint()
-            if latest is not None:
-                start_round, state = latest
-                start_round += 1
+        latest = self.latest_checkpoint() if resume else None
+        if latest is not None:
+            start_round, state = latest
+            start_round += 1
+        else:
+            # a fresh state is laid out across the shuffle partitions,
+            # hashed on its vertex key where it has one: round 0's map
+            # side runs P tasks however few partitions the algorithm's
+            # prologue produced. Later rounds re-shuffle the state in
+            # their joins (a local checkpoint keeps no partitioning).
+            P = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            state = initial_state.repartition(P, *(["id"] if "id" in initial_state.columns else []))
 
         state = state.localCheckpoint(
             eager=True, storageLevel=self.truncate_level

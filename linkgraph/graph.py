@@ -19,8 +19,13 @@ vertex ids), and every message edge frame an algorithm traverses
 (`edge_view()`: stored or symmetrised, with or without self-loops,
 distinct pairs, all rows, or the lightest or summed weight per pair)
 is built from that cut once, hash-partitioned on src and persisted.
-`release()` is the one point that frees them; until then every
-algorithm call on the Graph reads the same stored rows.
+The sizes those builds measure are kept with them: each view's row
+count (`view_size()`) and the cut's vertex count (`num_vertices()`),
+and `degrees()` stores each view's (id, degree) frame over the cut's
+vertex ids, so an algorithm's prologue reads its counts and degrees
+instead of recounting them. `release()` is the one point that frees
+them; until then every algorithm call on the Graph reads the same
+stored rows.
 """
 
 from __future__ import annotations
@@ -70,14 +75,18 @@ class Graph:
     vertices: DataFrame | None = None
     directed: bool = True
     weight_col: str | None = None
-    _num_vertices: int | None = field(default=None, repr=False)
-    _num_edges: int | None = field(default=None, repr=False)
-    # memoised input cut (see materialized()); init=False, so graphs
-    # derived with dataclasses.replace() never inherit it
+    # memoised sizes and input cut (see materialized()); init=False, so
+    # graphs derived with dataclasses.replace() never inherit them
+    _num_vertices: int | None = field(default=None, init=False, repr=False, compare=False)
+    _num_edges: int | None = field(default=None, init=False, repr=False, compare=False)
     _cut: "Graph | None" = field(default=None, init=False, repr=False, compare=False)
-    # edge views of the cut (see edge_view()); one dict, shared with
-    # the cut, so release() frees the views together with the cut
+    # stored frames of the cut, keyed by (symmetric, loops, reduce):
+    # the edge views (see edge_view()), their row counts and their
+    # degree frames (see degrees()); shared with the cut, so release()
+    # frees them together with the cut
     _views: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _view_rows: dict = field(default_factory=dict, init=False, repr=False, compare=False)
+    _degrees: dict = field(default_factory=dict, init=False, repr=False, compare=False)
 
     # -- construction -------------------------------------------------
 
@@ -132,20 +141,22 @@ class Graph:
             ids = self.vertices.select("id") if self.vertices is not None else cut.deduced_vertices()
             cut.vertices = _checkpoint(ids)
             cut._cut = cut
-            cut._views = self._views
+            cut._views, cut._view_rows, cut._degrees = self._views, self._view_rows, self._degrees
             self._cut = cut
         return self._cut
 
     def release(self) -> None:
-        """Drop the memoised cut and unpersist its edge views; the next
-        algorithm call takes a new cut. Spark's ContextCleaner frees the
-        cut's stored blocks once the JVM collects the checkpointed RDD
-        (unpersist() on a local checkpoint frees nothing in PySpark
-        4.1.2); the views are persisted frames, so they are unpersisted
-        here."""
-        for view in self._views.values():
-            view.unpersist()
+        """Drop the memoised cut and unpersist its edge views and degree
+        frames; the next algorithm call takes a new cut. Spark's
+        ContextCleaner frees the cut's stored blocks once the JVM
+        collects the checkpointed RDD (unpersist() on a local checkpoint
+        frees nothing in PySpark 4.1.2); the views and degree frames are
+        persisted frames, so they are unpersisted here."""
+        for frame in (*self._views.values(), *self._degrees.values()):
+            frame.unpersist()
         self._views.clear()
+        self._view_rows.clear()
+        self._degrees.clear()
         self._cut = None
 
     # -- projections / views (PROJECT_TO_SIMPLE, TO_UNDIRECTED, ...) ---
@@ -212,32 +223,64 @@ class Graph:
         never moves it; P is the session's spark.sql.shuffle.partitions),
         reduced inside those partitions (they cluster every (src, dst)
         pair) and persisted, then memoised beside the cut until
-        release(). A persist, not a local checkpoint: a checkpoint taken
-        after the repartition loses the hash partitioning under AQE."""
-        if reduce not in ("distinct", "all", "min", "sum"):
-            raise ValueError(f"reduce must be distinct/all/min/sum, got {reduce!r}")
-        if reduce == "min" and self.weight_col is None:
-            return self.edge_view(symmetric, loops).withColumn("w", F.lit(1.0))
-        cut = self.materialized()
-        key = (symmetric, loops, reduce)
+        release(), with the row count its build takes (view_size()).
+        A persist, not a local checkpoint: a checkpoint taken after the
+        repartition loses the hash partitioning under AQE."""
+        key = self._view_key(symmetric, loops, reduce)
+        stored = key[2]
         if key not in self._views:
+            cut = self.materialized()
             P = int(cut.edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
             e = cut.symmetrized_edges() if symmetric else cut.edges
-            weighted = reduce in ("min", "sum")
+            weighted = stored in ("min", "sum")
             w = (F.col(self.weight_col) if self.weight_col else F.lit(1.0)).cast("double")
             e = e.select("src", "dst", *([w.alias("w")] if weighted else []))
             if not loops:
                 e = e.where(F.col("src") != F.col("dst"))
             e = e.repartition(P, "src")
-            if reduce == "distinct":
+            if stored == "distinct":
                 e = e.dropDuplicates(["src", "dst"])
             elif weighted:
-                agg = F.min("w") if reduce == "min" else F.sum("w")
+                agg = F.min("w") if stored == "min" else F.sum("w")
                 e = e.groupBy("src", "dst").agg(agg.alias("w"))
             view = e.persist()
-            view.count()
+            self._view_rows[key] = view.count()
             self._views[key] = view
-        return self._views[key]
+        view = self._views[key]
+        return view.withColumn("w", F.lit(1.0)) if stored != reduce else view
+
+    def _view_key(self, symmetric: bool, loops: bool, reduce: str) -> tuple:
+        if not isinstance(symmetric, bool):  # e.g. a direction name: degrees("out")
+            raise TypeError(f"symmetric must be a bool, got {symmetric!r}")
+        if reduce not in ("distinct", "all", "min", "sum"):
+            raise ValueError(f"reduce must be distinct/all/min/sum, got {reduce!r}")
+        if reduce == "min" and self.weight_col is None:
+            reduce = "distinct"
+        return (symmetric, loops, reduce)
+
+    def view_size(self, symmetric: bool, loops: bool = False, reduce: str = "distinct") -> int:
+        """Row count of edge_view(symmetric, loops, reduce), kept from
+        the job that stored the view."""
+        self.edge_view(symmetric, loops, reduce)
+        return self._view_rows[self._view_key(symmetric, loops, reduce)]
+
+    def degrees(self, symmetric: bool, loops: bool = False, reduce: str = "distinct") -> DataFrame:
+        """(id, degree): the out-degree of every vertex id of the cut in
+        edge_view(symmetric, loops, reduce), 0 where the vertex has no
+        edge there. Stored once per view kind beside the cut and
+        unpersisted by release(); its build also keeps the cut's
+        num_vertices(). degrees(True, loops=True, reduce="all") counts
+        every edge end, a self-loop twice (the degree of REPORT_GRAPH)."""
+        key = self._view_key(symmetric, loops, reduce)
+        if key not in self._degrees:
+            d = self.edge_view(*key).groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
+            cut = self.materialized()
+            deg = cut.vertices.join(d, "id", "left").select(
+                "id", F.coalesce("degree", F.lit(0)).cast("long").alias("degree")
+            ).persist()
+            cut._num_vertices = deg.count()
+            self._degrees[key] = deg
+        return self._degrees[key]
 
     def induce_subgraph(self, vertex_ids: DataFrame) -> "Graph":
         """INDUCE_SUBGRAPH (types.proto:104): keep edges whose both
@@ -249,35 +292,17 @@ class Graph:
             .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
         )
         v = self.vertices.join(ids, "id", "left_semi") if self.vertices is not None else None
-        return replace(self, edges=e, vertices=v, _num_vertices=None, _num_edges=None)
+        return replace(self, edges=e, vertices=v)
 
     def filter_edges(self, condition) -> "Graph":
         """CLEAR_EDGES/VIEW_GRAPH-style edge filter."""
-        return replace(self, edges=self.edges.where(condition), _num_edges=None)
+        return replace(self, edges=self.edges.where(condition))
 
-    # -- degrees & stats (REPORT_GRAPH) --------------------------------
-
-    def degrees(self, direction: str = "out") -> DataFrame:
-        """Per-vertex degree: 'in', 'out' or 'both'. Vertices with no
-        incident edge get degree 0 (left join against the vertex set).
-        Returns (id, degree)."""
-        if direction == "out":
-            d = self.edges.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
-        elif direction == "in":
-            d = self.edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("degree"))
-        elif direction == "both":
-            ends = self.edges.select(F.col("src").alias("id")).unionAll(
-                self.edges.select(F.col("dst").alias("id"))
-            )
-            d = ends.groupBy("id").agg(F.count("*").alias("degree"))
-        else:
-            raise ValueError(f"direction must be in/out/both, got {direction!r}")
-        base = self.deduced_vertices()
-        return base.join(d, "id", "left").select(
-            "id", F.coalesce("degree", F.lit(0)).cast("long").alias("degree")
-        )
+    # -- sizes (REPORT_GRAPH) ----------------------------------------
 
     def num_vertices(self) -> int:
+        """Vertex count, memoised: on the cut, the count of its stored
+        ids (kept by the first degrees() build when that comes first)."""
         if self._num_vertices is None:
             self._num_vertices = self.deduced_vertices().count()
         return self._num_vertices

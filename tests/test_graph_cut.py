@@ -123,9 +123,11 @@ def _weighted_edges(seed: int = 7) -> pd.DataFrame:
 @pytest.mark.parametrize("directed", [True, False], ids=["directed", "undirected"])
 def test_edge_views_hold_the_expected_rows(spark, directed):
     """Each view holds the rows its (symmetric, loops, reduce) names,
+    keeps their count and stores the out-degree of every vertex in it,
     against a pandas derivation of the same input; an unweighted
     graph's "min" view is its distinct view with w = 1.0."""
     pdf = _weighted_edges()
+    ids = np.union1d(pdf["src"], pdf["dst"])
     g = Graph.from_edges(spark.createDataFrame(pdf), directed=directed, weight_col="w")
     for symmetric, loops, reduce in VIEW_KINDS.values():
         e = pd.concat([pdf, pdf.rename(columns={"src": "dst", "dst": "src"})]) if symmetric else pdf
@@ -140,7 +142,15 @@ def test_edge_views_hold_the_expected_rows(spark, directed):
         cols = list(e.columns)
         assert got.columns.tolist() == cols
         assert got.sort_values(cols).to_numpy().tolist() == e.sort_values(cols).to_numpy().tolist()
+        assert g.view_size(symmetric, loops, reduce) == len(e)
+        deg = g.degrees(symmetric, loops, reduce).toPandas().sort_values("id")
+        assert deg["id"].tolist() == ids.tolist()
+        assert deg["degree"].tolist() == e.groupby("src").size().reindex(ids, fill_value=0).tolist()
+    assert g.materialized().num_vertices() == len(ids)
+    with pytest.raises(TypeError, match="symmetric must be a bool"):
+        g.degrees("out")
     g.release()
+    assert not (g._view_rows or g._degrees)
 
     unweighted = Graph.from_edges(spark.createDataFrame(pdf[["src", "dst"]]), directed=directed)
     got = unweighted.edge_view(True, reduce="min").toPandas()
@@ -195,6 +205,16 @@ def test_derived_graphs_take_their_own_cut(spark):
     keep = src < dst
     filtered = pagerank(g.filter_edges(F.col("src") < F.col("dst")), tol=0.0, max_iter=3)
     _assert_pagerank(filtered.state, src[keep], dst[keep], tol=0.0, max_iter=3)
+
+
+def test_derived_graphs_count_their_own_sizes(spark):
+    """Size memos are not copied into derived graphs: on a 3-edge path,
+    the symmetrized graph counts its 6 rows and a filtered one its 2
+    remaining vertices."""
+    g = Graph.from_edges(_frame(spark, np.array([0, 1, 2]), np.array([1, 2, 3])))
+    assert (g.num_vertices(), g.num_edges()) == (4, 3)
+    assert g.to_undirected().num_edges() == 6
+    assert g.filter_edges(F.col("src") == 0).num_vertices() == 2
 
 
 def test_cut_projects_columns_and_release_drops_it(spark):
@@ -415,8 +435,9 @@ def _refresh_twice(spark, tmp_path):
 
 
 def _lineitem(tmp_path) -> str:
-    """A small co-purchase corpus: a lineitem table of 300 orders of
-    1-7 lines over 80 parts, in the layout the entry queries read."""
+    """A small co-purchase corpus in the layout the entry queries read:
+    a lineitem table of 300 orders of 1-7 lines over 80 parts, and the
+    orders (of 40 customers), customer and part tables."""
     rng = np.random.default_rng(9)
     lines = rng.integers(1, 8, 300)
     sf = tmp_path / "sf"
@@ -424,6 +445,12 @@ def _lineitem(tmp_path) -> str:
     pd.DataFrame({"l_orderkey": np.repeat(np.arange(300, dtype=np.int64), lines),
                   "l_partkey": rng.integers(0, 80, lines.sum()).astype(np.int64)}) \
         .to_parquet(sf / "lineitem.parquet")
+    pd.DataFrame({"o_orderkey": np.arange(300, dtype=np.int64),
+                  "o_custkey": rng.integers(0, 40, 300).astype(np.int64)}).to_parquet(sf / "orders.parquet")
+    pd.DataFrame({"c_custkey": np.arange(40, dtype=np.int64),
+                  "c_nationkey": np.arange(40, dtype=np.int64) % 5}).to_parquet(sf / "customer.parquet")
+    pd.DataFrame({"p_partkey": np.arange(80, dtype=np.int64),
+                  "p_size": np.arange(80, dtype=np.int64) % 7}).to_parquet(sf / "part.parquet")
     return str(sf)
 
 
@@ -435,7 +462,11 @@ def _entry_query(name):
 
 THROWAWAY = {"merge_edges_into_components": _merge_twice, "dedup_clusters": _dedup_clusters,
              "refresh_pagerank_snapshot": _refresh_twice,
-             **{f"entry.{q}": _entry_query(q) for q in ("wcc", "cdlp", "pagerank", "eig_katz", "sssp", "bfs")}}
+             **{f"entry.{q}": _entry_query(q) for q in (
+                 "wcc", "cdlp", "pagerank", "eig_katz", "sssp", "bfs", "degree_centrality", "triangles",
+                 "triangle_stats", "bridges", "articulation_points", "bcc", "clustering_directed",
+                 "assortativity", "avg_degree_connectivity", "simple_paths", "subgraph_census",
+                 "voterank", "project_labels")}}
 
 
 @pytest.mark.parametrize("name", sorted(THROWAWAY))
@@ -548,3 +579,85 @@ def test_engine_algorithms_read_graph_through_cut():
             "wcc.wcc", "cdlp.cdlp"} <= engine_fns
     assert not offenders, "raw graph reads in engine-driven algorithms: " + "; ".join(offenders)
     assert set(RAW_GRAPH_ALLOWED) <= engine_fns, "stale allowlist entries"
+
+
+# -- tooling guard: prologues read the sizes and degrees the Graph keeps
+
+
+# Graph methods whose frames the Graph has counted (view_size(),
+# num_vertices()).
+VIEW_CALLS = {"edge_view", "simple_undirected", "simple_directed", "deduced_vertices"}
+
+# Algorithm functions that may count a frame assigned from a view, build
+# a src-keyed count of rows or lay out a state they hand to eng.run,
+# with the reason: each one is not a view, a view's degree or a state
+# the engine lays out itself.
+PROLOGUE_ALLOWED: dict[str, str] = {
+    "scc.scc": "counts the vertices still active in each outer round",
+    "ordering.onion_layers": "stores its core-annotated edge frame; its degrees count only the "
+                             "neighbours whose core is not below the vertex's",
+}
+
+
+def _attr(node) -> str | None:
+    return node.func.attr if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) else None
+
+
+def _unaliased(node):
+    return node.func.value if _attr(node) == "alias" else node
+
+
+def _is_src_count(call) -> bool:
+    """groupBy(F.col("src").alias("id")).agg(F.count(...)[.alias(...)])"""
+    group = call.func.value if _attr(call) == "agg" else None
+    if _attr(group) != "groupBy" or len(group.args) != 1 or not call.args:
+        return False
+    key = group.args[0]
+    return (_attr(key) == "alias" and [getattr(a, "value", None) for a in key.args] == ["id"]
+            and _attr(key.func.value) == "col"
+            and [getattr(a, "value", None) for a in key.func.value.args] == ["src"]
+            and _attr(_unaliased(call.args[0])) == "count")
+
+
+def _prologue_work(fn: ast.FunctionDef) -> list[int]:
+    """Line numbers where `fn` counts a frame assigned from (or read
+    straight off) a view, builds a src-keyed row count, or repartitions
+    a state it hands to eng.run."""
+    def has_call(node, names) -> bool:
+        return any(_attr(n) in names for n in ast.walk(node))
+
+    views = {t.id for n in ast.walk(fn) if isinstance(n, ast.Assign) and has_call(n.value, VIEW_CALLS)
+             for t in n.targets if isinstance(t, ast.Name)}
+    lines = [n.lineno for n in ast.walk(fn)
+             if _attr(n) == "count" and not n.args
+             and ((isinstance(n.func.value, ast.Name) and n.func.value.id in views)
+                  or _attr(n.func.value) in VIEW_CALLS)]
+    lines += [n.lineno for n in ast.walk(fn) if _is_src_count(n)]
+    for run in ast.walk(fn):
+        if _attr(run) != "run" or not (isinstance(run.func.value, ast.Name) and run.func.value.id == "eng"):
+            continue
+        state = run.args[0]
+        built = [n.value for n in ast.walk(fn) if isinstance(n, ast.Assign)
+                 and any(isinstance(t, ast.Name) and t.id == getattr(state, "id", None) for t in n.targets)]
+        lines += [n.lineno for frame in [state, *built] for n in ast.walk(frame) if _attr(n) == "repartition"]
+    return sorted(set(lines))
+
+
+def test_prologues_read_sizes_and_degrees_from_graph():
+    """No function under linkgraph/algos recounts a view or the cut's
+    vertex ids (Graph.view_size(), num_vertices()), derives a degree
+    frame (Graph.degrees()) or lays out the state it hands the engine
+    (SuperstepEngine.run does)."""
+    offenders, found = [], set()
+    for path in sorted(ALGOS.glob("*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            name = f"{path.stem}.{fn.name}"
+            lines = _prologue_work(fn)
+            if lines:
+                found.add(name)
+                if name not in PROLOGUE_ALLOWED:
+                    offenders.append(f"{path.name}:{lines} in {fn.name}")
+    assert not offenders, "prologue work the Graph or the engine does: " + "; ".join(offenders)
+    assert set(PROLOGUE_ALLOWED) <= found, "stale allowlist entries"

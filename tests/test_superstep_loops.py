@@ -184,3 +184,30 @@ def test_step_functions_run_no_spark_action():
     offenders = {k: v for k, v in acting.items() if k not in STEP_ACTIONS_ALLOWED}
     assert not offenders, f"Spark actions inside step functions (function: lines): {offenders}"
     assert set(STEP_ACTIONS_ALLOWED) <= set(acting), "stale allowlist entries"
+
+
+@pytest.mark.parametrize("schema", ["x long, v double", "s long, id long, v double"],
+                         ids=["key-less", "s-id"])
+def test_engine_lays_out_a_fresh_state(spark, schema):
+    """A fresh initial state built in one partition, with no vertex key
+    or keyed on (s, id), runs one round through SuperstepEngine.run;
+    with max_rounds=0 the returned state is the state as laid out:
+    spark.sql.shuffle.partitions partitions, each id in one of them."""
+    P = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rows = [(i % 2, i, float(i)) for i in range(20)]
+    init = spark.createDataFrame([r[-len(schema.split(",")):] for r in rows], schema).coalesce(1)
+    eng = SuperstepEngine(spark)
+
+    def step(state, round_):
+        return state.withColumn("v", F.col("v") + 1.0), {"halt": True}
+
+    one = eng.run(init, step, max_rounds=5)
+    assert (one.rounds, one.converged) == (1, True)
+    assert sorted(r["v"] for r in one.state.collect()) == [float(i) + 1.0 for i in range(20)]
+
+    laid = eng.run(init, step, max_rounds=0)
+    assert laid.rounds == 0 and laid.state.rdd.getNumPartitions() == P
+    assert sorted(laid.state.collect()) == sorted(init.collect())
+    if "id" in laid.state.columns:
+        places = laid.state.select("id", F.spark_partition_id().alias("p")).distinct()
+        assert {r["count"] for r in places.groupBy("id").count().collect()} == {1}
