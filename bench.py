@@ -26,7 +26,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from linkgraph.session import get_spark  # noqa: E402
+from linkgraph.session import get_spark, jvm_args  # noqa: E402
 from linkgraph.tpch_graph import part_edges, part_graph  # noqa: E402
 from linkgraph.algos.pagerank import pagerank  # noqa: E402
 from linkgraph.algos.wcc import wcc  # noqa: E402
@@ -145,6 +145,7 @@ def main() -> None:
                 "cpus": cpus,
                 "n_vertices": n_verts,
                 "n_edges_directed": n_edges,
+                "jvm_args": jvm_args(spark),
                 **extra,
             }
         )

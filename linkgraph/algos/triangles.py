@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.graph import Graph
+from linkgraph.joins import BROADCAST_THRESHOLD_ROWS
 
 
 def _oriented(graph: Graph):
@@ -42,6 +43,12 @@ def _oriented(graph: Graph):
         )
         .select("src", "dst")
     )
+    # A stored frame keeps no key uniqueness, so the planner sizes each
+    # degree join as the product of its sides and would shuffle the
+    # corner joins over e however small e is. e holds half the view's
+    # kept row count: broadcast it under the scatter's row threshold.
+    if g.view_size(True) // 2 <= BROADCAST_THRESHOLD_ROWS:
+        e = F.broadcast(e)
     return e, deg, g.deduced_vertices()
 
 

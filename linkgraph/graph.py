@@ -270,11 +270,20 @@ class Graph:
         edge there. Stored once per view kind beside the cut and
         unpersisted by release(); its build also keeps the cut's
         num_vertices(). degrees(True, loops=True, reduce="all") counts
-        every edge end, a self-loop twice (the degree of REPORT_GRAPH)."""
+        every edge end, a self-loop twice (the degree of REPORT_GRAPH).
+        No algorithm scatters over a symmetric "all" view, so its degrees
+        count both ends of the cut's rows and store no view; the stored
+        "all" view, which the pagerank family scatters over, is built
+        and its src partitioning makes its count need no shuffle."""
         key = self._view_key(symmetric, loops, reduce)
         if key not in self._degrees:
-            d = self.edge_view(*key).groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
             cut = self.materialized()
+            if symmetric and key[2] == "all":
+                e = cut.edges if loops else cut.edges.where(F.col("src") != F.col("dst"))
+                ends = e.select("src").unionByName(e.select(F.col("dst").alias("src")))
+            else:
+                ends = self.edge_view(*key)
+            d = ends.groupBy(F.col("src").alias("id")).agg(F.count("*").alias("degree"))
             deg = cut.vertices.join(d, "id", "left").select(
                 "id", F.coalesce("degree", F.lit(0)).cast("long").alias("degree")
             ).persist()

@@ -4,11 +4,14 @@ exact for labels/counts)."""
 
 from __future__ import annotations
 
+import importlib
+import re
+
 import numpy as np
 
 from linkgraph import oracle
 from linkgraph.algos.cdlp import cdlp
-from linkgraph.algos.triangles import lcc, transitivity, triangle_count, triangles
+from linkgraph.algos.triangles import lcc, transitivity, triangle_corners, triangle_count, triangles
 from linkgraph.algos.wcc import wcc
 from linkgraph.graph import Graph
 
@@ -75,3 +78,23 @@ def test_triangles_k4(spark):
     assert {r["tri"] for r in triangles(g).collect()} == {3}
     assert abs(transitivity(g) - 1.0) < 1e-12
     assert {r["lcc"] for r in lcc(g).collect()} == {1.0}
+
+
+def _corner_joins(g) -> list[str]:
+    """The join operators of the corner joins in the static plan of
+    triangle_corners(g)."""
+    plan = triangle_corners(g)._jdf.queryExecution().sparkPlan().toString()
+    return re.findall(r"(\w+Join) \[[xy]#", plan)
+
+
+def test_corner_joins_broadcast_only_a_small_oriented_edge_set(spark, small_graph, monkeypatch):
+    """The degree joins with the stored degree frame leave the planner no
+    size for the oriented edges; triangle_corners sizes them from the
+    view's kept row count, so a small graph's corner joins broadcast (no
+    shuffle over E) and above the row threshold they do not."""
+    g = Graph.from_edges(small_graph, directed=True)
+    assert _corner_joins(g) == ["BroadcastHashJoin"] * 2
+    # the module, not the triangles() function linkgraph.algos re-exports
+    monkeypatch.setattr(importlib.import_module("linkgraph.algos.triangles"), "BROADCAST_THRESHOLD_ROWS", 0)
+    assert "BroadcastHashJoin" not in _corner_joins(g)
+    g.release()

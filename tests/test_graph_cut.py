@@ -481,6 +481,34 @@ def test_throwaway_graphs_leave_the_cache_as_found(spark, tmp_path, name):
     assert _cached(spark) == before
 
 
+def test_degree_centrality_counts_edge_ends_without_a_view(spark, tmp_path, monkeypatch):
+    """The degree_centrality entry query counts every edge end from the
+    cut: it builds no edge view, and its values equal the DuckDB
+    oracle's."""
+    import duckdb
+
+    views = []
+    edge_view = Graph.edge_view
+
+    def counted(self, *args, **kwargs):
+        views.append(args)
+        return edge_view(self, *args, **kwargs)
+
+    monkeypatch.setattr(Graph, "edge_view", counted)
+    sf = _lineitem(tmp_path)
+    got = ent.queries()["degree_centrality"](spark, sf).toPandas()
+    assert views == []
+    # oracle_sql() reads the corpus's embeddings footer for its ANN twin
+    pd.DataFrame({"vec_id": [0], "embedding": [[0.5, 0.5]]}).to_parquet(f"{sf}/embeddings.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM read_parquet('{sf}/lineitem.parquet')")
+    want = con.execute(ent.oracle_sql(sf)["degree_centrality"]).fetchdf()
+    key = ["id", "centrality"]
+    pd.testing.assert_frame_equal(got[key].sort_values("id").reset_index(drop=True),
+                                  want[key].sort_values("id").reset_index(drop=True),
+                                  check_dtype=False)
+
+
 # Algorithm functions that may build an edge frame of their own (call
 # symmetrized_edges() or to_undirected(), dropDuplicates(["src", "dst"])
 # or groupBy("src", "dst")), with the reason: each one is not a message

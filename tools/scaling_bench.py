@@ -124,7 +124,7 @@ if tuned:
 else:
     P = cpus
 
-from linkgraph.session import get_spark
+from linkgraph.session import get_spark, jvm_args
 from linkgraph.datagen import skewed_graph
 from linkgraph.graph import Graph
 from linkgraph.algos.pagerank import pagerank
@@ -155,7 +155,8 @@ print(json.dumps({{"cpus": cpus, "mode": mode, "partitions": P,
                   "superstep_secs": [round(s, 2) for s in secs],
                   "steady_sec_per_superstep": round(steady, 3),
                   "min_sec_per_superstep": round(min(secs), 3),
-                  "edges_per_sec_per_superstep": round(n_edges / steady, 1)}}))
+                  "edges_per_sec_per_superstep": round(n_edges / steady, 1),
+                  "jvm_args": jvm_args(spark)}}))
 spark.stop()
 """
 

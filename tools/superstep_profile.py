@@ -54,7 +54,7 @@ def main() -> None:
     os.environ.setdefault("SPARK_GRAFT_STATE_LEVEL", "MEMORY_AND_DISK")
     os.environ.setdefault("SPARK_DRIVER_MEMORY", "24g")
 
-    from linkgraph.session import get_spark
+    from linkgraph.session import get_spark, jvm_args
     from linkgraph.datagen import skewed_graph
     from linkgraph.etl import compact_vertex_ids
     from linkgraph.graph import Graph
@@ -83,6 +83,7 @@ def main() -> None:
     wall = time.time() - t_run0
     secs = [m["superstep_sec"] for m in res.metrics]
     app_id = spark.sparkContext.applicationId
+    args = jvm_args(spark)
     spark.stop()
 
     # ---- parse the event log ------------------------------------------
@@ -179,6 +180,7 @@ def main() -> None:
     out = {
         "mode": mode, "cpus": cpus, "n_edges": n_edges, "partitions": P,
         "rounds": n_r, "wall_s": round(wall, 2), "prologue_s": round(prologue, 2),
+        "jvm_args": args,
         "per_round": rows,
         "steady_median": {k: med(k) for k in
                           ("wall", "jobs", "tasks", "core_sec", "ideal", "gap",
