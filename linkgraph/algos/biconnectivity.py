@@ -21,9 +21,10 @@ the biconnected components keyed by child-side tree edge:
 The sequential path-walk does not distribute, so this implementation
 computes the SAME partition declaratively:
 
-  1. wcc → per-component root (min id), BFS forest (level = hop
-     count, parent = min neighbour one level up — deterministic,
-     unlike the reference's arrival-order parent).
+  1. wcc → per-component root (min id), BFS forest: traversal's
+     unit-weight relaxation from every root (level = hop count,
+     parent = its predecessor, the min neighbour one level up —
+     deterministic, unlike the reference's arrival-order parent).
   2. binary-lifting ancestor tables A_k(v) = 2^k-th ancestor
      (log(diameter) doubling joins); per non-tree edge {a,b} a
      vectorized lift-and-descend computes the LCA l and the children
@@ -63,9 +64,9 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
+from linkgraph.algos.traversal import _relax
+from linkgraph.engine import SuperstepEngine
 from linkgraph.graph import Graph
-from linkgraph.joins import state_join
 
 
 @dataclass
@@ -92,59 +93,21 @@ def _bfs_forest(
     from linkgraph.algos.wcc import wcc
 
     g = graph.materialized()
-    edges = g.simple_undirected()
-    n_edges = g.view_size(symmetric=True)
-
     comp = wcc(g, engine=eng)
     roots = comp.state.where(F.col("id") == F.col("comp")).select("id")
-
-    INF = float("inf")
-    init = (
-        g.deduced_vertices().join(roots.withColumn("_r", F.lit(1)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("_r").isNotNull(), F.lit(0.0)).otherwise(F.lit(INF)).alias("dist"),
-            F.col("_r").isNotNull().alias("changed"),
-        )
-    )
-
-    def step(state: DataFrame, round_: int):
-        frontier = state.where(F.col("changed")).select(
-            F.col("id").alias("src"), F.col("dist").alias("sd")
-        )
-        relax = (
-            edges.join(frontier.hint("SHUFFLE_HASH"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("sd") + 1.0).alias("cand"))
-        )
-        new_state = state_join(state, relax).select(
-            "id",
-            F.least(F.col("dist"), F.coalesce("cand", F.col("dist"))).alias("dist"),
-            (F.coalesce("cand", F.lit(INF)) < F.col("dist")).alias("changed"),
-        )
-
-        return new_state, observed_count("changed", n_edges)
-
-    res = eng.run(init, step, max_rounds=10_000)
-    levels = res.state.where(F.col("dist") < INF).select(
-        "id", F.col("dist").cast("long").alias("depth")
-    )
-    lv_src = levels.select(F.col("id").alias("src"), F.col("depth").alias("ds"))
-    lv_dst = levels.select(F.col("id").alias("dst"), F.col("depth").alias("dd"))
-    parents = (
-        edges.join(lv_src.hint("SHUFFLE_HASH"), "src")
-        .join(lv_dst.hint("SHUFFLE_HASH"), "dst")
-        .where(F.col("ds") + 1 == F.col("dd"))
-        .groupBy(F.col("dst").alias("id"))
-        .agg(F.min("src").alias("parent"))
-    )
+    # the unit-weight relaxation from every root: a vertex is reached
+    # from its own component's root only, and its pred is its min
+    # neighbour one level up
+    res = _relax(g, None, roots, False, eng, 10_000)
     tree = (
-        levels.join(parents.hint("SHUFFLE_HASH"), "id", "left")
-        .select("id", "parent", "depth")
+        res.state.select(
+            "id", F.when(F.col("id") != F.col("s"), F.col("pred")).alias("parent"),
+            F.col("dist").cast("long").alias("depth"),
+        )
         .repartition(P, "id")
         .localCheckpoint(eager=True)
     )
-    return tree, edges, res.rounds, res.metrics
+    return tree, g.simple_undirected(), res.rounds, res.metrics
 
 
 def _bit(col, k: int):

@@ -24,13 +24,18 @@ Reference semantics (transcribed, NOT ported):
     first `max_round` sources; norm = (directed ? 1 : 0.5) ×
     1/(K(K-1)) when normalized (betweenness_centrality_context.h:38-67).
 
-Execution model: all of these but sssp_path (a projection of
-traversal's single-source relaxation) share one engine — a
-multi-source BFS whose vertex state is the sparse PAIR frame
-(s, id, dist). Supersteps expand the per-source frontier through the
-cached edge frame; the pair frame is hash-partitioned by id so the
-per-round scatter join reuses the edge partitioning. At 100 TB scale
-the pair frame is the product |sources|×|reached| — callers bound
+Execution model: every distance here is a projection of traversal's
+one min-relaxation (``traversal._relax``), run from a source set with
+the sparse PAIR frame (s, id, dist, pred) as its state: each superstep
+scatters the changed pairs through the cached edge frame
+(joins.scatter_join, broadcast while |sources|·V is small) and keeps
+the least (dist, pred) candidate per pair. multi_source_bfs is its
+unit-weight run, multi_source_sssp its run over the lightest weights,
+sssp_path its one-source run; apsp, closeness, harmonic, the average
+length, the diameter estimate and k-center aggregate those. Brandes'
+forward pass sums path counts instead of taking a min, so betweenness
+runs its own two fixpoints through the same join helpers. At 100 TB
+scale the pair frame is the product |sources|×|reached| — callers bound
 |sources| (landmark / sampled mode, the same contract as the
 reference's `max_round` source cap) and the full all-pairs mode stays
 O(V·E) by design, exactly like the reference's per-vertex loop.
@@ -40,18 +45,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from linkgraph.algos.traversal import INF, _relax
+from linkgraph.algos.traversal import _relax, _seeds
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph, weight_projected
-
-
-def _sources_df(graph: Graph, sources) -> DataFrame:
-    spark = graph.edges.sparkSession
-    if sources is None:
-        return graph.deduced_vertices().select(F.col("id").alias("s"))
-    if isinstance(sources, DataFrame):
-        return sources.select(F.col(sources.columns[0]).alias("s"))
-    return spark.createDataFrame([(int(x),) for x in sources], "s long")
+from linkgraph.joins import scatter_join, state_join
 
 
 def multi_source_bfs(
@@ -67,53 +64,17 @@ def multi_source_bfs(
     Returns state (s: long, id: long, dist: long) — one row per
     REACHED (source, vertex) pair (sparse: unreached pairs are
     absent; dist(s,s) = 0 rows are included). ``sources`` is a list
-    of ids, a one-column DataFrame, or None for all vertices.
+    of ids, a one-column DataFrame, or None for all vertices; ids that
+    are not vertices of the graph are not seeded. reverse=True follows
+    a directed graph's edges backwards (dist(s, id) = hops from id to s).
 
-    Per round: the frontier pairs join the edge frame on id=src, the
-    discovered (s, dst) pairs are deduped (min is implicit — BFS
-    layers discover each pair exactly once) and anti-joined against
-    the already-reached set. Reached pairs never change, so no
-    re-relaxation happens (unlike weighted SSSP).
+    The unit-weight run of traversal's relaxation: a pair's first
+    candidate is its final distance, so each round's changed pairs are
+    exactly that BFS layer and no pair is relaxed twice.
     """
-    g = graph.materialized()
-    spark = g.edges.sparkSession
-    eng = engine or SuperstepEngine(spark)
-    use_directed = g.directed if directed is None else directed
-    edges = g.edge_view(symmetric=not use_directed)
-    n_edges = g.view_size(symmetric=not use_directed)
-    reversed_ = reverse and use_directed
-    if reversed_:
-        # reverse BFS: a column swap of the directed view, re-keyed on
-        # its new src so every round's scatter still moves only the
-        # frontier (stored by the first round that reads it)
-        P = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        edges = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")) \
-                     .repartition(P, "src").persist()
-
-    init = _sources_df(g, sources).select(
-        "s", F.col("s").alias("id"), F.lit(0).cast("long").alias("dist"), F.lit(True).alias("fr"))
-
-    def step(state: DataFrame, round_: int):
-        frontier = state.where(F.col("fr")).select("s", F.col("id").alias("src"))
-        cand = (
-            edges.join(frontier.hint("SHUFFLE_HASH"), "src")
-            .select("s", F.col("dst").alias("id"))
-            .dropDuplicates(["s", "id"])
-        )
-        new = (
-            cand.join(state.select("s", "id").hint("SHUFFLE_HASH"), ["s", "id"], "left_anti")
-            .select("s", "id", F.lit(round_ + 1).cast("long").alias("dist"),
-                    F.lit(True).alias("fr"))
-        )
-        new_state = state.select("s", "id", "dist", F.lit(False).alias("fr")).unionByName(new)
-
-        return new_state, observed_count("fr", n_edges)
-
-    result = eng.run(init, step, max_rounds=max_iter)
-    result.state = result.state.select("s", "id", "dist")
-    if reversed_:
-        edges.unpersist()
-    return result
+    res = _relax(graph, None, sources, directed, engine, max_iter, reverse=reverse)
+    res.state = res.state.select("s", "id", F.col("dist").cast("long").alias("dist"))
+    return res
 
 
 @weight_projected
@@ -128,53 +89,17 @@ def multi_source_sssp(
     """Weighted SSSP from every source simultaneously (the weighted
     generalization of multi_source_bfs — the per-source Dijkstra loop
     of apps/sssp/sssp_average_length.h:35-168 re-expressed as ONE
-    Bellman-Ford-style pair-frame relaxation).
+    Bellman-Ford-style pair-frame relaxation, traversal's).
 
     Returns state (s: long, id: long, dist: double) — one row per
-    reached (source, vertex) pair. Unlike the BFS variant, reached
-    pairs CAN improve (a longer-hop lighter path), so the state is a
-    sparse min-relaxation frame: per round the changed pairs scatter
-    through the edge frame, candidate distances combine by min per
-    (s, dst), and the full-outer merge keeps the smaller of old/new.
-    Same scale contract as multi_source_bfs: callers bound |sources|.
+    reached (source, vertex) pair, over the lightest of parallel
+    edges. Unlike the BFS variant, reached pairs CAN improve (a
+    longer-hop lighter path). Same scale contract as
+    multi_source_bfs: callers bound |sources|.
     """
-    g = graph.materialized()
-    spark = g.edges.sparkSession
-    eng = engine or SuperstepEngine(spark)
-    # the lightest of parallel edges, self-loops dropped
-    symmetric = not (g.directed if directed is None else directed)
-    edges = g.edge_view(symmetric, reduce="min")
-    n_edges = g.view_size(symmetric, reduce="min")
-
-    init = _sources_df(g, sources).select(
-        "s", F.col("s").alias("id"), F.lit(0.0).alias("dist"), F.lit(True).alias("fr"))
-
-    def step(state: DataFrame, round_: int):
-        frontier = state.where(F.col("fr")).select(
-            "s", F.col("id").alias("src"), F.col("dist").alias("sd"))
-        relax = (
-            edges.join(frontier.hint("SHUFFLE_HASH"), "src")
-            .groupBy("s", F.col("dst").alias("id"))
-            .agg(F.min(F.col("sd") + F.col("w")).alias("cand"))
-        )
-        new_state = (
-            state.select("s", "id", "dist")
-            .join(relax.hint("SHUFFLE_HASH"), ["s", "id"], "full")
-            .select(
-                "s", "id",
-                F.least(F.coalesce("dist", F.col("cand")),
-                        F.coalesce("cand", F.col("dist"))).alias("dist"),
-                (F.col("cand").isNotNull()
-                 & (F.col("dist").isNull() | (F.col("cand") < F.col("dist"))))
-                .alias("fr"),
-            )
-        )
-
-        return new_state, observed_count("fr", n_edges)
-
-    result = eng.run(init, step, max_rounds=max_iter)
-    result.state = result.state.select("s", "id", "dist")
-    return result
+    res = _relax(graph, graph.weight_col, sources, directed, engine, max_iter)
+    res.state = res.state.select("s", "id", "dist")
+    return res
 
 
 def all_pairs_shortest_path_length(
@@ -208,7 +133,7 @@ def closeness_centrality(
     reversedDijkstraLength over incoming edges); with wf_improved the
     value is scaled by (reached-1)/(n-1). Vertices reaching nothing
     get 0. Returns state (id: long, closeness: double)."""
-    n = graph.num_vertices()
+    n = graph.materialized().num_vertices()
     res = multi_source_bfs(graph, sources=sources, directed=directed,
                            reverse=True, engine=engine)
     per_source = (
@@ -268,8 +193,8 @@ def diameter_approx(
     both phases deterministic. Returns state = ONE row
     (diameter: long, radius: long); res.rounds = total BFS rounds
     across both phases (each bounded by the true diameter)."""
-    res1 = multi_source_bfs(graph, sources=_min_sources_df(graph, k), directed=directed,
-                            engine=engine)
+    srcs1 = graph.materialized().vertices.orderBy("id").limit(k)
+    res1 = multi_source_bfs(graph, sources=srcs1, directed=directed, engine=engine)
     ecc1 = res1.state.groupBy("id").agg(F.max("dist").alias("ecc"))
     srcs2 = (
         ecc1.orderBy(F.col("ecc").desc(), F.col("id").asc()).limit(k)
@@ -288,10 +213,6 @@ def diameter_approx(
     res2.rounds = res1.rounds + res2.rounds
     res2.metrics = res1.metrics + res2.metrics
     return res2
-
-
-def _min_sources_df(graph: Graph, k: int) -> DataFrame:
-    return graph.deduced_vertices().orderBy("id").limit(k)
 
 
 @weight_projected
@@ -313,8 +234,8 @@ def sssp_path(
     minimum (dist, pred) struct wins — the reference keeps whichever
     message arrived last, which is nondeterministic under MPI; a
     fixed tie-break makes the result oracle-checkable."""
-    res = _relax(graph, graph.weight_col, source, engine, max_iter, directed, False)
-    res.state = res.state.where(F.col("dist") < INF).select("id", "pred", "dist")
+    res = _relax(graph, graph.weight_col, [source], directed, engine, max_iter)
+    res.state = res.state.select("id", "pred", "dist")
     return res
 
 
@@ -381,8 +302,9 @@ def betweenness_centrality(
     use_directed = g.directed if directed is None else directed
     edges = g.edge_view(symmetric=not use_directed)
     n_edges = g.view_size(symmetric=not use_directed)
-    src_df = _sources_df(g, sources)
+    src_df, _ = _seeds(g, sources)
     k = src_df.count()
+    bound = k * g.num_vertices()  # the pair frontier's largest size
 
     # ---- forward: depth + sigma ------------------------------------
     init = src_df.select(
@@ -396,12 +318,12 @@ def betweenness_centrality(
         )
         # all shortest-path counts into depth round_+1 arrive this round
         cand = (
-            edges.join(frontier.hint("SHUFFLE_HASH"), "src")
+            scatter_join(edges, frontier, "src", bound)
             .groupBy("s", F.col("dst").alias("id"))
             .agg(F.sum("sigma").alias("sigma"))
         )
         new = (
-            cand.join(state.select("s", "id").hint("SHUFFLE_HASH"), ["s", "id"], "left_anti")
+            state_join(cand, state.select("s", "id"), ["s", "id"], "left_anti")
             .select("s", "id", F.lit(round_ + 1).cast("long").alias("depth"),
                     "sigma", F.lit(True).alias("fr"))
         )
@@ -427,12 +349,12 @@ def betweenness_centrality(
             F.col("delta").alias("dv"),
         )
         contrib = (
-            edges.join(succ.hint("SHUFFLE_HASH"), "dst")
+            scatter_join(edges, succ, "dst", bound)
             .groupBy("s", F.col("src").alias("id"))
             .agg(F.sum((1.0 + F.col("dv")) / F.col("sv")).alias("c"))
         )
         new_state = (
-            state.join(contrib.hint("SHUFFLE_HASH"), ["s", "id"], "left")
+            state_join(state, contrib, ["s", "id"])
             .select(
                 "s", "id", "depth", "sigma",
                 F.when(

@@ -26,7 +26,9 @@ from linkgraph.algos.louvain import louvain, louvain_phase1, modularity
 from linkgraph.algos.matching import mis
 from linkgraph.algos.msf import msf
 from linkgraph.algos.pagerank import articlerank, pagerank, ppr
-from linkgraph.algos.paths import betweenness_centrality, multi_source_sssp, sssp_path
+from linkgraph.algos.paths import (
+    betweenness_centrality, closeness_centrality, diameter_approx, multi_source_sssp, sssp_path,
+)
 from linkgraph.algos.structure import clustering_directed
 from linkgraph.algos.subgraph import motif_census
 from linkgraph.algos.traversal import bfs_tree, sssp
@@ -390,11 +392,35 @@ def _check_bfs_tree(g, src, dst):
     assert tree["parent"].isna().sum() == 1  # only the source has none
 
 
-@pytest.mark.parametrize("check", [_check_msf, _check_bfs_tree], ids=["msf", "bfs_tree"])
+def _check_closeness(g, src, dst):
+    got = closeness_centrality(g).state.toPandas().sort_values("id")
+    ids, exp = oracle.closeness_centrality(src, dst, directed=True)
+    assert np.array_equal(got["id"].to_numpy(), ids)
+    assert np.allclose(got["closeness"].to_numpy(), exp)
+
+
+def _check_diameter(g, src, dst):
+    """diameter_approx's two phases replayed on the oracle's BFS
+    levels: ecc(v) is the largest distance from a phase's sources."""
+    def ecc(sources):
+        return np.stack([oracle.bfs(src, dst, int(s), directed=False)[1] for s in sources]).max(0)
+
+    ids = np.unique(np.concatenate([src, dst]))
+    first = ecc(ids[:4])
+    reached = np.flatnonzero(first >= 0)
+    periphery = reached[np.lexsort((ids[reached], -first[reached]))][:4]
+    e = np.maximum(first, ecc(ids[periphery]))
+    row = diameter_approx(g, k=4, directed=False).state.collect()[0]
+    assert (row["diameter"], row["radius"]) == (e.max(), e[e > 0].min())
+
+
+@pytest.mark.parametrize("check", [_check_msf, _check_bfs_tree, _check_closeness, _check_diameter],
+                         ids=["msf", "bfs_tree", "closeness", "diameter_approx"])
 def test_evaluates_its_source_once(spark, check):
-    """msf (edges and vertex set) and bfs_tree (its edge view and its
-    vertex set) read their graph through one cut: the source plan runs
-    once per call."""
+    """msf (edges and vertex set), bfs_tree (its edge view and its
+    vertex set), closeness_centrality (its vertex count and its sources)
+    and diameter_approx (its first sources) read their graph through one
+    cut: the source plan runs once per call."""
     src, dst = _edges()
     rows = spark.sparkContext.accumulator(0)
 

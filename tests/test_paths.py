@@ -14,10 +14,12 @@ from linkgraph.algos.paths import (
     betweenness_centrality,
     closeness_centrality,
     multi_source_bfs,
+    multi_source_sssp,
     sssp_average_length,
     sssp_has_path,
     sssp_path,
 )
+from linkgraph.algos.traversal import bfs, bfs_tree, sssp
 from linkgraph.graph import Graph
 
 
@@ -129,3 +131,40 @@ def test_msbfs_matches_bfs(spark, small_graph, small_edges_np):
     ids, lvl = oracle.bfs(src, dst, s0, directed=True)
     exp = {int(i): int(x) for i, x in zip(ids, lvl) if x >= 0}
     assert got == exp
+
+    # a seeded multigraph: parallel edges of other weights and a
+    # self-loop at the source; the many-source runs from [s] project
+    # the one-source rows and take the same rounds
+    rng = np.random.default_rng(14)
+    pairs = rng.integers(0, 80, (300, 2))
+    s = int(pairs[0, 0])
+    pairs = np.concatenate([pairs, pairs[:60], [[s, s]]])
+    w = rng.integers(1, 9, len(pairs)).astype(float)
+    e = spark.createDataFrame([(int(a), int(b), float(x)) for (a, b), x in zip(pairs, w)],
+                              "src long, dst long, w double")
+    mg = Graph.from_edges(e, directed=True, weight_col="w")
+
+    one, many = bfs(mg, s), multi_source_bfs(mg, [s])
+    levels = {r["id"]: r["level"] for r in one.state.collect() if r["level"] >= 0}
+    assert {r["id"]: r["dist"] for r in many.state.collect()} == levels
+    assert one.rounds == many.rounds == max(levels.values()) + 1
+
+    one, many = sssp(mg, s), multi_source_sssp(mg, sources=[s])
+    dists = {r["id"]: r["dist"] for r in one.state.collect() if r["dist"] >= 0}
+    assert {r["id"]: r["dist"] for r in many.state.collect()} == dists
+    assert one.rounds == many.rounds
+    ids, exp = oracle.sssp(pairs[:, 0], pairs[:, 1], w, s, directed=True)
+    assert dists == {int(i): float(x) for i, x in zip(ids, exp) if np.isfinite(x)}
+    mg.release()
+
+
+def test_absent_source_seeds_nothing(spark):
+    """A source id that is not a vertex seeds no pair: bfs_tree is
+    empty, sssp leaves every vertex unreached, and multi_source_bfs
+    emits rows only for the sources that are vertices."""
+    g = _tiny(spark)
+    assert bfs_tree(g, 99).state.count() == 0
+    assert {r["dist"] for r in sssp(g, 99).state.collect()} == {-1.0}
+    rows = multi_source_bfs(g, [1, 99], directed=False).state.collect()
+    assert {r["s"] for r in rows} == {1} and len(rows) == 5
+    g.release()

@@ -3,7 +3,7 @@
 they honour a caller's engine, write per-round metrics rows, and report
 converged=False when max_rounds stops them early. AST guards keep
 new hand-written round loops out of linkgraph/algos/, and Spark actions
-out of the step functions the engine runs."""
+and join hints out of the step functions the engine runs."""
 
 from __future__ import annotations
 
@@ -153,10 +153,10 @@ def _is_action(node: ast.AST) -> bool:
     return name in STEP_ACTIONS or (name == "count" and not node.args and not node.keywords)
 
 
-def _acting_steps(tree: ast.Module) -> dict[str, list[int]]:
-    """Module-level function name -> lines of the Spark actions inside
-    the step functions it passes to `eng.run`: a def of its own, or a
-    module-level function called to build the step."""
+def _step_lines(tree: ast.Module, hit) -> dict[str, list[int]]:
+    """Module-level function name -> lines of the nodes `hit` accepts
+    inside the step functions it passes to `eng.run`: a def of its
+    own, or a module-level function called to build the step."""
     defs = {fn.name: fn for fn in tree.body if isinstance(fn, ast.FunctionDef)}
     found: dict[str, list[int]] = {}
     for outer in defs.values():
@@ -172,18 +172,53 @@ def _acting_steps(tree: ast.Module) -> dict[str, list[int]]:
             else:
                 step = local.get(arg.id) if isinstance(arg, ast.Name) else None
             assert step is not None, f"{outer.name}:{call.lineno}: step function not found"
-            lines = [n.lineno for n in ast.walk(step) if _is_action(n)]
+            lines = [n.lineno for n in ast.walk(step) if hit(n)]
             if lines:
                 found.setdefault(outer.name, []).extend(lines)
     return found
 
 
+def _scan_steps(hit) -> dict[str, list[int]]:
+    return {f"{path.stem}.{name}": lines for path in sorted(ALGOS.glob("*.py"))
+            for name, lines in _step_lines(ast.parse(path.read_text()), hit).items()}
+
+
 def test_step_functions_run_no_spark_action():
-    acting = {f"{path.stem}.{name}": lines for path in sorted(ALGOS.glob("*.py"))
-              for name, lines in _acting_steps(ast.parse(path.read_text())).items()}
+    acting = _scan_steps(_is_action)
     offenders = {k: v for k, v in acting.items() if k not in STEP_ACTIONS_ALLOWED}
     assert not offenders, f"Spark actions inside step functions (function: lines): {offenders}"
     assert set(STEP_ACTIONS_ALLOWED) <= set(acting), "stale allowlist entries"
+
+
+# -- tooling guard: a step function joins through linkgraph/joins.py
+
+# Functions whose step function picks a join strategy of its own (a
+# .hint(...) or F.broadcast(...)) instead of joins.scatter_join and
+# joins.state_join, with the reason. None has been ported yet.
+HINTS_ALLOWED: dict[str, str] = {
+    "bipartite.lpa_u2i": "scatters on user and item keys of its own (user, item, w) frame",
+    "coloring.greedy_color": "hinted semi-join of the affected vertices and colour scatter",
+    "coloring.fluid_community": "broadcasts its per-community counts; hinted label scatter",
+    "cores.kshell": "hinted semi-joins of the moved vertices and h-index scatter/combine",
+    "hits.hits": "hinted combine of the authority sums with the state",
+    "louvain.louvain_local_move": "hinted label scatter and combines; broadcasts the community "
+                                  "totals while they are small",
+    "scc.scc": "hinted forward and backward colour scatters",
+}
+
+
+def _is_hint(node: ast.AST) -> bool:
+    return (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and (node.func.attr == "hint"
+                 or (node.func.attr == "broadcast" and isinstance(node.func.value, ast.Name)
+                     and node.func.value.id == "F")))
+
+
+def test_step_functions_pick_no_join_strategy():
+    hinting = _scan_steps(_is_hint)
+    offenders = {k: v for k, v in hinting.items() if k not in HINTS_ALLOWED}
+    assert not offenders, f"join hints inside step functions (function: lines): {offenders}"
+    assert set(HINTS_ALLOWED) <= set(hinting), "stale allowlist entries"
 
 
 @pytest.mark.parametrize("schema", ["x long, v double", "s long, id long, v double"],
