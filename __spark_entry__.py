@@ -195,7 +195,7 @@ def _q_bfs(spark, sf_dir):
     from linkgraph.algos.traversal import bfs_tree
 
     g = part_graph(spark, sf_dir)
-    source = int(g.deduced_vertices().agg(F.min("id")).collect()[0][0])
+    source = _min_vertex(g)
     res = bfs(g, source=source, directed=False)
     _assert_unroll(res, BFS_LAYERS, "bfs")
     rest = bfs_tree(g, source=source, directed=False)
@@ -221,7 +221,7 @@ def _q_sssp(spark, sf_dir):
 
     edges = part_edges(spark, sf_dir)
     g = Graph.from_edges(edges, directed=False, weight_col="weight")
-    source = int(g.deduced_vertices().agg(F.min("id")).collect()[0][0])
+    source = _min_vertex(g)
     res = sssp(g, source=source, weight_col="weight", directed=False)
     _assert_unroll(res, BFS_LAYERS, "sssp")
     resp = sssp_path(g, source=source, weight_col="weight", directed=False)
@@ -276,8 +276,14 @@ def _q_eig_katz(spark, sf_dir):
     )
 
 
+def _min_vertex(g):
+    """The least vertex id, read from the cut the algorithms take."""
+    return int(g.materialized().deduced_vertices().agg(F.min("id")).collect()[0][0])
+
+
 def _min_sources(g, k):
-    return g.deduced_vertices().orderBy("id").limit(k)
+    """The k least vertex ids, read from the cut the algorithms take."""
+    return g.materialized().deduced_vertices().orderBy("id").limit(k)
 
 
 def _q_closeness(spark, sf_dir):
@@ -516,8 +522,7 @@ def _q_rank_family(spark, sf_dir):
     from linkgraph.algos.pagerank import articlerank, ppr
 
     g = part_graph(spark, sf_dir)
-    source = g.deduced_vertices().agg(F.min("id")).collect()[0][0]
-    res = ppr(g, source=int(source), alpha=PPR_ALPHA, max_iter=PPR_ITERS)
+    res = ppr(g, source=_min_vertex(g), alpha=PPR_ALPHA, max_iter=PPR_ITERS)
     resa = articlerank(g, max_iter=AR_ITERS, damping=AR_DAMPING)
     g.release()
     return res.state.select("id", F.round("rank", 8).alias("ppr")).join(
@@ -604,7 +609,7 @@ def _q_boundary(spark, sf_dir):
     its size (catching extra rows the flag alone would miss)."""
     from linkgraph.algos.structure import edge_boundary, node_boundary
 
-    g = part_graph(spark, sf_dir)
+    g = part_graph(spark, sf_dir).materialized()
     srcs = _min_sources(g, BOUNDARY_SOURCES)
     eb = edge_boundary(g, srcs).select("src", "dst")
     nb = node_boundary(g, srcs).select("id")

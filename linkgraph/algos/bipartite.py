@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import SuperstepEngine, SuperstepResult
+from linkgraph.joins import scatter_join, state_join
 
 
 def lpa_u2i(
@@ -50,7 +51,11 @@ def lpa_u2i(
         .repartition(P, "user")
         .persist()
     )
-    n_edges = e.count()
+    # the job that stores e also counts the scatter bounds: the distinct
+    # users and items on its edges
+    n_edges, n_users, n_items = e.agg(
+        F.count("*"), F.countDistinct("user"), F.countDistinct("item")
+    ).first()
 
     out_deg = e.groupBy("user").agg(F.sum("w").alias("od"))
     in_deg = e.groupBy("item").agg(F.sum("w").alias("idg"))
@@ -74,18 +79,18 @@ def lpa_u2i(
     def step(state: DataFrame, round_: int):
         # u2i: item labels from current user labels
         item_lab = (
-            e.join(state.select("user", "label").hint("SHUFFLE_HASH"), "user")
+            scatter_join(e, state.select("user", "label"), "user", n_users)
             .groupBy("item")
             .agg(F.sum(F.col("label") * F.col("w")).alias("ilabel"))
         )
         # i2u: echo-cancelled average of other users' labels
         tmp = (
-            e.join(item_lab.hint("SHUFFLE_HASH"), "item")
+            scatter_join(e, item_lab, "item", n_items)
             .groupBy("user")
             .agg(F.sum(F.col("ilabel") * F.col("w")).alias("tmp"))
         )
         new_state = (
-            state.join(tmp.hint("SHUFFLE_HASH"), "user", "left")
+            state_join(state, tmp, "user")
             .select(
                 "user",
                 F.when(

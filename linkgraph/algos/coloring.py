@@ -37,9 +37,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from linkgraph.algos.triangles import _oriented
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
-from linkgraph.joins import state_join
+from linkgraph.joins import scatter_join, state_join
 
 
 def greedy_color(
@@ -58,20 +59,15 @@ def greedy_color(
     eng = engine or SuperstepEngine(spark)
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    sym = g.simple_undirected()
     n_edges = g.view_size(symmetric=True)
+    n = g.num_vertices()
 
     # orient each undirected pair higher-priority -> lower-priority
-    # once; every round's messages flow down this DAG only
-    dv = g.degrees(symmetric=True).withColumnRenamed("degree", "deg")
+    # once (triangles' (deg, id) orientation, reversed); every round's
+    # messages flow down this DAG only
+    low_to_high, _, verts = _oriented(g)
     oriented = (
-        sym.join(dv.select(F.col("id").alias("src"), F.col("deg").alias("ds")), "src")
-        .join(dv.select(F.col("id").alias("dst"), F.col("deg").alias("dd")), "dst")
-        .where(
-            (F.col("ds") > F.col("dd"))
-            | ((F.col("ds") == F.col("dd")) & (F.col("src") > F.col("dst")))
-        )
-        .select("src", "dst")
+        low_to_high.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         .repartition(P, "src")
         .persist()
     )
@@ -79,22 +75,21 @@ def greedy_color(
 
     # init: mex of the empty set — vertices with no higher-priority
     # neighbor are already final at color 0
-    init = g.deduced_vertices().select(
+    init = verts.select(
         "id", F.lit(0).cast("long").alias("color"), F.lit(True).alias("_chg")
     )
 
     def step(state: DataFrame, round_: int):
+        # frontier and affected hold each id once: the inner scatters
+        # keep the edge rows a semi-join would
         frontier = state.where(F.col("_chg")).select(F.col("id").alias("src"))
-        affected = (
-            oriented.join(frontier, "src", "left_semi")
-            .select("dst")
-            .distinct()
-        )
+        affected = scatter_join(oriented, frontier, "src", n).select("dst").distinct()
         used = (
-            oriented.join(affected.hint("SHUFFLE_HASH"), "dst", "left_semi")
-            .join(
-                state.select(F.col("id").alias("src"), "color").hint("SHUFFLE_HASH"),
+            scatter_join(
+                scatter_join(oriented, affected, "dst", n),
+                state.select(F.col("id").alias("src"), "color"),
                 "src",
+                n,
             )
             .groupBy(F.col("dst").alias("id"))
             .agg(F.collect_set("color").alias("used"))
@@ -142,6 +137,7 @@ def fluid_community(
     sym = g.simple_undirected()
     n_edges = g.view_size(symmetric=True)
     verts = g.deduced_vertices()
+    n = g.num_vertices()
 
     seeds = verts.orderBy("id").limit(n_communities).select(
         "id", F.col("id").alias("lab")
@@ -153,26 +149,19 @@ def fluid_community(
 
     def step(state: DataFrame, round_: int):
         labeled = state.where(F.col("lab") >= 0)
-        # community sizes: ≤ n_communities rows — always broadcastable
-        cnt = F.broadcast(labeled.groupBy("lab").agg(F.count("*").alias("n")))
+        # community sizes: ≤ n_communities rows
+        cnt = labeled.groupBy("lab").agg(F.count("*").alias("n"))
         # density d[v][i] = |{u ∈ N(v) ∪ {v} : lab(u) = i}| / cnt[i] —
         # counted then divided ONCE, so the value is bit-identical
         # regardless of aggregation order (a float Σ(1/cnt) would not
         # be, and the argmax below compares raw doubles)
-        nbr = (
-            sym.join(
-                labeled.select(F.col("id").alias("src"), "lab").hint("SHUFFLE_HASH"),
-                "src",
-            )
-            .select(F.col("dst").alias("id"), "lab")
-        )
+        nbr = scatter_join(
+            sym, labeled.select(F.col("id").alias("src"), "lab"), "src", n
+        ).select(F.col("dst").alias("id"), "lab")
         contrib = nbr.unionByName(labeled.select("id", "lab"))
-        d = (
-            contrib.groupBy("id", "lab")
-            .agg(F.count("*").alias("c"))
-            .join(cnt, "lab")
-            .select("id", "lab", (F.col("c") / F.col("n")).alias("d"))
-        )
+        d = scatter_join(
+            contrib.groupBy("id", "lab").agg(F.count("*").alias("c")), cnt, "lab", n_communities
+        ).select("id", "lab", (F.col("c") / F.col("n")).alias("d"))
         # argmax with smallest-lab tie-break, plus the vertex's own
         # current density for the strict-improvement test
         best = d.groupBy("id").agg(

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from linkgraph.algos.ordering import _degree_waves
 from linkgraph.engine import Observed, SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
+from linkgraph.joins import scatter_join, state_join
 
 
 def kcore(
@@ -72,8 +73,9 @@ def kshell(
     # H-index values are monotone non-increasing and h(v) can only move
     # when some neighbor's h moved, so late rounds (the long tail of the
     # 30-40 round fixpoint) need to recompute only vertices with a
-    # changed neighbor. Dense/sparse switch mirrors wcc's V/50 rule; the
-    # previous round's changed count reaches the step via the Observed
+    # changed neighbor. The sparse form pays two extra joins to find
+    # them, so it runs only once fewer than V/50 vertices changed in the
+    # previous round; that count reaches the step via the Observed
     # finalize closure (driver-side, no extra job).
     box: dict = {"changed": None}
 
@@ -82,17 +84,15 @@ def kshell(
         sparse = chg is not None and chg < max(1, n_verts // 50)
         prev = state.drop("_chg")
         if sparse:
+            # moved and affected hold each id once: the inner scatters
+            # keep the edge rows a semi-join would
             moved = state.where(F.col("_chg")).select(F.col("id").alias("dst"))
-            affected = (
-                edges.join(moved.hint("SHUFFLE_HASH"), "dst", "left_semi")
-                .select("src")
-                .distinct()
-            )
-            sub = edges.join(affected.hint("SHUFFLE_HASH"), "src", "left_semi")
+            affected = scatter_join(edges, moved, "dst", n_verts).select("src").distinct()
+            sub = scatter_join(edges, affected, "src", n_verts)
         else:
             sub = edges
-        nbrh = sub.join(
-            prev.select(F.col("id").alias("dst"), "h").hint("SHUFFLE_HASH"), "dst"
+        nbrh = scatter_join(
+            sub, prev.select(F.col("id").alias("dst"), "h"), "dst", n_verts
         ).select(F.col("src").alias("id"), "h")
         hist = nbrh.groupBy("id", "h").agg(F.count("*").alias("c"))
         w = (
@@ -108,7 +108,7 @@ def kshell(
         # missing hn = isolated (dense, h already 0) or unaffected
         # (sparse) — keep the old value in both cases
         new_state = (
-            prev.join(hn.hint("SHUFFLE_HASH"), "id", "left")
+            state_join(prev, hn)
             .select(
                 "id",
                 F.coalesce("hn", F.col("h")).cast("long").alias("h"),

@@ -78,11 +78,14 @@ def hits(
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("hub").alias("ra_new"))
         )
-        with_ra = state.select(
-            "id",
-            (F.col("rh") / F.lit(nh_p)).alias("prev_hub"),
-            (F.col("ra") / F.lit(na_p)).alias("prev_auth"),
-        ).hint("SHUFFLE_HASH").join(ra.hint("SHUFFLE_HASH"), "id", "left").withColumn("ra_new", F.coalesce("ra_new", F.lit(0.0)))
+        with_ra = state_join(
+            state.select(
+                "id",
+                (F.col("rh") / F.lit(nh_p)).alias("prev_hub"),
+                (F.col("ra") / F.lit(na_p)).alias("prev_auth"),
+            ),
+            ra,
+        ).withColumn("ra_new", F.coalesce("ra_new", F.lit(0.0)))
         # hub_raw[u] = Σ_{u→v} auth_raw[v] (norms factor out)
         rh = (
             scatter_join(

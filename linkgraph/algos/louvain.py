@@ -34,34 +34,27 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import Observed, SuperstepEngine, SuperstepResult
 from linkgraph.graph import Graph
-from linkgraph.joins import state_join
-
-
-# community-totals frames with at most this many rows are broadcast in
-# the local-move join; bigger ones (level 0 starts at |V| communities)
-# go through a shuffled-hash join — broadcasting a V-row frame every
-# round is a driver/executor OOM at 10⁹ vertices
-BROADCAST_COMMS_MAX = 1_000_000
+from linkgraph.joins import scatter_join, state_join
 
 
 def louvain_local_move(
     edges: DataFrame,
     nodes: DataFrame,
     m2: float,
+    n_nodes: int,
     max_round: int = 10,
     engine: SuperstepEngine | None = None,
-    n_nodes: int | None = None,
 ) -> SuperstepResult:
     """One phase-1 pass over a (possibly coarsened) graph.
 
     edges: symmetric (src, dst, w); nodes: (id, k, internal) with
-    k = weighted degree + internal. Returns state (id, c, k, internal).
-    ``n_nodes`` (an upper bound on the community count) picks the
-    community-totals join strategy; None = assume big, never broadcast.
+    k = weighted degree + internal; n_nodes: the row count of nodes,
+    which also bounds the community count, so it is the V bound of the
+    label scatter and of the community-totals join (joins.scatter_join).
+    Returns state (id, c, k, internal).
     """
     spark = edges.sparkSession
     eng = engine or SuperstepEngine(spark)
-    bcast_sig = n_nodes is not None and n_nodes <= BROADCAST_COMMS_MAX
 
     init = nodes.select("id", F.col("id").alias("c"), "k", "internal")
     # a round with zero moves is NOT a fixpoint by itself: the parity
@@ -76,15 +69,14 @@ def louvain_local_move(
         # summed over the edges into i, so the scatter keys on src
         labels = state.select(F.col("id").alias("src"), F.col("c").alias("nc"))
         wic = (
-            edges.join(labels.hint("SHUFFLE_HASH"), "src")
+            scatter_join(edges, labels, "src", n_nodes)
             .groupBy(F.col("dst").alias("id"), "nc")
             .agg(F.sum("w").alias("wi"))
         )
         cur = state.select("id", F.col("c").alias("cur"), "k", "internal")
-        sig_nc = sig.withColumnRenamed("c", "nc")
         cand = (
-            wic.join(cur.hint("SHUFFLE_HASH"), "id")
-            .join(F.broadcast(sig_nc) if bcast_sig else sig_nc.hint("SHUFFLE_HASH"), "nc")
+            scatter_join(state_join(wic, cur, how="inner"),
+                         sig.withColumnRenamed("c", "nc"), "nc", n_nodes)
             .select(
                 "id",
                 "nc",
@@ -153,6 +145,25 @@ def louvain_local_move(
     return res
 
 
+def _level0(g: Graph) -> tuple[DataFrame, DataFrame, float]:
+    """Level 0 of the cut ``g`` as (edges, nodes, m2): the stored
+    weighted undirected view (both directions of every edge — an
+    undirected graph stores both —, parallel edges summed, self-loops
+    dropped: they become internal weight separately), the persisted
+    node frame (id, k, internal = 0) with k the weighted degree (the
+    caller unpersists it), and m2 = Σ k (= 2m)."""
+    edges = g.edge_view(symmetric=g.directed, reduce="sum")
+    deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
+    nodes = (
+        g.deduced_vertices()
+        .join(deg, "id", "left")
+        .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
+        .persist()
+    )
+    m2 = nodes.agg(F.sum("k")).collect()[0][0] or 1.0
+    return edges, nodes, m2
+
+
 def louvain_phase1(
     graph: Graph,
     max_round: int = 10,
@@ -162,19 +173,10 @@ def louvain_phase1(
     weighted undirected view. Returns state (id, community) — the
     deterministic, oracle-checkable core of the full algorithm."""
     g = graph.materialized()
-    # both directions of every edge (an undirected graph stores both),
-    # parallel edges summed, self-loops dropped (they become internal
-    # weight separately)
-    edges = g.edge_view(symmetric=g.directed, reduce="sum")
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-    nodes = (
-        g.deduced_vertices()
-        .join(deg, "id", "left")
-        .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
-    )
-    m2 = nodes.agg(F.sum("k")).collect()[0][0] or 1.0
-    res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
-                             n_nodes=g.num_vertices())
+    edges, nodes, m2 = _level0(g)
+    res = louvain_local_move(edges, nodes, m2, g.num_vertices(), max_round=max_round,
+                             engine=engine)
+    nodes.unpersist()
     res.state = res.state.select("id", F.col("c").alias("community"))
     return res
 
@@ -197,24 +199,16 @@ def louvain(
     spark = g.edges.sparkSession
     P = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
-    # level 0 reads the graph's stored view (see louvain_phase1);
-    # coarser levels own theirs
-    view = edges = g.edge_view(symmetric=g.directed, reduce="sum")
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-    nodes = (
-        g.deduced_vertices()
-        .join(deg, "id", "left")
-        .select("id", F.coalesce("k", F.lit(0.0)).alias("k"), F.lit(0.0).alias("internal"))
-        .persist()
-    )
-    m2 = nodes.agg(F.sum("k")).collect()[0][0] or 1.0  # Σ degrees (= 2m at level 0)
+    # level 0 reads the graph's stored view; coarser levels own theirs
+    view, nodes, m2 = _level0(g)
+    edges = view
 
     mapping = None  # original id -> current supernode id
     total_rounds = 0
     n_nodes = g.num_vertices()
     for level in range(max_levels):
-        res = louvain_local_move(edges, nodes, m2, max_round=max_round, engine=engine,
-                                 n_nodes=n_nodes)
+        res = louvain_local_move(edges, nodes, m2, n_nodes, max_round=max_round,
+                                 engine=engine)
         total_rounds += res.rounds
         labels = res.state.select("id", "c").persist()
         n_comms = labels.select("c").distinct().count()
@@ -287,13 +281,11 @@ def louvain(
 def modularity(graph: Graph, labels: DataFrame) -> float:
     """Q = Σ_c [ Σ_in(c)/m2 − (Σ_tot(c)/m2)² ] over the weighted
     undirected view; labels = (id, community)."""
-    edges = graph.edge_view(symmetric=graph.directed, reduce="sum")
+    edges, nodes, m2 = _level0(graph.materialized())
     lab = labels.select(F.col(labels.columns[0]).alias("id"),
                         F.col(labels.columns[1]).alias("c"))
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("k"))
-    m2 = deg.agg(F.sum("k")).collect()[0][0] or 1.0
     tot = (
-        lab.join(deg, "id", "left")
+        lab.join(nodes, "id", "left")
         .groupBy("c")
         .agg(F.sum(F.coalesce("k", F.lit(0.0))).alias("tot"))
     )
@@ -314,4 +306,5 @@ def modularity(graph: Graph, labels: DataFrame) -> float:
         )
         .collect()[0]
     )
+    nodes.unpersist()
     return float(row["q"] or 0.0)

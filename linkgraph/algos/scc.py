@@ -26,11 +26,10 @@ analytical_engine/apps/flash/connectivity/scc.h:28-84:
 
 Scale design: both inner fixpoints are delta-frontier superstep jobs
 over an edge frame hash-partitioned by the scatter key and filtered
-to the active set once per outer round (semi-joins, executed a single
-time, then persisted). State frames are V-row and only ever join
-shuffled-hash against that partitioning; assigned components leave
-the active frame, so later outer rounds touch strictly shrinking
-frames. Outer-round count is bounded by the depth of the condensation
+to the active set once per outer round (executed a single time, then
+persisted). Every join goes through linkgraph/joins.py, bounded by the
+outer round's active count; assigned components leave the active
+frame, so later outer rounds touch strictly shrinking frames. Outer-round count is bounded by the depth of the condensation
 DAG (each round resolves >=1 SCC per remaining colour class).
 """
 
@@ -40,7 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from linkgraph.engine import SuperstepEngine, SuperstepResult, observed_count
 from linkgraph.graph import Graph
-from linkgraph.joins import state_join
+from linkgraph.joins import scatter_join, state_join
 
 
 def scc(
@@ -69,19 +68,18 @@ def scc(
         n_active = active.count()
         if n_active == 0:
             break
-        # restrict both edge directions to the active induced subgraph
-        # (one pass of semi-joins per outer round, then cached)
+        # restrict the edges to the active induced subgraph (active
+        # holds each id once, so the inner scatters keep the rows a
+        # semi-join would; one pass per outer round, then cached)
         ef = (
-            fwd.join(active.withColumnRenamed("id", "src").hint("SHUFFLE_HASH"),
-                     "src", "left_semi")
-            .join(active.withColumnRenamed("id", "dst").hint("SHUFFLE_HASH"),
-                  "dst", "left_semi")
+            scatter_join(
+                scatter_join(fwd, active.withColumnRenamed("id", "src"), "src", n_active),
+                active.withColumnRenamed("id", "dst"), "dst", n_active)
+            .select("src", "dst")
             .repartition(P, "src")
             .persist()
         )
-        er = ef.select(F.col("dst").alias("src"), F.col("src").alias("dst")) \
-               .repartition(P, "src").persist()
-        ef.count(), er.count()
+        ef.count()
 
         # ---- 1. forward min-label fixpoint (scc.h check1/update1) --
         finit = active.select("id", F.col("id").alias("fid"),
@@ -91,7 +89,7 @@ def scc(
             frontier = state.where(F.col("changed")).select(
                 F.col("id").alias("src"), F.col("fid").alias("m"))
             cand = (
-                ef.join(frontier.hint("SHUFFLE_HASH"), "src")
+                scatter_join(ef, frontier, "src", n_active)
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.min("m").alias("cand"))
             )
@@ -114,36 +112,36 @@ def scc(
             (F.col("fid") == F.col("id")).alias("changed"),
         )
 
-        # Colour-respecting reverse edges: any v->pivot path inside an
-        # SCC stays inside the SCC, so every hop of a valid backward
+        # Colour-respecting edges: any v->pivot path inside an SCC
+        # stays inside the SCC, so every hop of a valid backward
         # message has equal fid at both endpoints. Filtering the edge
         # frame once per outer round (two V-row joins) means every
         # message that arrives is own-colour, so min-aggregation can
         # never discard an own-colour label in favour of a foreign one
-        # (scc.h's per-edge check2: d.fid == s.scc).
+        # (scc.h's per-edge check2: d.fid == s.scc). Kept in forward
+        # orientation and hashed on dst, the backward scatter's key.
         fid_f = fres.state.select("id", "fid")
-        er_c = (
-            er.join(fid_f.select(F.col("id").alias("src"),
-                                 F.col("fid").alias("_fs")).hint("SHUFFLE_HASH"),
-                    "src")
-            .join(fid_f.select(F.col("id").alias("dst"),
-                               F.col("fid").alias("_fd")).hint("SHUFFLE_HASH"),
-                  "dst")
+        ef_c = (
+            scatter_join(
+                scatter_join(ef, fid_f.select(F.col("id").alias("src"), F.col("fid").alias("_fs")),
+                             "src", n_active),
+                fid_f.select(F.col("id").alias("dst"), F.col("fid").alias("_fd")),
+                "dst", n_active)
             .where(F.col("_fs") == F.col("_fd"))
             .select("src", "dst")
-            .repartition(P, "src")
+            .repartition(P, "dst")
             .persist()
         )
-        er_c.count()
+        ef_c.count()
 
         def bwd_step(state: DataFrame, round_: int):
             frontier = state.where(F.col("changed")).select(
-                F.col("id").alias("src"), F.col("scc").alias("m"))
-            # reverse edges: successors (in forward orientation) push
-            # their scc label to predecessors with matching colour
+                F.col("id").alias("dst"), F.col("scc").alias("m"))
+            # backward: successors push their scc label along the
+            # reversed edge to predecessors with matching colour
             cand = (
-                er_c.join(frontier.hint("SHUFFLE_HASH"), "src")
-                .groupBy(F.col("dst").alias("id"))
+                scatter_join(ef_c, frontier, "dst", n_active)
+                .groupBy(F.col("src").alias("id"))
                 .agg(F.min("m").alias("cand"))
             )
             new_state = state_join(state, cand).select(
@@ -168,8 +166,7 @@ def scc(
         remaining = bres.state.where(F.col("scc").isNull()).select("id") \
                               .localCheckpoint(eager=True)
         ef.unpersist()
-        er.unpersist()
-        er_c.unpersist()
+        ef_c.unpersist()
         active = remaining
 
     converged = active.isEmpty()

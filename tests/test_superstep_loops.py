@@ -8,6 +8,8 @@ and join hints out of the step functions the engine runs."""
 from __future__ import annotations
 
 import ast
+import functools
+import importlib
 import json
 import pathlib
 import random
@@ -15,12 +17,19 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from linkgraph import joins
 from linkgraph.algos import matching
+from linkgraph.algos.bipartite import lpa_u2i
+from linkgraph.algos.coloring import fluid_community, greedy_color
+from linkgraph.algos.cores import kshell
+from linkgraph.algos.hits import hits
+from linkgraph.algos.louvain import louvain
 from linkgraph.algos.matching import (
     maximal_matching, min_dominating_set, min_vertex_cover, mis,
 )
 from linkgraph.algos.msf import msf
 from linkgraph.algos.ordering import degeneracy_ordering, onion_layers
+from linkgraph.algos.scc import scc
 from linkgraph.engine import SuperstepEngine
 from linkgraph.graph import Graph
 
@@ -192,21 +201,6 @@ def test_step_functions_run_no_spark_action():
 
 # -- tooling guard: a step function joins through linkgraph/joins.py
 
-# Functions whose step function picks a join strategy of its own (a
-# .hint(...) or F.broadcast(...)) instead of joins.scatter_join and
-# joins.state_join, with the reason. None has been ported yet.
-HINTS_ALLOWED: dict[str, str] = {
-    "bipartite.lpa_u2i": "scatters on user and item keys of its own (user, item, w) frame",
-    "coloring.greedy_color": "hinted semi-join of the affected vertices and colour scatter",
-    "coloring.fluid_community": "broadcasts its per-community counts; hinted label scatter",
-    "cores.kshell": "hinted semi-joins of the moved vertices and h-index scatter/combine",
-    "hits.hits": "hinted combine of the authority sums with the state",
-    "louvain.louvain_local_move": "hinted label scatter and combines; broadcasts the community "
-                                  "totals while they are small",
-    "scc.scc": "hinted forward and backward colour scatters",
-}
-
-
 def _is_hint(node: ast.AST) -> bool:
     return (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
             and (node.func.attr == "hint"
@@ -215,10 +209,63 @@ def _is_hint(node: ast.AST) -> bool:
 
 
 def test_step_functions_pick_no_join_strategy():
+    """No step function passed to eng.run picks a join strategy of its
+    own (a .hint(...) or F.broadcast(...)): it scatters and combines
+    through joins.scatter_join and joins.state_join."""
     hinting = _scan_steps(_is_hint)
-    offenders = {k: v for k, v in hinting.items() if k not in HINTS_ALLOWED}
-    assert not offenders, f"join hints inside step functions (function: lines): {offenders}"
-    assert set(HINTS_ALLOWED) <= set(hinting), "stale allowlist entries"
+    assert not hinting, f"join hints inside step functions (function: lines): {hinting}"
+
+
+def _lpa_u2i(g):
+    e = g.edges.select(F.col("src").alias("user"), (F.col("dst") + 1000).alias("item"), "w")
+    seeds = e.select("user").distinct().select(
+        "user", F.when(F.col("user") % 5 == 0, 1.0).when(F.col("user") % 5 == 1, 0.0)
+        .otherwise(0.5).alias("label"))
+    return lpa_u2i(e, seeds, max_round=3)
+
+
+def _scc(g):
+    """scc over g's pairs, each flipped when its id sum is odd (g
+    itself is a DAG, whose components are single vertices)."""
+    even = (F.col("src") + F.col("dst")) % 2 == 0
+    dg = Graph.from_edges(g.edges.select(
+        F.when(even, F.col("src")).otherwise(F.col("dst")).alias("src"),
+        F.when(even, F.col("dst")).otherwise(F.col("src")).alias("dst")))
+    res = scc(dg)
+    dg.release()
+    return res
+
+
+# the step functions that scatter through joins.scatter_join, each with
+# a run on `g`; the key names the module whose scatter_join is patched
+SCATTERING = {
+    "bipartite.lpa_u2i": _lpa_u2i,
+    "coloring.greedy_color": greedy_color,
+    "coloring.fluid_community": lambda g: fluid_community(g, n_communities=4, max_round=4),
+    "cores.kshell": kshell,
+    "hits.hits": hits,
+    "louvain.louvain": lambda g: louvain(g, max_round=4, max_levels=3),
+    "scc.scc": _scc,
+}
+
+
+@pytest.mark.parametrize("name", list(SCATTERING))
+def test_shuffled_hash_scatter_gives_the_same_run(g, monkeypatch, name):
+    """At test sizes every scatter broadcasts its V side; with the
+    module's scatter_join held to the shuffled-hash branch (what a graph
+    above joins.BROADCAST_THRESHOLD_ROWS vertices runs) the run gives
+    the same rows in the same number of rounds."""
+    def run():
+        res = SCATTERING[name](g)
+        rows = sorted(tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+                      for r in res.state.collect())
+        return rows, res.rounds
+
+    broadcast = run()
+    module = importlib.import_module("linkgraph.algos." + name.split(".")[0])
+    monkeypatch.setattr(module, "scatter_join",
+                        functools.partial(joins.scatter_join, broadcast_threshold=0))
+    assert run() == broadcast
 
 
 @pytest.mark.parametrize("schema", ["x long, v double", "s long, id long, v double"],
